@@ -607,7 +607,7 @@ object VectorOps {
   def readIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVF",
       "VectorOps.writeIvfIndex", Seq(s"$dir/codebook", s"$dir/postings"))
-    (s.read.parquet(s"$dir/codebook"),
+    (graft.sources.TableRead.read(s, s"$dir/codebook"),
       graft.sources.Tombstones.applyTo(s, readCellPartitioned(s, s"$dir/postings"), dir, "vec_id"))
   }
 
@@ -721,9 +721,11 @@ object VectorOps {
     * partition column and break dynamic partition pruning — the schema
     * override keeps `cell` a genuine string partition attribute, so the
     * probe equi-join both type-matches the codebook and still prunes to
-    * the probed directories. */
+    * the probed directories. The schema comes from one part file's footer
+    * on the driver (TableRead.schemaOf), so the table is read once, with
+    * no schema-inference job. */
   private def readCellPartitioned(s: SparkSession, path: String): DataFrame = {
-    val inferred = s.read.parquet(path).schema
+    val inferred = graft.sources.TableRead.schemaOf(s, path)
     val pinned = org.apache.spark.sql.types.StructType(inferred.map { f =>
       if (f.name == "cell") f.copy(dataType = org.apache.spark.sql.types.StringType) else f
     })

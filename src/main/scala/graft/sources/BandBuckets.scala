@@ -125,13 +125,16 @@ object BandBuckets {
   /** The logical view (partition column dropped) — the fallback full
     * scan, plan-compatible with a pruned read. */
   def read(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path).drop(Col)
+    TableRead.read(s, path).drop(Col)
 
   /** PRUNED read: only the rows whose (band, bucket) could match `keys`
     * (a small batch-derived frame carrying `bandCol`/`bucketCol`).
     * Executes ONE bounded job over `keys` — distinct (pband, bucket)
-    * pairs, capped at [[MaxKeyLiterals]] — then filters the scan with
-    * literal predicates: `pband IN` prunes directories, `bucket IN`
+    * pairs, capped at [[MaxKeyLiterals]] — after which the pband values
+    * are known on the driver: one listing of the table root picks their
+    * directories and one part-file footer gives the schema
+    * ([[TableRead.bucketRead]]), so the read itself adds no listing or
+    * schema-inference job. A pushed `bucket IN` literal filter then
     * skips row groups. Past the cap it re-collects just the pband
     * values (bounded by [[NumParts]] regardless of batch size) and
     * keeps directory pruning alone. The result is a SUPERSET of the
@@ -144,23 +147,17 @@ object BandBuckets {
       .select(partOf(col(bandCol), col(bucketCol)).as("pb"),
         col(bucketCol).cast("bigint").as("bk"))
       .distinct().limit(MaxKeyLiterals + 1).collect()
-    val full = s.read.parquet(path)
-    val pruned =
-      if (kp.isEmpty)
-        // empty key set (an empty or all-filtered batch): nothing can
-        // match — skip the scan job entirely (Catalyst folds the false
-        // filter to an empty LocalRelation, so no file is opened)
-        full.where(lit(false))
-      else if (kp.length <= MaxKeyLiterals) {
-        val pbs = kp.map(_.getInt(0)).distinct.toSeq
-        val bks = kp.map(_.getLong(1)).distinct.toSeq
-        full.where(col(Col).isin(pbs: _*) && col(bucketCol).isin(bks: _*))
-      } else {
-        val pbs = keys.select(partOf(col(bandCol), col(bucketCol)).as("pb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        full.where(col(Col).isin(pbs: _*))
-      }
-    pruned.drop(Col)
+    // an empty key set (an empty or all-filtered batch) matches nothing:
+    // no bucket is wanted, so the read is an empty frame and opens no file
+    if (kp.length <= MaxKeyLiterals) {
+      val pbs = kp.map(_.getInt(0)).distinct.toSeq
+      val bks = kp.map(_.getLong(1)).distinct.toSeq
+      TableRead.bucketRead(s, path, Col, pbs).where(col(bucketCol).isin(bks: _*))
+    } else {
+      val pbs = keys.select(partOf(col(bandCol), col(bucketCol)).as("pb"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      TableRead.bucketRead(s, path, Col, pbs)
+    }
   }
 
   /** Fold tombstones into a band-partitioned table, rewriting ONLY the

@@ -50,22 +50,18 @@ object IdBuckets {
 
   /** PRUNED point-lookup read: only the rows whose `idCol` is in `ids`
     * could be returned — directory pruning via the ids' hash buckets
-    * (driver-computed, no job) plus a pushed `idCol IN (...)` filter
-    * that skips row groups (files are id-range-clustered at write). The
-    * result is a SUPERSET restricted view (bucket collisions remain);
-    * callers keep their exact join/filter on the id. Over
-    * [[MaxIdLiterals]], keeps only the bucket-directory pruning. */
+    * (computed, listed and schema-resolved on the driver by
+    * [[TableRead.bucketRead]], so the read launches no job of its own)
+    * plus a pushed `idCol IN (...)` filter that skips row groups (files
+    * are id-range-clustered at write). The result is a SUPERSET
+    * restricted view (bucket collisions remain); callers keep their
+    * exact join/filter on the id. Over [[MaxIdLiterals]], keeps only the
+    * bucket-directory pruning. */
   def prunedById(s: SparkSession, path: String, idCol: String,
       ids: Seq[Long]): DataFrame = {
-    if (ids.isEmpty)
-      return s.read.parquet(path).where(lit(false)).drop(Col)
-    val bs = ids.map(bucketOfId).distinct
-    val byDir = s.read.parquet(path)
-      .where(col(Col).isin(bs.map(Integer.valueOf): _*))
-    val byId =
-      if (ids.length <= MaxIdLiterals) byDir.where(col(idCol).isin(ids: _*))
-      else byDir
-    byId.drop(Col)
+    val byDir = TableRead.bucketRead(s, path, Col, ids.map(bucketOfId).distinct)
+    if (ids.length <= MaxIdLiterals) byDir.where(col(idCol).isin(ids: _*))
+    else byDir
   }
 
   /** Write `df` under `path` partitioned by the id hash bucket.
@@ -105,7 +101,7 @@ object IdBuckets {
 
   /** The logical view of a bucketed table (partition column dropped). */
   def read(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path).drop(Col)
+    TableRead.read(s, path).drop(Col)
 
   /** Fold `dir`'s tombstones into a bucketed table, rewriting ONLY the
     * affected bucket partitions; untouched partitions' files are not

@@ -22,9 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `postings/` — (term, doc_id, tf, dl), hash-partitioned by
   *    `term_bucket = pmod(xxhash64(term), NumBuckets)` and
   *    range-clustered by (bucket, term, doc_id) within partitions, so a
-  *    query's terms resolve (driver-side, no job) to at most |terms|
-  *    bucket DIRECTORIES and the pushed `term IN (...)` filter skips
-  *    row groups inside them. One row per (term, doc) — the per-term
+  *    query's terms resolve to at most |terms| bucket DIRECTORIES and
+  *    the pushed `term IN (...)` filter skips row groups inside them.
+  *    The directories come from one driver listing of the segment root
+  *    and the schema from one part file's footer ([[TableRead]]), so
+  *    the read itself launches no listing or schema-inference job.
+  *    One row per (term, doc) — the per-term
   *    document frequency is therefore a COUNT over the pruned read,
   *    never a separate table that could drift from the postings.
   *  - `stats/` — one row (n, avgdl, sum_dl): corpus size, mean document
@@ -244,25 +247,40 @@ object TextIndex {
       // job's tail (tiny-file commit, straggler task) back-fill with
       // the next job's tasks instead of idling the scheduler.
       //
-      // Failure path (r21 ADVICE): every write runs under ONE job group
-      // unique to this call; the first failure cancels the group
-      // (killing the in-flight sibling jobs), and the exception only
-      // propagates after EVERY future has settled — so no zombie
-      // mode("overwrite") job can outlive this call and race a same-JVM
-      // retry into committing a torn segment. The caller's fence
-      // (rebuild marker / staged rename) commits only after all five
-      // writes return.
+      // Failure path (r21 ADVICE): the exception only propagates after
+      // EVERY future has settled, so no mode("overwrite") job can
+      // outlive this call and race a same-JVM retry into committing a
+      // torn segment — that await is what makes the path safe. The
+      // first failure also cancels the call's job group, killing the
+      // in-flight sibling jobs early, and raises `cancelled` so siblings
+      // still queued in the pool skip their write: a group cancel is not
+      // sticky, and a queued write would otherwise start a fresh job
+      // nothing cancelled. The caller's fence (rebuild marker / staged
+      // rename) commits only after all five writes return.
       import scala.concurrent.{Await, Future, ExecutionContext}
       import scala.concurrent.duration.Duration
       import scala.util.Try
       val s = postings.sparkSession
       val gid = s"graft-textidx-seg-${java.util.UUID.randomUUID()}"
+      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(segWritePool)
       def inGroup(desc: String)(body: => Unit): Future[Unit] = Future {
-        // job groups are thread-local: set inside the pool thread
-        s.sparkContext.setJobGroup(gid, s"TextIndex segment write: $desc",
-          interruptOnCancel = true)
-        try body finally s.sparkContext.clearJobGroup()
+        if (!cancelled.get) {
+          // job groups are thread-local: set inside the pool thread. Pool
+          // threads inherit their creator's local properties, so clear
+          // any SQL execution id too, or every later write job would be
+          // attributed to that stale execution.
+          s.sparkContext.setJobGroup(gid, s"TextIndex segment write: $desc",
+            interruptOnCancel = true)
+          s.sparkContext.setLocalProperty(
+            org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY, null)
+          try body
+          catch {
+            case e: Throwable =>
+              if (!cancelled.getAndSet(true)) s.sparkContext.cancelJobGroup(gid)
+              throw e
+          } finally s.sparkContext.clearJobGroup()
+        }
       }
       val writes = Seq(
         inGroup("postings")(
@@ -280,11 +298,7 @@ object TextIndex {
             .write.mode("overwrite").partitionBy(Col).parquet(s"$segRoot/blockmax")),
         inGroup("stats")(
           stats.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/stats")))
-      val settled = writes.map { f =>
-        val r = Try(Await.result(f, Duration.Inf))
-        if (r.isFailure) s.sparkContext.cancelJobGroup(gid)
-        r
-      }
+      val settled = writes.map(f => Try(Await.result(f, Duration.Inf)))
       settled.collectFirst { case scala.util.Failure(e) => throw e }
       ()
     }
@@ -472,7 +486,7 @@ object TextIndex {
           .groupBy("doc_id").agg(min(col("dl")).as("dl"))
           .select(col("doc_id").as("id"), col("dl"))
       case None =>
-        roots.map(r => s.read.parquet(s"$r/postings").select("doc_id", "dl"))
+        roots.map(r => TableRead.read(s, s"$r/postings").select("doc_id", "dl"))
           .reduce(_ unionByName _)
           .join(broadcast(t), col("doc_id") === col("id"), "left_semi")
           .groupBy("doc_id").agg(min(col("dl")).as("dl"))
@@ -487,7 +501,7 @@ object TextIndex {
   private def tombstoneRows(s: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(tombstonesPath(dir))
     if (!hfs(s, dir).exists(p)) None
-    else Some(s.read.parquet(tombstonesPath(dir))
+    else Some(TableRead.read(s, tombstonesPath(dir))
       .groupBy("id").agg(min(col("dl")).as("dl")))
   }
 
@@ -548,7 +562,7 @@ object TextIndex {
       if (ids.isEmpty && tombstoneRows(s, dir).isEmpty) Nil
       else {
         val posts = dropTombstoned(s, dir, segmentRoots(s, dir)
-          .map(r => requireV2Postings(s.read.parquet(s"$r/postings"), dir))
+          .map(r => requireV2Postings(TableRead.read(s, s"$r/postings"), dir))
           // flat empty-segment husks carry the bucket as a data column
           // and partitioned segments as a partition column; rebuild it
           // uniformly so the union is schema-stable either way
@@ -701,7 +715,7 @@ object TextIndex {
     * Reads segment-count + tombstone-count rows, never postings. */
   private def combinedStats(s: SparkSession, dir: String): DataFrame = {
     val live = segmentRoots(s, dir)
-      .map(r => requireV2Stats(s.read.parquet(s"$r/stats"), dir))
+      .map(r => requireV2Stats(TableRead.read(s, s"$r/stats"), dir))
       .reduce(_ unionByName _)
       .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
     val net = tombstoneRows(s, dir) match {
@@ -732,7 +746,8 @@ object TextIndex {
   }
 
   /** The pruned postings read for a literal term set ACROSS all live
-    * segments: driver-computed bucket directories + a pushed
+    * segments: the terms' bucket directories, listed and schema-resolved
+    * on the driver ([[TableRead.bucketRead]]), + a pushed
     * `term IN (...)` row-group filter per segment, tombstoned docs
     * dropped (one broadcast anti-join over the pruned rows — df counted
     * downstream therefore shrinks exactly). Exact (not a superset): the
@@ -743,20 +758,16 @@ object TextIndex {
   }
 
   private def prunedSegment(s: SparkSession, segRoot: String,
-      terms: Seq[String]): DataFrame = {
-    val base = s.read.parquet(s"$segRoot/postings")
-    if (terms.isEmpty) return base.where(lit(false)).drop(Col)
-    val bs = terms.map(bucketOfTerm).distinct
-    base.where(col(Col).isin(bs.map(Integer.valueOf): _*))
+      terms: Seq[String]): DataFrame =
+    TableRead.bucketRead(s, s"$segRoot/postings", Col,
+        terms.map(bucketOfTerm).distinct)
       .where(col("term").isin(terms: _*))
-      .drop(Col)
-  }
 
   /** The full postings union (batch fallback past [[MaxPruneTerms]]),
     * tombstoned docs dropped. */
   private def allPostings(s: SparkSession, dir: String): DataFrame =
     dropTombstoned(s, dir, segmentRoots(s, dir)
-      .map(r => s.read.parquet(s"$r/postings").drop(Col))
+      .map(r => TableRead.read(s, s"$r/postings").drop(Col))
       .reduce(_ unionByName _))
 
   /** BM25 (k1 = 1.2, b = 0.75) top-k over the index — identical math,
@@ -850,12 +861,10 @@ object TextIndex {
     if (tombstoneRows(s, dir).isDefined) return None
     val dterms = terms.distinct
     val bs = dterms.map(bucketOfTerm).distinct
-    val bmRows = roots.map { r =>
-        s.read.parquet(s"$r/blockmax")
-          .where(col(Col).isin(bs.map(Integer.valueOf): _*))
-          .where(col("term").isin(dterms: _*))
-          .drop(Col)
-      }.reduce(_ unionByName _)
+    val bmRows = roots
+      .map(r => TableRead.bucketRead(s, s"$r/blockmax", Col, bs)
+        .where(col("term").isin(dterms: _*)))
+      .reduce(_ unionByName _)
       // a doc-range block can span segments: bounds merge by max/min,
       // counts add (segments are doc-disjoint)
       .groupBy("term", "block_id")
@@ -975,7 +984,7 @@ object TextIndex {
           "prefix search")
     }
     val expanded = roots
-      .map(r => s.read.parquet(s"$r/terms"))
+      .map(r => TableRead.read(s, s"$r/terms"))
       .reduce(_ unionByName _)
       .where(col("term").startsWith(prefix))
       .distinct().limit(max + 1)
@@ -1011,7 +1020,7 @@ object TextIndex {
           "fuzzy search")
     }
     val expanded = roots
-      .map(r => s.read.parquet(s"$r/terms"))
+      .map(r => TableRead.read(s, s"$r/terms"))
       .reduce(_ unionByName _)
       .where(levenshtein(col("term"), lit(term)) <= maxDist)
       .distinct().limit(max + 1)

@@ -49,7 +49,7 @@ object Tombstones {
   }
 
   def read(s: SparkSession, dir: String): Option[DataFrame] =
-    if (exists(s, dir)) Some(s.read.parquet(path(dir)).select("id").distinct())
+    if (exists(s, dir)) Some(TableRead.read(s, path(dir)).select("id").distinct())
     else None
 
   /** The delete-aware view of an index table: anti-join `idCol` against

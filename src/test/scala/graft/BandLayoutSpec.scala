@@ -75,17 +75,24 @@ class BandLayoutSpec extends AnyFunSuite {
     // the literal-IN pruning machinery, asserted on the scan it drives:
     // the candidate tier is materialized behind a barrier since r16 (the
     // per-trigger-constant fix), so the probe's FINAL plan shows the
-    // barrier (ExistingRDD), and the partition-filter shape is pinned on
-    // prunedRead directly
+    // barrier (ExistingRDD), and the directory pruning is pinned on
+    // prunedRead directly: it reads only the keys' pband directories
     import spark.implicits._
-    val prPlan = graft.sources.BandBuckets.prunedRead(spark, s"$dir/pbands",
-        Seq((0, 0L), (1, 7L), (2, 13L), (3, 29L)).toDF("band", "bucket"))
-      .queryExecution.executedPlan.toString
-    assert(prPlan.contains(graft.sources.BandBuckets.Col + "#"),
+    import graft.sources.BandBuckets
+    val keys = Seq((0, 0L), (1, 7L), (2, 13L), (3, 29L))
+    val pr = BandBuckets.prunedRead(spark, s"$dir/pbands", keys.toDF("band", "bucket"))
+    val prPlan = pr.queryExecution.executedPlan.toString
+    assert(prPlan.contains(s"pbands/${BandBuckets.Col}="),
       s"prunedRead plan does not read the pbands table:\n$prPlan")
-    assert(("PartitionFilters: \\[[^\\]]*" + graft.sources.BandBuckets.Col +
-      "[^\\]]*(IN|in\\()").r.findFirstIn(prPlan).isDefined,
-      s"prunedRead plan carries no pband IN partition filter:\n$prPlan")
+    assert(prPlan.contains("PushedFilters: [In(bucket"),
+      s"prunedRead plan pushes no bucket IN filter:\n$prPlan")
+    val wanted = keys.map { case (b, k) =>
+      spark.range(1).select(BandBuckets.partOf(lit(b), lit(k))).head().getInt(0)
+    }.toSet
+    val readParts = pr.inputFiles.map(f =>
+      s"${BandBuckets.Col}=(\\d+)".r.findFirstMatchIn(f).get.group(1).toInt).toSet
+    assert(readParts.nonEmpty && readParts.subsetOf(wanted),
+      s"prunedRead read pband directories $readParts, wanted only $wanted")
     // pruned path active: the probe's plan carries the candidate barrier
     // and never scans the grouped cbuckets table
     val plan = pruned.queryExecution.executedPlan.toString
@@ -476,7 +483,7 @@ class BandLayoutSpec extends AnyFunSuite {
     val ihealed = ImageCodec.dedupImagesAgainstIndex(spark, iprobe, idir)
     assert(ihealed.select("corpus_id").collect().map(_.getLong(0)).toSet === Set(900L))
     assert(ihealed.queryExecution.executedPlan.toString
-      .contains(graft.sources.BandBuckets.Col + "#"))
+      .contains(s"pbands/${graft.sources.BandBuckets.Col}="))
     rmDir(java.nio.file.Paths.get(idir))
     // audio (same engine, own fixture — keeps the family law explicit)
     val adir = java.nio.file.Files.createTempDirectory("fence_aud").toString
@@ -525,7 +532,7 @@ class BandLayoutSpec extends AnyFunSuite {
     val healed = VideoCodec.dedupVideosAgainstIndex(spark, probe, dir)
     assert(healed.select("corpus_id").collect().map(_.getLong(0)).toSet === Set(800L))
     assert(healed.queryExecution.executedPlan.toString
-      .contains(graft.sources.BandBuckets.Col + "#"))
+      .contains(s"pbands/${graft.sources.BandBuckets.Col}="))
     rmDir(java.nio.file.Paths.get(dir))
   }
 

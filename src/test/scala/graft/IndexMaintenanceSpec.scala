@@ -774,4 +774,82 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     GenStamp.beginRebuild(spark, rdir)
     intercept[IllegalArgumentException] { VectorOps.readIvfPqIndex(spark, rdir) }
   }
+
+  test("IVF read: footer schema == inferred schema; a search launches no listing or schema-inference job") {
+    import graft.operators.VectorOps
+    import graft.sources.TableRead
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val e = clusteredCorpus()
+    val dir = java.nio.file.Files.createTempDirectory("ivf_nojobs").toString
+    VectorOps.writeIvfIndex(e, cells = 8, dir = dir)
+    VectorOps.deleteFromIvfIndex(spark, Seq(8L, 16L).toDF("vec_id"), dir)
+    for (t <- Seq("codebook", "postings", "tombstones")) {
+      val p = s"$dir/$t"
+      assert(TableRead.schemaOf(spark, p) === spark.read.parquet(p).schema, p)
+    }
+    val sc = spark.sparkContext
+    val (hits, jobs) = ReadJobs.during(sc) {
+      val (cb, postings) = VectorOps.readIvfIndex(spark, dir)
+      VectorOps.ivfSearch(cb, postings, queryId = 0, nprobe = 2, k = 10).collect()
+    }
+    assert(hits.length === 10)
+    assert(!hits.map(_.getLong(0)).exists(Set(8L, 16L)))
+    assert(jobs.isEmpty, s"metadata jobs launched by the IVF search:\n${jobs.mkString("\n")}")
+  }
+
+  test("prunedById and prunedRead == the partition-filtered full reads they replace") {
+    import graft.sources.{BandBuckets, IdBuckets, TextIndex}
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val base = java.nio.file.Files.createTempDirectory("pruned_eq").toString
+    // 40 ids cover well under all 64 id buckets: absent directories are real
+    val ids = s"$base/ids"
+    IdBuckets.write((0L until 40L).map(i => (i, s"p$i")).toDF("id", "payload"),
+      "id", ids, "overwrite")
+    def oldById(path: String, want: Seq[Long]): org.apache.spark.sql.DataFrame =
+      spark.read.parquet(path)
+        .where(col(IdBuckets.Col).isin(want.map(IdBuckets.bucketOfId).distinct: _*))
+        .where(col("id").isin(want: _*)).drop(IdBuckets.Col)
+    val populated = (0L until 40L).map(IdBuckets.bucketOfId).toSet
+    val absent = (1000L until 2000L).filterNot(i => populated(IdBuckets.bucketOfId(i))).take(2)
+    assert(absent.nonEmpty, "fixture: every bucket is populated")
+    for (want <- Seq(Seq(3L, 7L, 39L), Seq(3L) ++ absent, absent, Nil)) {
+      val got = IdBuckets.prunedById(spark, ids, "id", want)
+      val old = oldById(ids, want)
+      assert(got.schema === old.schema, s"ids $want: schema")
+      assert(rows(got) === rows(old), s"ids $want: rows")
+    }
+    // the flat doclens husk of an empty text segment
+    val husk = s"$base/textidx"
+    TextIndex.build(spark, husk, Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    val doclens = s"$husk/doclens"
+    val hold = spark.read.parquet(doclens)
+      .where(col(IdBuckets.Col).isin(IdBuckets.bucketOfId(1L))).where(col("doc_id").isin(1L))
+      .drop(IdBuckets.Col)
+    val hgot = IdBuckets.prunedById(spark, doclens, "doc_id", Seq(1L))
+    assert(hgot.schema === hold.schema)
+    assert(hgot.count() === 0)
+
+    val bands = s"$base/pbands"
+    BandBuckets.write((0L until 60L).flatMap(i => (0 until 4).map(b => (i, b, i % 7 + b)))
+      .toDF("id", "band", "bucket"), bands, "overwrite")
+    def oldPruned(keys: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val kp = keys.select(BandBuckets.partOf(col("band"), col("bucket")).as("pb"),
+        col("bucket").cast("bigint").as("bk")).distinct().collect()
+      val full = spark.read.parquet(bands)
+      (if (kp.isEmpty) full.where(lit(false))
+       else full.where(col(BandBuckets.Col).isin(kp.map(_.getInt(0)).distinct.toSeq: _*) &&
+         col("bucket").isin(kp.map(_.getLong(1)).distinct.toSeq: _*)))
+        .drop(BandBuckets.Col)
+    }
+    for (keys <- Seq(Seq((0, 3L), (2, 5L)), Seq((1, 999L)), Seq((0, 3L), (3, 12345L)),
+        Seq.empty[(Int, Long)]).map(_.toDF("band", "bucket"))) {
+      val got = BandBuckets.prunedRead(spark, bands, keys)
+      val old = oldPruned(keys)
+      assert(got.schema === old.schema, s"keys ${keys.collect().toSeq}: schema")
+      assert(rows(got) === rows(old), s"keys ${keys.collect().toSeq}: rows")
+    }
+  }
 }

@@ -708,8 +708,9 @@ object ScaleSmoke {
           val stats = (1 to reps).map { _ =>
             val (j0, t0, m0) = (jobs.get, tasks.get, taskMs.get)
             val (_, sec) = timed(q(s, src).count())
-            // listener events drain asynchronously; settle before reading
-            Thread.sleep(300)
+            // listener events arrive asynchronously: drain the bus so
+            // this rep's jobs and tasks are all counted before reading
+            org.apache.spark.ListenerBusDrain(s.sparkContext)
             (sec, jobs.get - j0, tasks.get - t0, (taskMs.get - m0) / 1e3)
           }
           val ts = stats.map(_._1)

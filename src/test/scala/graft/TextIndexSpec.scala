@@ -874,6 +874,22 @@ class TextIndexSpec extends AnyFunSuite {
       TextIndex.searchBm25(spark, dir, Seq("spark"), 5).collect())
     assert(e.getMessage.contains("pre-r18"))
     assert(e.getMessage.contains("TextIndex.build"))
+    // and postings without positions: the phrase tier's guard speaks
+    // from the footer schema, before any postings row is read
+    val pdir = freshDir("prer18postings")
+    TextIndex.build(spark, pdir, docs.limit(50))
+    val postsP = TextIndex.postingsPath(pdir)
+    val pgen = GenStamp.read(spark, postsP)
+    val v1 = s"${postsP}_v1"
+    spark.read.parquet(postsP).drop("positions")
+      .write.partitionBy(TextIndex.Col).parquet(v1)
+    fs.delete(new org.apache.hadoop.fs.Path(postsP), true)
+    fs.rename(new org.apache.hadoop.fs.Path(v1), new org.apache.hadoop.fs.Path(postsP))
+    GenStamp.stamp(spark, postsP, pgen)
+    val pe = intercept[IllegalArgumentException](
+      TextIndex.searchPhrase(spark, pdir, Seq("spark"), 5).collect())
+    assert(pe.getMessage.contains("pre-r18"))
+    assert(pe.getMessage.contains("positions"))
   }
 
   test("ingest auto-compaction: segment count bounded by the knob, search bit-equal, crash heals in-loop") {
@@ -1010,5 +1026,88 @@ class TextIndexSpec extends AnyFunSuite {
     assert(graft.operators.TextOps.oracle.contains("q_text_search_indexed"))
     // schema contract with the oracle: (doc_id, score, matched)
     assert(out.columns.toSeq === Seq("doc_id", "score", "matched"))
+  }
+
+  /** The partition-filtered full read that TableRead.bucketRead replaces. */
+  private def fullReadFiltered(table: String, partCol: String, bs: Seq[Int]): DataFrame =
+    spark.read.parquet(table).where(col(partCol).isin(bs: _*)).drop(partCol)
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema === want.schema, s"$what: schema")
+    assert(got.collect().map(_.toString).sorted.toSeq ===
+      want.collect().map(_.toString).sorted.toSeq, s"$what: rows")
+  }
+
+  test("bucketRead == the partition-filtered full read: partitioned, flat husk, missing bucket, empty list") {
+    import graft.sources.TableRead
+    import spark.implicits._
+    val dir = freshDir("bucketread")
+    TextIndex.build(spark, dir, docs)
+    val posts = TextIndex.postingsPath(dir)
+    val qb = Seq("query", "join", "table").map(TextIndex.bucketOfTerm).distinct
+    for (bs <- Seq(qb, qb.take(1), Nil))
+      assertSameRows(TableRead.bucketRead(spark, posts, TextIndex.Col, bs),
+        fullReadFiltered(posts, TextIndex.Col, bs), s"postings buckets $bs")
+    // a layout whose wanted buckets are partly or wholly absent on disk
+    val sparse = freshDir("sparse")
+    Seq((1L, "a", 3), (2L, "b", 5), (3L, "c", 5)).toDF("id", "v", "b")
+      .write.partitionBy("b").parquet(sparse)
+    for (bs <- Seq(Seq(5), Seq(3, 5, 9), Seq(9), Nil))
+      assertSameRows(TableRead.bucketRead(spark, sparse, "b", bs),
+        fullReadFiltered(sparse, "b", bs), s"sparse buckets $bs")
+    // the empty-corpus segment is a FLAT husk: bucket is a data column
+    val husk = freshDir("flathusk")
+    TextIndex.build(spark, husk, docs.where(lit(false)))
+    for (t <- Seq("postings", "blockmax"); bs <- Seq(qb, Nil))
+      assertSameRows(TableRead.bucketRead(spark, s"$husk/$t", TextIndex.Col, bs),
+        fullReadFiltered(s"$husk/$t", TextIndex.Col, bs), s"flat husk $t buckets $bs")
+  }
+
+  test("schemaOf == the inferred schema of every index table, partitioned and flat") {
+    import graft.sources.TableRead
+    import spark.implicits._
+    val dir = freshDir("schemaof")
+    TextIndex.build(spark, dir, docs)
+    TextIndex.deleteFrom(spark, dir, Seq(1L, 2L).toDF("id"))
+    val husk = freshDir("schemaofhusk")
+    TextIndex.build(spark, husk, docs.where(lit(false)))
+    for (root <- Seq(dir, husk);
+         t <- Seq("postings", "blockmax", "stats", "doclens", "terms", "tombstones")
+         if Files.exists(Paths.get(root, t))) {
+      val p = s"$root/$t"
+      assert(TableRead.schemaOf(spark, p) === spark.read.parquet(p).schema, p)
+    }
+    // a leaf bucket directory holds no partition column
+    val leaf = s"${TextIndex.postingsPath(dir)}/${TextIndex.Col}=${TextIndex.bucketOfTerm("query")}"
+    assert(TableRead.schemaOf(spark, leaf) === spark.read.parquet(leaf).schema)
+    val e = intercept[IllegalArgumentException](
+      TableRead.schemaOf(spark, Files.createTempDirectory("textidx_nodata").toString))
+    assert(e.getMessage.contains("no data file"))
+  }
+
+  test("searches over a 3-delta index launch no listing and no schema-inference job") {
+    val dir = freshDir("nojobs")
+    TextIndex.build(spark, dir, docs.where(col("doc_id") % 4 === 0))
+    for (r <- 1 to 3) TextIndex.append(spark, dir, docs.where(col("doc_id") % 4 === r))
+    assert(TextIndex.status(spark, dir).deltaSegments === 3)
+    val sc = spark.sparkContext
+    val ((bm25, phrase), jobs) = ReadJobs.during(sc) {
+      (TextIndex.searchBm25(spark, dir, Seq("query", "join", "table"), 10).collect(),
+        TextIndex.searchPhrase(spark, dir, Seq("query", "join"), 10).collect())
+    }
+    assert(bm25.length === 10)
+    assert(jobs.isEmpty, s"metadata jobs launched by the searches:\n${jobs.mkString("\n")}")
+    // the probe sees these jobs when they happen: a bare read of one
+    // segment's postings infers its schema with a job
+    val (_, control) = ReadJobs.during(sc)(
+      spark.read.parquet(TextIndex.postingsPath(dir)).schema)
+    assert(control.nonEmpty, "ReadJobs saw no job for an inferring read")
+    // and the pruned searches still answer as the one-shot build
+    val oneshot = freshDir("nojobs_oneshot")
+    TextIndex.build(spark, oneshot, docs)
+    assert(bm25.toSeq ===
+      TextIndex.searchBm25(spark, oneshot, Seq("query", "join", "table"), 10).collect().toSeq)
+    assert(phrase.toSeq ===
+      TextIndex.searchPhrase(spark, oneshot, Seq("query", "join"), 10).collect().toSeq)
   }
 }
