@@ -2,77 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer for graft's native functions — the
   * production injection path: a deployment sets
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) and every session on the
-  * cluster has `graft_dot`, `graft_simhash`, `graft_nfc`, `graft_topk`,
-  * and `shingles` from birth,
+  * cluster has every [[GraftFunctions.entries]] function from birth,
   * catalog-visible with usage strings — no per-query
   * `GraftFunctions.register` call to forget. The per-query register
-  * remains for ad-hoc sessions; both bind the same Expression classes.
+  * remains for ad-hoc sessions; both read the same entry list, so they
+  * bind the same names to the same Expression builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, "", name, usage, "",
-      "", "", "", "", "", "built-in")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two numeric arrays, accumulated in double"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(tokens) - 32-bit SimHash signature of a token array"),
-      (exprs: Seq[Expression]) => SimHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      info("graft_topk", "graft_topk(item, capacity) - SpaceSaving heavy-hitters sketch; " +
-        "emits array<struct<item, cnt, err>> sorted by estimated count"),
-      (exprs: Seq[Expression]) => TopKSketch.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      info("graft_nfc", "graft_nfc(str) - Unicode NFC normalization (canonical composition)"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      info("graft_bloom_contains", "graft_bloom_contains(hash, bloom) - Bloom-filter membership " +
-        "test of an xxhash64 value against a serialized sketch (BloomGate.buildBloom)"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_agg"),
-      info("graft_kll_agg", "graft_kll_agg(x[, k]) - mergeable KLL quantile sketch of a " +
-        "numeric column, emitted as BINARY (persist per batch, merge later)"),
-      (exprs: Seq[Expression]) => KllSketchFns.buildAgg(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge", "graft_kll_merge(sketch) - union of BINARY KLL sketches"),
-      (exprs: Seq[Expression]) => KllMergeAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_quantile"),
-      info("graft_kll_quantile", "graft_kll_quantile(sketch, rank) - estimated value at " +
-        "normalized rank in [0,1]; NULL for an empty sketch"),
-      (exprs: Seq[Expression]) => KllQuantile(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_rank"),
-      info("graft_kll_rank", "graft_kll_rank(sketch, x) - estimated normalized rank of a " +
-        "value; NULL for an empty sketch"),
-      (exprs: Seq[Expression]) => KllRank(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingles"),
-      info("shingles", "shingles(tokens, n) - generator of distinct n-token shingles"),
-      (exprs: Seq[Expression]) => {
-        val n = exprs(1).eval(null) match {
-          case i: Int  => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"shingles(tokens, n): n must be an integer literal, got $other")
-        }
-        ShingleGenerator(exprs.head, n)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.entries.foreach { e =>
+      ext.injectFunction((FunctionIdentifier(e.name), GraftFunctions.info(e, "built-in"), e.builder))
+    }
 }

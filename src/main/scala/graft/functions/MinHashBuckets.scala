@@ -23,8 +23,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * nothing: no shingle strings, no HOF lambdas, no generator rows. (A
   * first r11 draft consumed a pre-built shingle ARRAY; the
   * transform/concat_ws/array_distinct HOF chain that built it cost more
-  * than the signing — interpreted lambdas per element — so shingling
-  * moved into the kernel.)
+  * than the signing — Catalyst inlines split(text, ' ') into the lambda,
+  * so every element_at re-split the document — so shingling moved into
+  * the kernel. The refine tier, which needs the shingle strings
+  * themselves, builds them with the one-pass `graft_ngrams` kernel
+  * (TokenNgrams, via DedupOps.shingleExpr). The two kernels differ only
+  * on NULL tokens — this one skips the window, graft_ngrams skips the
+  * token as concat_ws does — and `split` tokens are never NULL.)
   *
   * Bit-compatibility contract (CustomFunctionsSpec pins it): per hash
   * index i, sig_i = min over distinct shingles t of

@@ -14,6 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * window never materializes an intermediate array per document the way
   * the transform(sequence(...)) HOF recipe does.
   *
+  * It emits EVERY window in order, repeats included (not a distinct
+  * set), and a window holding a NULL token emits no row at all — unlike
+  * `graft_ngrams` (TokenNgrams), which follows `concat_ws` and skips only
+  * the NULL token inside its window.
+  *
   * SQL name: `shingles(tokens, n)` (n a literal), registered by
   * GraftFunctions.register.
   */

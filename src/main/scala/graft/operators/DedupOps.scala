@@ -26,19 +26,19 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Distinct 3-gram shingles of the first `n-drop` tokens (1-based
-    * element_at; guarded so short docs yield an empty array rather than a
-    * descending sequence()). */
-  private[graft] def shingleExpr(drop: Int): String = {
-    val last = s"size(toks) - ${2 + drop}"
-    s"CASE WHEN $last >= 1 THEN array_distinct(transform(sequence(1, $last), " +
-      "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))) " +
-      "ELSE array() END"
-  }
+  /** Distinct 3-gram shingles of the first `n-drop` tokens of the `toks`
+    * column, in first-occurrence order; docs with fewer than `3 + drop`
+    * tokens get an empty array. The windows come from the one-pass
+    * `graft_ngrams` kernel (functions/TokenNgrams.scala), so the token
+    * array is never re-split per window. Callers must run
+    * GraftFunctions.register before the expression is analyzed. */
+  private[graft] def shingleExpr(drop: Int): String =
+    s"array_distinct(graft_ngrams(toks, 3, $drop))"
 
   /** Original + perturbed-copy corpus: (doc_id, source, sh) with distinct
     * 3-gram shingle sets; copies drop the last 3 tokens. */
-  private def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
+  private[graft] def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
+    GraftFunctions.register(s)
     val base = Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
     val orig = base.select(col("doc_id"), col("source"), expr(shingleExpr(0)).as("sh"))
@@ -271,6 +271,7 @@ object DedupOps {
     * every new crawl batch probes and appends in O(batch). */
   def writeMinhashIndex(s: SparkSession, docs: DataFrame, dir: String,
       k: Int = 16, bands: Int = 4): Unit = graft.sources.WriterLock.withLock(dir) {
+    GraftFunctions.register(s)
     val toks = docs.withColumn("toks", split(col("text"), " "))
     // rebuild fence (GenStamp): a crash between these commits could
     // leave e.g. new signatures under an old meta's (k, bands) — every
@@ -336,6 +337,7 @@ object DedupOps {
   def appendToMinhashIndex(s: SparkSession, batch: DataFrame,
       dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
     val meta = requireMinhashMeta(s, dir)
+    GraftFunctions.register(s)
     val toks = batch.withColumn("toks", split(col("text"), " "))
     val buckets0 = minhashBucketsOf(s, toks.select(col("doc_id"), col("toks")),
       meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
@@ -454,6 +456,7 @@ object DedupOps {
   def dedupAgainstIndex(s: SparkSession, batch: DataFrame, dir: String,
       threshold: Double = 0.5): DataFrame = {
     val meta = requireMinhashMeta(s, dir)
+    GraftFunctions.register(s)
     val toks = batch.withColumn("toks", split(col("text"), " "))
     val bBands0 = minhashBandsOf(s, toks.select(col("doc_id"), col("toks")),
       meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
@@ -735,6 +738,7 @@ object DedupOps {
     // winnowing-style). Oracle-less (xxhash64). Identical fingerprints ⇒
     // likely near-dup; used as a cheap pre-cluster key at scale.
     "q_doc_fingerprint" -> ((s, d) => {
+      GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .withColumn("sh", expr(shingleExpr(0)))
@@ -777,17 +781,13 @@ object DedupOps {
     // whole copy by construction. All integer — exact oracle; spans >= 12
     // tokens reported, aggregated per pair.
     "q_dedup_substring" -> ((s, d) => {
+      GraftFunctions.register(s)
       val base = Tables.documents(s, d).withColumn("toks", split(col("text"), " "))
       val u = base.select(col("doc_id"), col("toks"))
         .unionByName(base.select((col("doc_id") + 1000000).as("doc_id"),
           expr("slice(toks, 1, greatest(size(toks) - 3, 1))").as("toks")))
       val grams = u.select(col("doc_id"),
-          posexplode(expr(
-            "CASE WHEN size(toks) - 7 >= 1 THEN transform(sequence(1, size(toks) - 7), " +
-              "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), " +
-              "element_at(toks, i + 2), element_at(toks, i + 3), element_at(toks, i + 4), " +
-              "element_at(toks, i + 5), element_at(toks, i + 6), element_at(toks, i + 7))) " +
-              "ELSE array() END")).as(Seq("p0", "gram")))
+          posexplode(expr("graft_ngrams(toks, 8, 0)")).as(Seq("p0", "gram")))
         .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gram"))
       val keptGrams = grams.groupBy("gram").agg(count(lit(1)).as("dfc"))
         .where(col("dfc") <= 100).select("gram")
@@ -854,16 +854,14 @@ object DedupOps {
     * of every 20th doc). Shared by the exact and bloom-prefiltered
     * gates so their inputs cannot drift apart. */
   private[graft] def contaminationGrams(docs: DataFrame): (DataFrame, DataFrame) = {
-    def sh5(c: String) =
-      s"CASE WHEN size($c) - 4 >= 1 THEN array_distinct(transform(sequence(1, size($c) - 4), " +
-        s"i -> concat_ws(' ', element_at($c, i), element_at($c, i + 1), element_at($c, i + 2), " +
-        s"element_at($c, i + 3), element_at($c, i + 4)))) ELSE array() END"
+    GraftFunctions.register(docs.sparkSession)
+    val sh5 = "array_distinct(graft_ngrams(toks, 5, 0))"
     val corpus = docs
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(sh5("toks"))).as("g"))
+      .select(col("doc_id"), explode(expr(sh5)).as("g"))
     val bench = docs.where(col("doc_id") % 20 === 0)
       .withColumn("toks", expr("slice(split(text, ' '), 1, 10)"))
-      .select(col("doc_id").as("bench_id"), explode(expr(sh5("toks"))).as("g"))
+      .select(col("doc_id").as("bench_id"), explode(expr(sh5)).as("g"))
     (corpus, bench)
   }
 

@@ -663,12 +663,10 @@ object TextOps {
     // round at the threshold. Full ✓-oracle despite the scale: every
     // step is closed-form SQL.
     "q_sim_sparse_full" -> ((s, d) => {
+      GraftFunctions.register(s)
       val sh = Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
-        .select(col("doc_id"), explode(expr(
-          "CASE WHEN size(toks) - 2 >= 1 THEN array_distinct(transform(sequence(1, size(toks) - 2), " +
-            "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))) " +
-            "ELSE array() END")).as("g"))
+        .select(col("doc_id"), explode(expr("array_distinct(graft_ngrams(toks, 3, 0))")).as("g"))
       val kept = sh.join(
         sh.groupBy("g").agg(count(lit(1)).as("dfg")).where(col("dfg") <= 100).select("g"), "g")
       val nrm = kept.groupBy("doc_id").agg(sqrt(count(lit(1)).cast("double")).as("n"))
@@ -720,12 +718,10 @@ object TextOps {
     // round() convention is in play; a sub-3-token doc has no 3-grams
     // and its fraction is NULL in both engines (integer div by zero).
     "q_text_repetition" -> ((s, d) => {
+      GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
-        .withColumn("g3", expr(
-          "CASE WHEN size(toks) - 2 >= 1 THEN transform(sequence(1, size(toks) - 2), " +
-            "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), " +
-            "element_at(toks, i + 2))) ELSE array() END"))
+        .withColumn("g3", expr("graft_ngrams(toks, 3, 0)"))
         .withColumn("n_tok", size(col("toks")).cast("bigint"))
         .withColumn("d_tok", size(array_distinct(col("toks"))).cast("bigint"))
         .withColumn("n_g3", size(col("g3")).cast("bigint"))
@@ -766,7 +762,8 @@ object TextOps {
     // distinct trigrams. The CASE guard keeps sub-3-char docs from
     // generating a DESCENDING sequence() (Spark) where DuckDB's
     // generate_series would return empty — the one cross-engine trap in
-    // this shape (same guard as DedupOps.shingleExpr).
+    // this shape (graft_ngrams builds the same empty array for short
+    // token arrays).
     "q_str_ngrams" -> ((s, d) => {
       Tables.documents(s, d)
         .select(explode(expr(
@@ -785,18 +782,14 @@ object TextOps {
     // on the gram key with map-side partial counts, so the only rows
     // crossing the wire more than once are genuinely repeated grams —
     // no all-pairs doc comparison ever materializes. countDistinct adds
-    // the standard two-phase distinct expansion, still keyed. The CASE
-    // guard keeps sub-8-token docs from generating a DESCENDING
-    // sequence() (the q_str_ngrams / shingleExpr cross-engine trap).
+    // the standard two-phase distinct expansion, still keyed. Sub-8-token
+    // docs get an empty graft_ngrams array, as the oracle's CASE guard
+    // gives them.
     "q_ngram_dup_profile" -> ((s, d) => {
+      GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
-        .select(col("doc_id"), explode(expr(
-          "CASE WHEN size(toks) - 7 >= 1 THEN transform(sequence(1, size(toks) - 7), " +
-            "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), " +
-            "element_at(toks, i + 2), element_at(toks, i + 3), element_at(toks, i + 4), " +
-            "element_at(toks, i + 5), element_at(toks, i + 6), element_at(toks, i + 7))) " +
-            "ELSE array() END")).as("gram"))
+        .select(col("doc_id"), explode(expr("graft_ngrams(toks, 8, 0)")).as("gram"))
         .groupBy("gram")
         .agg(countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_occ"))
         .where(col("n_docs") > 1)
@@ -816,16 +809,11 @@ object TextOps {
     // would pay, reused in place so the per-source rollup follows
     // without a join back); the final source rollup is a 20-row
     // aggregate. No doc×doc or source×source pair ever materializes.
-    // The CASE guard is the q_str_ngrams descending-sequence() trap.
     "q_xsource_leakage" -> ((s, d) => {
+      GraftFunctions.register(s)
       val grams = Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
-        .select(col("source"), explode(expr(
-          "CASE WHEN size(toks) - 7 >= 1 THEN transform(sequence(1, size(toks) - 7), " +
-            "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), " +
-            "element_at(toks, i + 2), element_at(toks, i + 3), element_at(toks, i + 4), " +
-            "element_at(toks, i + 5), element_at(toks, i + 6), element_at(toks, i + 7))) " +
-            "ELSE array() END")).as("g"))
+        .select(col("source"), explode(expr("graft_ngrams(toks, 8, 0)")).as("g"))
         .distinct()
       grams
         .withColumn("ns", count(lit(1)).over(Window.partitionBy("g")))

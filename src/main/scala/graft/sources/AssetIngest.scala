@@ -865,6 +865,7 @@ object AssetIngest {
       textIndexDir: Option[String] = None,
       textIndexCompactAt: Int = 4): IngestReport = {
     import graft.operators.DedupOps
+    graft.functions.GraftFunctions.register(s)
     val ann = batch.select("doc_id", "source", "text").localCheckpoint(false)
     val total = ann.count()
     val okF = col("text").isNotNull && length(trim(col("text"))) > 0

@@ -183,10 +183,8 @@ object StreamingOps {
     * a stream-static join (per-match emission, dedupe downstream). */
   def contaminationGateStream(docs: DataFrame, benchmark: DataFrame,
       maxGrams: Long = 1000000L): DataFrame = {
-    val sh5 =
-      "CASE WHEN size(toks) - 4 >= 1 THEN array_distinct(transform(sequence(1, size(toks) - 4), " +
-        "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2), " +
-        "element_at(toks, i + 3), element_at(toks, i + 4)))) ELSE array() END"
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val sh5 = "array_distinct(graft_ngrams(toks, 5, 0))"
     val benchGrams = benchmark
       .withColumn("toks", split(col("text"), " "))
       .select(explode(expr(sh5)).as("g")).distinct()
@@ -236,10 +234,7 @@ object StreamingOps {
   def contaminationGateStreamBloom(docs: DataFrame, benchmark: DataFrame,
       fpp: Double = 1e-5): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val sh5 =
-      "CASE WHEN size(toks) - 4 >= 1 THEN array_distinct(transform(sequence(1, size(toks) - 4), " +
-        "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2), " +
-        "element_at(toks, i + 3), element_at(toks, i + 4)))) ELSE array() END"
+    val sh5 = "array_distinct(graft_ngrams(toks, 5, 0))"
     val benchGrams = benchmark
       .withColumn("toks", split(col("text"), " "))
       .select(explode(expr(sh5)).as("g")).distinct()

@@ -84,21 +84,32 @@ class CustomFunctionsSpec extends AnyFunSuite {
     assert(r.isNullAt(0))
   }
 
-  test("GraftExtensions wires the native functions into a session at build time") {
-    // the production injection path (spark.sql.extensions) — build a
-    // second session over the SAME SparkContext with the extensions
-    // installed and use the functions without any register() call.
-    // Suites run sequentially in this forked JVM (testForkedParallel is
-    // off), so the clear/restore of the default session cannot race.
+  /** Run `f` on a second session over the SAME SparkContext, built only
+    * `.withExtensions(new GraftExtensions)` — the production injection
+    * path (spark.sql.extensions), no register() call. Suites run
+    * sequentially in this forked JVM (testForkedParallel is off), so the
+    * clear/restore of the default session cannot race. */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val s2 = SparkSession.builder()
+      f(SparkSession.builder()
         .master("local[4]")
         .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
+        .getOrCreate())
+    } finally {
+      // the session shares the SparkContext — never stop it; just restore
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("GraftExtensions wires the native functions into a session at build time") {
+    withExtensionSession { s2 =>
       val r = s2.sql(
         "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
           "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
@@ -116,12 +127,33 @@ class CustomFunctionsSpec extends AnyFunSuite {
       val desc = s2.sql("DESCRIBE FUNCTION graft_simhash")
         .collect().map(_.getString(0)).mkString("\n")
       assert(desc.toLowerCase.contains("graft_simhash"))
-    } finally {
-      // s2 shares the SparkContext — never stop it; just restore sessions
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("every function GraftFunctions.register binds also resolves in an extension-only session") {
+    // the names register() binds, read off a fresh session's registry
+    val fresh = spark.newSession()
+    val before = fresh.sessionState.functionRegistry.listFunction().toSet
+    GraftFunctions.register(fresh)
+    val bound = fresh.sessionState.functionRegistry.listFunction().toSet -- before
+    assert(bound.map(_.funcName) === GraftFunctions.entries.map(_.name).toSet)
+    assert(bound.exists(_.funcName == "graft_ngrams"))
+    // the same calls must resolve and agree on both paths
+    val probe =
+      "SELECT graft_ngrams(array('a', 'b', 'c', 'd'), 2, 1) AS ng, " +
+        "graft_minhash_buckets(array('a', 'b', 'c', 'd'), 3, 4, 2) AS mh, " +
+        "graft_lsh_buckets(array(CAST(1.0 AS FLOAT), CAST(-2.0 AS FLOAT)), " +
+        "array(array(1.0D, 0.0D), array(0.0D, 1.0D)), 1) AS lsh, " +
+        "graft_dot_simd(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
+        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS simd"
+    val viaRegister = fresh.sql(probe).head()
+    withExtensionSession { s2 =>
+      val missing = bound.filterNot(s2.sessionState.functionRegistry.functionExists)
+      assert(missing.isEmpty, s"bound by register() but absent from GraftExtensions: $missing")
+      val viaExtension = s2.sql(probe).head()
+      assert(viaExtension === viaRegister)
+      assert(viaExtension.getSeq[String](0) === Seq("a b", "b c"))
+      assert(viaExtension.getDouble(3) === 11.0)
     }
   }
 
@@ -458,6 +490,101 @@ class CustomFunctionsSpec extends AnyFunSuite {
         .as("b"))
       .collect().map(_.getSeq[Long](0))
     assert(sigs(0) === sigs(1))
+  }
+
+  /** The HOF n-gram recipe graft_ngrams replaced, kept as its reference:
+    * windows of the first size(c) - drop tokens, 1-based element_at,
+    * CASE-guarded so short arrays yield an empty array. */
+  private def hofNgrams(c: String, n: Int, drop: Int): String = {
+    val last = s"size($c) - ${n - 1 + drop}"
+    val window = (0 until n).map(j => if (j == 0) s"element_at($c, i)" else s"element_at($c, i + $j)")
+    s"CASE WHEN $last >= 1 THEN transform(sequence(1, $last), " +
+      s"i -> concat_ws(' ', ${window.mkString(", ")})) ELSE array() END"
+  }
+
+  test("graft_ngrams equals the transform/concat_ws HOF recipe, interpreted and codegen") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+    val handmade: Seq[Seq[String]] =
+      // empty, then shorter than, equal to and longer than n + drop for
+      // every (n, drop) below (n + drop runs 3..11)
+      (0 to 13).map(m => (0 until m).map(i => s"t$i")) ++ Seq(
+        Seq.fill(6)(Seq("a", "b")).flatten, // repeated windows
+        Seq("", "", "x", "", "", "", "y", "", "", "", ""), // split() of runs of spaces
+        Seq("a", null, "b", "c", null, null, null, "d", "e", "f", null, "g"), // NULL elements
+        Seq.fill(9)(null), // every window all-NULL
+        Seq("\u00e9t\u00e9", "caf\u00e9", "na\u00efve", "\u65e5\u672c\u8a9e", "\ud83d\ude42",
+          "\u03a9mega", "\u00e9t\u00e9", "caf\u00e9", "na\u00efve", "\u65e5\u672c\u8a9e",
+          "\ud83d\ude42")) // multi-byte UTF-8, repeated
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("toks", ArrayType(StringType, containsNull = true))))
+    val rows = handmade.zipWithIndex.map { case (t, i) => Row(i.toLong, t) } :+
+      Row(999L, null) // NULL array
+    // through parquet, so the projection really runs in the executor
+    // (a local relation would be folded by the optimizer's interpreter)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ngrams").toString + "/t"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .unionByName(Tables.documents(spark, sf).where(col("doc_id") < 40)
+        .select((col("doc_id") + 10000).as("id"), split(col("text"), " ").as("toks")))
+      .write.parquet(dir)
+    val cases = for (n <- Seq(3, 5, 8); drop <- Seq(0, 3); distinct <- Seq(false, true))
+      yield (n, drop, distinct)
+    // the kernel and the recipe run as separate frames, so the kernel's
+    // frame stays one whole-stage-codegen stage in codegen mode
+    def frame(build: (Int, Int) => String): org.apache.spark.sql.DataFrame =
+      spark.read.parquet(dir).select(col("id") +: cases.map { case (n, drop, distinct) =>
+        expr(if (distinct) s"array_distinct(${build(n, drop)})" else build(n, drop))
+      }: _*)
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Seq[String]]] =
+      df.collect().map(r => r.getLong(0) -> cases.indices.map(c => r.getSeq[String](1 + c))).toMap
+    def check(mode: String): Unit = {
+      val kernel = frame((n, drop) => s"graft_ngrams(toks, $n, $drop)")
+      val recipe = frame((n, drop) => hofNgrams("toks", n, drop))
+      assert(kernel.schema.map(_.dataType) === recipe.schema.map(_.dataType))
+      assert(kernel.schema.drop(1).forall(_.dataType == ArrayType(StringType, containsNull = false)))
+      val got = byId(kernel)
+      val want = byId(recipe)
+      assert(got.size === rows.length + 40)
+      for ((id, grams) <- want; c <- cases.indices)
+        assert(got(id)(c) === grams(c), s"$mode id=$id (n, drop, distinct)=${cases(c)}")
+      // the law is not vacuous: windows exist, and a NULL array gets []
+      assert(got.values.exists(_.head.nonEmpty))
+      assert(got(999L).forall(_.isEmpty))
+      val code = org.apache.spark.sql.execution.debug.codegenString(kernel.queryExecution.executedPlan)
+      assert(code.contains("graft.functions.TokenNgrams.grams") === (mode == "codegen"),
+        s"$mode: whole-stage codegen presence of the kernel call")
+    }
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (ansi <- Seq("true", "false"); mode <- Seq("codegen", "interpreted")) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        spark.conf.set("spark.sql.codegen.wholeStage", (mode == "codegen").toString)
+        spark.conf.set("spark.sql.codegen.factoryMode",
+          if (mode == "codegen") "CODEGEN_ONLY" else "NO_CODEGEN")
+        check(mode)
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // pinned by hand as well: NULL tokens skipped inside the window
+    // (concat_ws), an all-NULL window is '', the window order kept
+    val pinned = spark.sql("SELECT graft_ngrams(array('a', NULL, 'b', 'c'), 2, 0), " +
+      "graft_ngrams(array(NULL, NULL, 'z'), 2, 1), graft_ngrams(array('x'), 1, 1)").head()
+    assert(pinned.getSeq[String](0) === Seq("a", "b", "b c"))
+    assert(pinned.getSeq[String](1) === Seq(""))
+    assert(pinned.getSeq[String](2) === Seq.empty)
+    val bad = intercept[Exception] {
+      spark.sql("SELECT graft_ngrams(array('a'), 0, 0)").collect()
+    }
+    assert(bad.getMessage.contains("n must be positive"), bad.getMessage)
+    val nonLiteral = intercept[Exception] {
+      spark.sql("SELECT graft_ngrams(array('a'), id, 0) FROM range(1)").collect()
+    }
+    assert(nonLiteral.getMessage.contains("foldable int n"), nonLiteral.getMessage)
   }
 
   test("graft_kll: quantile/rank bounds on a known distribution, partition-merge law") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards: PLANS.md documents the audited plans,
@@ -102,6 +104,50 @@ class PlanShapeSpec extends AnyFunSuite {
       val bhj = "BroadcastHashJoin".r.findAllIn(p).length
       assert(bhj === 1, s"expected only the pinned dimension broadcast, got $bhj:\n$p")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** Higher-order pieces of a logical plan. A transform(sequence(..),
+    * i -> concat_ws(' ', element_at(toks, i), ..)) shingle recipe lets
+    * Catalyst inline split(text, ' ') into the lambda, re-splitting the
+    * document once per element_at. */
+  private def higherOrder(p: LogicalPlan): Seq[String] = {
+    val found = scala.collection.mutable.ArrayBuffer[String]()
+    p.foreach(_.expressions.foreach(_.foreach { e =>
+      if (e.isInstanceOf[ArrayTransform] || e.isInstanceOf[LambdaFunction]) found += e.prettyName
+    }))
+    found.toSeq
+  }
+
+  test("token n-gram paths carry no per-element lambda (the tokenizer cannot inline)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.functions.{col, size}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val refine = graft.operators.DedupOps.nearDupCorpus(spark, sf).where(size(col("sh")) > 0)
+    assert(higherOrder(refine.queryExecution.optimizedPlan).isEmpty,
+      refine.queryExecution.optimizedPlan.toString.take(3000))
+    val profile = SparkEntry.queries("q_ngram_dup_profile")(spark, sf)
+    assert(higherOrder(profile.queryExecution.optimizedPlan).isEmpty,
+      profile.queryExecution.optimizedPlan.toString.take(3000))
+    // the MinHash index write: every write command it runs, captured
+    val writes = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        writes.synchronized { writes += qe.optimizedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("plan-shape-minhash").toString + "/idx"
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.DedupOps.writeMinhashIndex(spark, Tables.documents(spark, sf), dir)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val shingleWrite = writes.synchronized(writes.toList).filter(_.exists {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString.endsWith("/shingles")
+      case _ => false
+    })
+    assert(shingleWrite.nonEmpty, "the shingles table write was not observed")
+    shingleWrite.foreach(p => assert(higherOrder(p).isEmpty, p.toString.take(3000)))
   }
 
   test("sessionize keeps a single exchange keyed on user_id") {
