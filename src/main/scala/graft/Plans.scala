@@ -67,22 +67,6 @@ object Plans {
     "q_tfidf"           -> "1-row corpus-N broadcast (vs a driver collect)",
     "q_text_search"     -> "1-row corpus-N broadcast (vs a driver collect)",
     "q_text_search_bm25" -> "1-row (N, avgdl) stats broadcast (vs a driver collect)",
-    "q_text_search_indexed" -> ("1-row (N, avgdl) stats-table broadcast onto the pruned " +
-      "postings read (the q_text_search_bm25 shape fed from the persisted index)"),
-    "q_text_search_indexed_delta" -> ("the q_text_search_indexed 1-row stats broadcast, " +
-      "with the stats row now the exact Σn/Σsum_dl fold over the base + delta segments' " +
-      "1-row stats tables — still segment-count rows, never postings"),
-    "q_text_search_indexed_deleted" -> ("TWO 1-row broadcasts: the segment-stats fold and " +
-      "the tombstone-shrink row (count + Σdl of the deduped tombstone set, tombstone-count " +
-      "rows) crossed onto it — both sides bounded by metadata, never corpus-sized"),
-    "q_text_search_prefix" -> ("the q_text_search_indexed 1-row stats broadcast under the " +
-      "dictionary-expanded term set (expansion itself is a vocab-sized driver read, " +
-      "capped loudly)"),
-    "q_text_search_negated" -> ("the q_text_search_indexed 1-row stats broadcast; the " +
-      "must-not exclusion is a broadcast ANTI-join of the excluded terms' pruned " +
-      "doc ids, never a corpus pass"),
-    "q_text_search_conjunctive" -> ("the q_text_search_indexed 1-row stats broadcast; " +
-      "the AND face is a post-aggregation matched-count filter on the same plan"),
     "q_text_search_batch" -> ("bounded query-table broadcast + 1-row (N, avgdl) stats " +
       "broadcast — one corpus pass serves the whole query batch"),
     "q_knn_ivfpq"       -> "1-row ADC-table / query / coarse-codebook broadcasts (IVFADC probe + rerank)",

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.{BloomGate, GraftFunctions}
 import graft.sources.IdBuckets
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -519,12 +519,17 @@ object DedupOps {
       .orderBy("batch_id", "corpus_id")
   }
 
+  /** The exact-dedup key: sha256 of the trimmed, lowercased text. ONE
+    * definition for the batch queries, the curation pipeline and the
+    * streaming dedup, so their keys stay bit-identical (xxhash64 is the
+    * at-scale choice but has no DuckDB twin for the oracles). */
+  def exactKey(text: Column): Column = sha2(lower(trim(text)), 256)
+
   val queries: Map[String, Q] = Map(
-    // Exact dedup: normalize → sha256 → group, deterministic min keeper.
-    // (xxhash64 is the at-scale choice but has no DuckDB twin — the
-    // declared query uses sha256; see MinHash below for xxhash64.)
+    // Exact dedup: normalize → sha256 → group, deterministic min keeper
+    // (see MinHash below for xxhash64).
     "q_dedup_exact" -> ((s, d) => {
-      val h = sha2(lower(trim(col("text"))), 256)
+      val h = exactKey(col("text"))
       val orig = Tables.documents(s, d).select(col("doc_id"), h.as("h"))
       val dup = Tables.documents(s, d).select((col("doc_id") + 1000000).as("doc_id"), h.as("h"))
       orig.unionByName(dup)
@@ -543,7 +548,7 @@ object DedupOps {
     // are keyed on the hash — linear at any corpus size.
     "q_dedup_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val h = sha2(lower(trim(col("text"))), 256)
+      val h = exactKey(col("text"))
       val corpus = docs.where(col("doc_id") % 2 === 0).select(h.as("h")).distinct()
       val batch = docs.where(col("doc_id") % 2 === 1)
         .select(col("doc_id"), h.as("h"))

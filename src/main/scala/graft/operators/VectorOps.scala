@@ -1105,8 +1105,8 @@ object VectorOps {
 
   /** Fold tombstones into a cell-partitioned index table, rewriting ONLY
     * the cell partitions that actually contain deleted rows: survivors of
-    * the affected cells land in a temp dir, the affected `cell=` dirs are
-    * dropped, and the survivor partitions are renamed in — every
+    * the affected cells land in a temp dir and are swapped in for the
+    * affected `cell=` dirs ([[graft.sources.FsMoves.swapPartitions]]) — every
     * untouched cell's files stay byte-identical (asserted in spec). A
     * cell whose rows all died simply disappears. The affected-cell list
     * crosses the driver (bounded by the cell count — metadata, not row
@@ -1123,13 +1123,7 @@ object VectorOps {
         table.where(col("cell").isin(affected: _*))
           .join(broadcast(t), table("vec_id") === t("id"), "left_anti")
           .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-        affected.foreach(c =>
-          hfs.delete(new org.apache.hadoop.fs.Path(s"$path/cell=$c"), true))
-        hfs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .filter(_.getPath.getName.startsWith("cell="))
-          .foreach(st => hfs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(s"$path/${st.getPath.getName}")))
-        hfs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        graft.sources.FsMoves.swapPartitions(hfs, path, tmp, affected.map(c => s"cell=$c"))
       }
       graft.sources.Tombstones.clear(s, dir)
     }

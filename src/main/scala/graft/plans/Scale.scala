@@ -346,33 +346,6 @@ object Scale {
       .groupBy("file")
       .agg(min(key).as("lo"), max(key).as("hi"), count(lit(1)).as("rows"))
 
-  /** Zone-map-pruned range scan: consult the stored manifest (or a live
-    * `fileStats` scan when none exists), read ONLY the files whose
-    * [lo, hi] intersects [from, to], then apply the exact predicate. On
-    * a range-sorted layout this skips all but O(range fraction) of the
-    * files BEFORE any data I/O, mirroring how a table format's manifest
-    * pruning works. Falls back gracefully twice over: no manifest →
-    * live stats scan; unsorted layout → every file intersects and the
-    * scan degrades to a full read with the same answer (correctness
-    * never depends on layout or manifest freshness-to-SORT — but a
-    * manifest must be rewritten after files are REPLACED, see
-    * writeManifest).
-    *
-    * Driver posture (r10, closes the r9 advisory): the manifest is
-    * filtered DISTRIBUTED — the driver never materializes a
-    * non-surviving file's row, so nothing here scales with TOTAL file
-    * count (an O(10⁶)-file table costs the driver only its kept set).
-    * The surviving paths must reach the driver to parameterize the scan
-    * (Spark's own FileIndex holds exactly this list for any scan), and
-    * `maxKeptFiles` bounds that explicitly: when more files survive
-    * than the cap — low selectivity, where a path-list scan buys little
-    * anyway — the function returns the plain full-path read and lets
-    * parquet row-group pushdown do the skipping, reporting
-    * kept == total. The interval compare runs in Spark with the same
-    * type coercion as the exact predicate (the old driver-side compare
-    * needed hand-rolled exact-integer cases to avoid 2^53 double
-    * round-trips; pushing it into the engine removes that class of bug
-    * by construction). */
   /** Per-RUN scratch path for a query's temp layout. Scoped by corpus
     * dir AND a JVM-unique run id (r16 advice): a fixed corpus-keyed
     * path let two concurrent runs over the same testdata clobber each
@@ -614,6 +587,33 @@ object Scale {
         |  count(*) AS n
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
 
+  /** Zone-map-pruned range scan: consult the stored manifest (or a live
+    * `fileStats` scan when none exists), read ONLY the files whose
+    * [lo, hi] intersects [from, to], then apply the exact predicate. On
+    * a range-sorted layout this skips all but O(range fraction) of the
+    * files BEFORE any data I/O, mirroring how a table format's manifest
+    * pruning works. Falls back gracefully twice over: no manifest →
+    * live stats scan; unsorted layout → every file intersects and the
+    * scan degrades to a full read with the same answer (correctness
+    * never depends on layout or manifest freshness-to-SORT — but a
+    * manifest must be rewritten after files are REPLACED, see
+    * writeManifest).
+    *
+    * Driver posture (r10, closes the r9 advisory): the manifest is
+    * filtered DISTRIBUTED — the driver never materializes a
+    * non-surviving file's row, so nothing here scales with TOTAL file
+    * count (an O(10⁶)-file table costs the driver only its kept set).
+    * The surviving paths must reach the driver to parameterize the scan
+    * (Spark's own FileIndex holds exactly this list for any scan), and
+    * `maxKeptFiles` bounds that explicitly: when more files survive
+    * than the cap — low selectivity, where a path-list scan buys little
+    * anyway — the function returns the plain full-path read and lets
+    * parquet row-group pushdown do the skipping, reporting
+    * kept == total. The interval compare runs in Spark with the same
+    * type coercion as the exact predicate (the old driver-side compare
+    * needed hand-rolled exact-integer cases to avoid 2^53 double
+    * round-trips; pushing it into the engine removes that class of bug
+    * by construction). */
   def pruneByStats(spark: SparkSession, path: String, key: String,
       from: Any, to: Any, maxKeptFiles: Int = 1 << 16): (DataFrame, Int, Int) = {
     require(maxKeptFiles >= 0, s"maxKeptFiles must be >= 0, got $maxKeptFiles")

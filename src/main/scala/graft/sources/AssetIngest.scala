@@ -342,7 +342,7 @@ object AssetIngest {
           // crash between move-out and move-in: the survivors (tmp) are
           // the correct final state; a missing tmp partition means every
           // row of it was a victim — absence IS the final state
-          if (fs.exists(tmpPart)) { fs.rename(tmpPart, dst); () }
+          if (fs.exists(tmpPart)) FsMoves.move(fs, tmpPart, dst)
         }
       }
       fs.delete(trash, true)
@@ -401,10 +401,10 @@ object AssetIngest {
     fs.mkdirs(trash)
     affected.foreach { p =>
       val dst = new Path(root, s"$LandCol=$p")
-      fs.rename(dst, new Path(trash, s"$LandCol=$p"))
+      FsMoves.move(fs, dst, new Path(trash, s"$LandCol=$p"))
       maybeFailTakedown(2)
       val tmpPart = new Path(takedownTmp(path), s"$LandCol=$p")
-      if (fs.exists(tmpPart)) { fs.rename(tmpPart, dst); () }
+      if (fs.exists(tmpPart)) FsMoves.move(fs, tmpPart, dst)
     }
     maybeFailTakedown(3)
     fs.delete(trash, true)

@@ -185,15 +185,9 @@ object BandBuckets {
           .repartitionByRange(col(Col), col(bucketCol))
           .sortWithinPartitions(col(Col), col(bucketCol))
           .write.mode("overwrite").partitionBy(Col).parquet(tmp)
-        val hfs = new Path(tablePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        affected.foreach { b =>
-          val dst = new Path(s"$tablePath/$Col=$b")
-          hfs.delete(dst, true)
-          val src = new Path(s"$tmp/$Col=$b")
-          if (hfs.exists(src)) { hfs.rename(src, dst); () }
-        }
-        hfs.delete(new Path(tmp), true)
+        FsMoves.swapPartitions(
+          new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration),
+          tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
         dropIfPartless(s, tablePath)
         s.catalog.refreshByPath(tablePath)
       }

@@ -35,7 +35,7 @@ object CurationPipeline {
       .transform(graft.operators.CurationOps.withQualityScore)
       .where(col("score") >= minScore)
     val keepers = scored
-      .withColumn("h", sha2(lower(trim(col("text"))), 256))
+      .withColumn("h", graft.operators.DedupOps.exactKey(col("text")))
       .withColumn("rn", row_number().over(Window.partitionBy("h").orderBy("doc_id")))
       .where(col("rn") === 1)
     keepers

@@ -138,14 +138,9 @@ object IdBuckets {
           .repartitionByRange(col(Col), col(idCol))
           .sortWithinPartitions(col(Col), col(idCol))
           .write.mode("overwrite").partitionBy(Col).parquet(tmp)
-        val hfs = new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration)
-        affected.foreach { b =>
-          val dst = new Path(s"$tablePath/$Col=$b")
-          hfs.delete(dst, true)
-          val src = new Path(s"$tmp/$Col=$b")
-          if (hfs.exists(src)) { hfs.rename(src, dst); () }
-        }
-        hfs.delete(new Path(tmp), true)
+        FsMoves.swapPartitions(
+          new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration),
+          tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
         // a fold that deleted every row leaves the same unreadable husk
         // as an empty write — normalize it away (see write's scaladoc)
         dropIfPartless(s, tablePath)

@@ -2,7 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
   StructField, StructType}
 
@@ -25,6 +29,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
   *
   * The bytes read are unchanged: the same row groups, under the same
   * pushed filters, as the partition-filtered full read these replace.
+  *
+  * Tables that are small by construction are not planned at all:
+  * [[localRows]] runs Spark's own parquet reader (the function a scan
+  * task runs per file) on the driver and hands back rows, so reading
+  * them costs no job, no task and no broadcast of the result. A caller
+  * uses it only where the rows it keeps are bounded: one row per index
+  * segment (stats), the tombstone set an anti-join would broadcast
+  * anyway, or a read it stops itself past a fixed cap (blockmax).
   */
 object TableRead {
 
@@ -100,22 +112,71 @@ object TableRead {
     * filtered on that column. When no wanted bucket exists the result
     * is an empty frame of the table's schema. */
   def bucketRead(s: SparkSession, table: String, partCol: String,
-      buckets: Seq[Int]): DataFrame = {
+      buckets: Seq[Int]): DataFrame =
+    bucketDirs(s, table, partCol, buckets) match {
+      case None =>
+        read(s, table).where(col(partCol).isin(buckets: _*)).drop(partCol)
+      case Some((leaves, any)) =>
+        // a leaf directory holds no partition column: its schema is the
+        // footer's data schema
+        val schema = schemaOf(s, (leaves :+ any).head)
+        if (leaves.isEmpty)
+          s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        else s.read.schema(schema).parquet(leaves: _*)
+    }
+
+  /** One driver listing of a partitioned `table`: the `partCol=b` leaf
+    * directories of the wanted `buckets` that exist, plus any one leaf
+    * (whose footer gives the data schema when none is wanted). None for
+    * a flat table, which carries `partCol` as a data column. */
+  def bucketDirs(s: SparkSession, table: String, partCol: String,
+      buckets: Seq[Int]): Option[(Seq[String], String)] = {
     val root = new Path(table)
     val partDirs = fsOf(s, root).listStatus(root)
       .filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$partCol="))
       .map(_.getPath).sortBy(_.getName).toSeq
-    if (partDirs.isEmpty)
-      read(s, table).where(col(partCol).isin(buckets: _*)).drop(partCol)
+    if (partDirs.isEmpty) None
     else {
       val want = buckets.map(b => s"$partCol=$b").toSet
-      val leaves = partDirs.filter(p => want(p.getName))
-      // a leaf directory holds no partition column: its schema is the
-      // footer's data schema
-      val schema = schemaOf(s, (leaves ++ partDirs).head.toString)
-      if (leaves.isEmpty)
-        s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else s.read.schema(schema).parquet(leaves.map(_.toString): _*)
+      Some((partDirs.filter(p => want(p.getName)).map(_.toString),
+        partDirs.head.toString))
     }
+  }
+
+  /** The rows of the data files directly inside `dirs`, read on the
+    * driver by Spark's parquet reader under `schema` — no Spark job.
+    *
+    * `schema` names the columns to read, typed as in the footers
+    * ([[schemaOf]]); a file lacking one of them reads it as null, as the
+    * file source does. `filters` are pushed to the reader exactly as a
+    * scan pushes them, so they skip row groups by their min/max stats;
+    * they are not applied row by row, and the caller filters the rows it
+    * is handed. One reader serves every file, and `use` runs while the
+    * file being read is open: the reader is closed when `use` returns,
+    * also when it stops early, so a caller bounds its own read by
+    * returning once it has seen enough rows. */
+  def localRows[T](s: SparkSession, dirs: Seq[String], schema: StructType,
+      filters: Seq[Filter] = Nil)(use: Iterator[Row] => T): T = {
+    val files = dirs.flatMap { d =>
+      val p = new Path(d)
+      fsOf(s, p).listStatus(p).filter(st => st.isFile && visible(st)).sortBy(_.getPath.getName)
+    }
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(s,
+      schema, new StructType(), schema, filters,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      s.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    // a file's reader closes itself once read to the end; `use` stopping
+    // early leaves the last one open, so every one is closed (idempotent)
+    val opened = scala.collection.mutable.ArrayBuffer.empty[Iterator[InternalRow]]
+    val rows = files.iterator.flatMap { st =>
+      opened += reader(PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath), 0L, st.getLen,
+        Array.empty[String], st.getModificationTime, st.getLen, Map.empty))
+      opened.last
+    }
+    // the converter copies every value out of the reader's reused row
+    try use(rows.map(r => toRow(r).asInstanceOf[Row]))
+    finally opened.foreach { case c: AutoCloseable => c.close(); case _ => () }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted inverted index for lexical (tf·idf / BM25) retrieval.
@@ -39,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    identical to the one-shot build's (a weighted mean of per-segment
   *    avgdl doubles would round differently).
   *  - `tombstones/` — (id, dl) rows appended by [[deleteFrom]] (r19):
-  *    searches drop tombstoned docs with a broadcast anti-join and
+  *    searches drop tombstoned docs with a literal id filter and
   *    shrink (N, avgdl, df) EXACTLY using the captured per-victim
   *    document lengths, so a deleted doc is both unretrievable and
   *    absent from every other doc's score the moment the delete
@@ -345,7 +346,47 @@ object TextIndex {
 
   /** Every live segment's root, base first. */
   private def segmentRoots(s: SparkSession, dir: String): Seq[String] =
-    dir +: deltaIds(s, dir).map(id => s"${deltasPath(dir)}/$id")
+    rootsOf(dir, deltaIds(s, dir))
+
+  private def rootsOf(dir: String, deltas: Seq[Long]): Seq[String] =
+    dir +: deltas.map(id => s"${deltasPath(dir)}/$id")
+
+  /** One index generation as a search sees it, resolved on the driver
+    * with no Spark job: the live delta ids (one listing), the exact
+    * corpus statistics and the tombstoned doc ids. `n` and `sumDl` are
+    * the summed segment stats minus the tombstoned docs' count and
+    * lengths — exact longs, so `avgdl` is the one IEEE division a
+    * one-shot build without the victims makes. Every table a search
+    * then plans is listed while the snapshot is taken, so a compaction
+    * that swaps the index before the search runs makes the search fail
+    * on a missing file; it never mixes the two generations. */
+  private[graft] final case class Snapshot(dir: String, deltas: Seq[Long],
+      n: Long, sumDl: Long, dead: Seq[Any]) {
+    def roots: Seq[String] = rootsOf(dir, deltas)
+    /** None over an all-empty index, where deriveStats' avg is null. */
+    def meanDl: Option[Double] = Option.when(n > 0)(sumDl.toDouble / n)
+    def avgdl: Column = meanDl.fold(lit(null).cast("double"))(lit(_))
+  }
+
+  /** The search faces' snapshot: the rebuild fence, then [[resolve]]. */
+  private[graft] def snapshot(s: SparkSession, dir: String): Snapshot = {
+    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
+      Seq(postingsPath(dir), statsPath(dir)))
+    resolve(s, dir)
+  }
+
+  /** Read a [[Snapshot]]: each segment's 1-row stats table and the
+    * tombstone set through [[TableRead.localRows]], one reader each. */
+  private def resolve(s: SparkSession, dir: String): Snapshot = {
+    val deltas = deltaIds(s, dir)
+    val st = TableRead.schemaOf(s, statsPath(dir))
+    requireV2Stats(st.fieldNames.contains("sum_dl"), dir)
+    val (n, sumDl) = TableRead.localRows(s, rootsOf(dir, deltas).map(r => s"$r/stats"),
+        StructType(Seq(st("n"), st("sum_dl"))))(
+      _.foldLeft((0L, 0L)) { case ((n, sd), r) => (n + r.getLong(0), sd + r.getLong(1)) })
+    val dead = tombstones(s, dir)
+    Snapshot(dir, deltas, n - dead.size, sumDl - dead.values.sum, dead.keys.toSeq)
+  }
 
   /** Append one ingest window's docs as a DELTA segment — the
     * incremental maintenance path (r17 verdict, next-round #1): the
@@ -365,15 +406,16 @@ object TextIndex {
       GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
         Seq(postingsPath(dir), statsPath(dir)))
       // re-appending a tombstoned id before compaction would be
-      // SILENTLY hidden by every search face's anti-join while the new
+      // SILENTLY hidden by every search face's tombstone filter while the new
       // segment's stats still count it live — N/avgdl would disagree
       // with the retrievable corpus until the next compact. Enforce the
       // scaladoc contract loudly (r19 advice): the check is one
-      // broadcast semi-join of the tombstone set (tiny) against the
-      // batch ids, skipped entirely when nothing was ever deleted.
-      tombstoneRows(s, dir).foreach { t =>
+      // literal-set filter of the batch ids by the tombstone set (tiny),
+      // skipped entirely when nothing was ever deleted.
+      val dead = tombstones(s, dir).keys.toSeq
+      if (dead.nonEmpty) {
         val clash = batch.select(col(idCol).as("doc_id"))
-          .join(broadcast(t.select("id")), col("doc_id") === col("id"), "left_semi")
+          .where(col("doc_id").isin(dead: _*))
           .limit(4).collect().map(_.get(0))
         require(clash.isEmpty,
           s"TextIndex.append: batch re-uses tombstoned doc ids " +
@@ -415,7 +457,7 @@ object TextIndex {
     * legally-removed document stayed retrievable by BM25/phrase/hybrid
     * search until a full rebuild). An O(ids ∩ postings) TOMBSTONE
     * append: nothing in the postings layout is touched; every search
-    * face drops tombstoned docs with one broadcast anti-join AND shrinks
+    * face drops tombstoned docs with one literal id filter AND shrinks
     * the corpus statistics exactly — each victim's document length is
     * captured here (from the victims' `doclens/` sidecar buckets when
     * every segment carries one — O(ids) directories, see
@@ -423,7 +465,7 @@ object TextIndex {
     * only, never terms or positions), so (N, avgdl, df) at search
     * time equal a rebuild WITHOUT the victims bit-for-bit
     * (TextIndexSpec law; df shrinks for free since it is counted from
-    * the anti-joined postings). [[compactTextIndex]] folds tombstones
+    * the filtered postings). [[compactTextIndex]] folds tombstones
     * into the files and clears them.
     *
     * Idempotent and re-issuable: duplicate tombstones collapse by id on
@@ -494,33 +536,34 @@ object TextIndex {
     }
   }
 
-  /** The deduped tombstone set — (id, dl), one row per deleted doc — or
-    * None when nothing was ever deleted. Retried deletes append
-    * duplicate rows; the group-by collapses them so the stats shrink
-    * can never double-subtract. */
-  private def tombstoneRows(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(tombstonesPath(dir))
-    if (!hfs(s, dir).exists(p)) None
-    else Some(TableRead.read(s, tombstonesPath(dir))
-      .groupBy("id").agg(min(col("dl")).as("dl")))
+  /** The deduped tombstone set, deleted doc id -> its length, read on
+    * the driver; empty when nothing was ever deleted. Retried deletes
+    * append duplicate rows; keying by id collapses them so the stats
+    * shrink can never double-subtract. */
+  private def tombstones(s: SparkSession, dir: String): Map[Any, Long] = {
+    val p = tombstonesPath(dir)
+    if (!hfs(s, dir).exists(new Path(p))) Map.empty
+    else {
+      val sch = TableRead.schemaOf(s, p)
+      TableRead.localRows(s, Seq(p), StructType(Seq(sch("id"), sch("dl"))))(
+        _.toSeq.groupMapReduce(_.get(0))(_.getAs[Number](1).longValue)(math.min))
+    }
   }
 
-  /** Anti-join `df`'s doc_id against the tombstone set (broadcast —
-    * tombstone counts are tiny relative to the corpus); the identical
-    * frame when none exist. */
-  private def dropTombstoned(s: SparkSession, dir: String, df: DataFrame): DataFrame =
-    tombstoneRows(s, dir) match {
-      case Some(t) =>
-        df.join(broadcast(t.select("id")), df("doc_id") === col("id"), "left_anti")
-      case None => df
-    }
+  /** Drop the snapshot's tombstoned docs from `df` — a literal set
+    * filter, so no tombstone table is scanned or broadcast; the
+    * identical frame when none exist. A null doc_id is kept, as the
+    * anti-join this replaces kept it. */
+  private def dropTombstoned(snap: Snapshot, df: DataFrame): DataFrame =
+    if (snap.dead.isEmpty) df
+    else df.where(!coalesce(col("doc_id").isin(snap.dead: _*), lit(false)))
 
   /** Candidate-set restriction shared by the filtered retrieval faces
     * (r20): `allowedIds` as one broadcast semi-join on doc_id, `mustNot`
     * TERMS as one more pruned bucket read (the excluded terms' postings,
     * doc ids only) anti-joined. Narrows which docs may be RETURNED,
     * never the corpus statistics — the Lucene filter-query convention. */
-  private def restrictDocs(s: SparkSession, dir: String, df: DataFrame,
+  private def restrictDocs(s: SparkSession, snap: Snapshot, df: DataFrame,
       allowedIds: Option[DataFrame], mustNot: Seq[String]): DataFrame = {
     val a = allowedIds.fold(df) { ids =>
       val al = ids.select(col(ids.columns(0)).as("__allowed")).distinct()
@@ -528,7 +571,7 @@ object TextIndex {
     }
     if (mustNot.isEmpty) a
     else {
-      val ex = postingsFor(s, dir, mustNot.distinct).select("doc_id").distinct()
+      val ex = postingsOf(s, snap, mustNot.distinct).select("doc_id").distinct()
       a.join(broadcast(ex), a("doc_id") === ex("doc_id"), "left_anti")
     }
   }
@@ -556,12 +599,13 @@ object TextIndex {
       GenStamp.requireRebuildComplete(s, dir, "text",
         "TextIndex.build (a crashed BUILD cannot be healed from segments)",
         Seq(postingsPath(dir), statsPath(dir)))
-      val ids = deltaIds(s, dir)
+      val snap = resolve(s, dir)
+      val ids = snap.deltas
       // tombstones alone are reason to compact: folding rewrites the base
       // minus the victims and clears the tombstone set
-      if (ids.isEmpty && tombstoneRows(s, dir).isEmpty) Nil
+      if (ids.isEmpty && snap.dead.isEmpty) Nil
       else {
-        val posts = dropTombstoned(s, dir, segmentRoots(s, dir)
+        val posts = dropTombstoned(snap, snap.roots
           .map(r => requireV2Postings(TableRead.read(s, s"$r/postings"), dir))
           // flat empty-segment husks carry the bucket as a data column
           // and partitioned segments as a partition column; rebuild it
@@ -569,7 +613,7 @@ object TextIndex {
           .map(df => df.select("term", "doc_id", "tf", "dl", "positions")
             .withColumn(Col, bucketOf(col("term"))))
           .reduce(_ unionByName _))
-        val stats = combinedStats(s, dir)
+        val stats = statsFrame(s, snap)
         val stage = s"$dir/_compact_stage"
         writeSegment(posts, stats, stage)
         writeManifest(s, dir, ids)
@@ -694,12 +738,10 @@ object TextIndex {
     * merging) and `positions` in postings (the phrase tier); an old
     * index maintained via ingestText's textIndexDir hook would otherwise
     * fail every search with a raw unresolved-column AnalysisException. */
-  private def requireV2Stats(df: DataFrame, dir: String): DataFrame = {
-    require(df.columns.contains("sum_dl"),
+  private def requireV2Stats(hasSumDl: Boolean, dir: String): Unit =
+    require(hasSumDl,
       s"TextIndex at $dir is a pre-r18 index (stats carry no sum_dl); " +
         "rebuild it with TextIndex.build over the source docs")
-    df
-  }
 
   private def requireV2Postings(df: DataFrame, dir: String): DataFrame = {
     require(df.columns.contains("positions"),
@@ -708,54 +750,32 @@ object TextIndex {
     df
   }
 
-  /** Exact combined (n, avgdl) over all live segments from their 1-row
-    * stats tables, MINUS the tombstoned docs' contributions: Σn, Σsum_dl
-    * and the victims' (count, Σdl) are all exact longs, so the single
-    * division equals a one-shot build WITHOUT the victims bit-for-bit.
-    * Reads segment-count + tombstone-count rows, never postings. */
-  private def combinedStats(s: SparkSession, dir: String): DataFrame = {
-    val live = segmentRoots(s, dir)
-      .map(r => requireV2Stats(TableRead.read(s, s"$r/stats"), dir))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
-    val net = tombstoneRows(s, dir) match {
-      case Some(t) =>
-        val dead = t.agg(count(lit(1)).as("n_dead"),
-          coalesce(sum(col("dl").cast("bigint")), lit(0L)).as("dl_dead"))
-        live.crossJoin(broadcast(dead))
-          .select((col("n") - col("n_dead")).as("n"),
-            (col("sum_dl") - col("dl_dead")).as("sum_dl"))
-      case None => live
-    }
-    net
-      // null mean over an all-empty index, matching deriveStats' avg
-      // (ANSI mode makes a bare /0 an error, not a null)
-      .withColumn("avgdl",
-        when(col("n") > 0, col("sum_dl").cast("double") / col("n")))
-      .select("n", "avgdl", "sum_dl")
-  }
+  /** A snapshot's exact live statistics as the one-row (n, avgdl,
+    * sum_dl) stats table — a local frame, so neither compaction's
+    * staged write nor a [[corpusStats]] reader scans a stats table. */
+  private def statsFrame(s: SparkSession, snap: Snapshot): DataFrame =
+    s.createDataFrame(Seq((snap.n, snap.meanDl, snap.sumDl))).toDF("n", "avgdl", "sum_dl")
 
   /** Public read of the index's exact live corpus statistics — one row
     * (n, avgdl, sum_dl), tombstones subtracted. What the streaming BM25
     * gate snapshots at stream construction (StreamingOps.bm25ScoreStream)
     * and dashboards poll; fails loudly on a half-built index. */
-  def corpusStats(s: SparkSession, dir: String): DataFrame = {
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
-    combinedStats(s, dir)
-  }
+  def corpusStats(s: SparkSession, dir: String): DataFrame =
+    statsFrame(s, snapshot(s, dir))
 
   /** The pruned postings read for a literal term set ACROSS all live
     * segments: the terms' bucket directories, listed and schema-resolved
     * on the driver ([[TableRead.bucketRead]]), + a pushed
     * `term IN (...)` row-group filter per segment, tombstoned docs
-    * dropped (one broadcast anti-join over the pruned rows — df counted
-    * downstream therefore shrinks exactly). Exact (not a superset): the
+    * dropped (the snapshot's literal id filter over the pruned rows — df
+    * counted downstream therefore shrinks exactly). Exact (not a superset): the
     * term equality is applied in full. */
-  def postingsFor(s: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
-    val segs = segmentRoots(s, dir).map(r => prunedSegment(s, r, terms))
-    dropTombstoned(s, dir, segs.reduce(_ unionByName _))
-  }
+  def postingsFor(s: SparkSession, dir: String, terms: Seq[String]): DataFrame =
+    postingsOf(s, resolve(s, dir), terms)
+
+  private def postingsOf(s: SparkSession, snap: Snapshot, terms: Seq[String]): DataFrame =
+    dropTombstoned(snap, snap.roots.map(r => prunedSegment(s, r, terms))
+      .reduce(_ unionByName _))
 
   private def prunedSegment(s: SparkSession, segRoot: String,
       terms: Seq[String]): DataFrame =
@@ -765,10 +785,18 @@ object TextIndex {
 
   /** The full postings union (batch fallback past [[MaxPruneTerms]]),
     * tombstoned docs dropped. */
-  private def allPostings(s: SparkSession, dir: String): DataFrame =
-    dropTombstoned(s, dir, segmentRoots(s, dir)
+  private def allPostings(s: SparkSession, snap: Snapshot): DataFrame =
+    dropTombstoned(snap, snap.roots
       .map(r => TableRead.read(s, s"$r/postings").drop(Col))
       .reduce(_ unionByName _))
+
+  /** The BM25 (k1 = 1.2, b = 0.75) term weight in the scan path's
+    * association order, with (N, avgdl) as the snapshot's literals —
+    * the same doubles the former stats cross-join fed in. */
+  private def bm25Weight(snap: Snapshot, dfc: Column): Column =
+    log((lit(snap.n).cast("double") - dfc + 0.5) / (dfc + 0.5) + 1.0) *
+      (col("tf") * 2.2) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / snap.avgdl))
 
   /** BM25 (k1 = 1.2, b = 0.75) top-k over the index — identical math,
     * association order and 4dp round as the scan path
@@ -789,8 +817,7 @@ object TextIndex {
     * filter on the matched count, scores unchanged. */
   def searchBm25(s: SparkSession, dir: String, terms: Seq[String],
       k: Int, mustNot: Seq[String] = Nil, matchAll: Boolean = false): DataFrame = {
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
+    val snap = snapshot(s, dir)
     // block-max pruned top-k (r20) for the plain disjunctive face: when
     // the bound arithmetic can be made EXACT (no tombstones — the
     // sidecar's per-term cnt sums then ARE the live df; no boolean
@@ -798,26 +825,21 @@ object TextIndex {
     // ranking), score only the doc-range blocks whose summed per-term
     // ceilings can still reach the k-th score. Bit-for-bit equal to the
     // unpruned plan (TextIndexSpec law + every indexed oracle row).
-    if (mustNot.isEmpty && !matchAll) blockMaxTopK(s, dir, terms, k) match {
+    if (mustNot.isEmpty && !matchAll) blockMaxTopK(s, snap, terms, k) match {
       case Some(pruned) => return pruned
       case None => ()
     }
-    val posts0 = postingsFor(s, dir, terms)
+    val posts0 = postingsOf(s, snap, terms)
     val dft = posts0.groupBy("term").agg(count(lit(1)).as("dfc"))
     val posts =
       if (mustNot.isEmpty) posts0
       else {
-        val ex = postingsFor(s, dir, mustNot.distinct)
+        val ex = postingsOf(s, snap, mustNot.distinct)
           .select("doc_id").distinct()
         posts0.join(broadcast(ex), posts0("doc_id") === ex("doc_id"), "left_anti")
       }
-    val stats = combinedStats(s, dir)
     val scored = posts.join(broadcast(dft), "term")
-      .crossJoin(broadcast(stats.drop("sum_dl")))
-      .withColumn("w",
-        log((col("n").cast("double") - col("dfc") + 0.5) / (col("dfc") + 0.5) + 1.0) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("w", bm25Weight(snap, col("dfc")))
       .groupBy("doc_id")
       .agg(round(sum("w"), 4).as("score"), count(lit(1)).as("matched"))
     (if (matchAll) scored.where(col("matched") === terms.distinct.length)
@@ -826,9 +848,10 @@ object TextIndex {
       .limit(k)
   }
 
-  /** Cap on the (term, block) rows [[blockMaxTopK]] collects: past it
-    * (a stopword-ish query touching most of the corpus) pruning cannot
-    * win anyway, so the search falls back to the one-pass plan. */
+  /** Cap on the distinct (term, block) pairs [[blockMaxTopK]] reads:
+    * past it (a stopword-ish query touching most of the corpus) pruning
+    * cannot win anyway, so the read stops and the search falls back to
+    * the one-pass plan. */
   val MaxPruneBlocks = 4096
 
   /** Block-max pruned BM25 top-k (r20, r19 verdict next-round #3) —
@@ -837,47 +860,66 @@ object TextIndex {
     * in tf and decreasing in dl, so ub = idf · g(max_tf, min_dl)), and
     * doc-range blocks share ids across terms/segments, so a block's
     * score ceiling is the plain SUM of its terms' bounds — computed
-    * driver-side from a df/512-sized read, no postings touched. Phase 1
-    * scores just enough best-ceiling blocks to cover k docs and learns
-    * the k-th exact score θ; the returned plan scores only blocks whose
-    * ceiling reaches θ − 1e-4 (one 4dp rounding step of guard, so a
-    * true score that rounds up to tie θ can never be lost). Excluded
-    * docs satisfy score ≤ ceiling < θ − 1e-4, hence rank strictly below
-    * the k-th after rounding — no tiebreak can resurrect them; the
-    * result is bit-for-bit the unpruned plan's (TextIndexSpec law; every
-    * indexed-search oracle row replays it in DuckDB at three SFs).
+    * driver-side from a df/512-sized read of the query terms' sidecar
+    * buckets ([[TableRead.localRows]], no job), no postings touched.
+    * Phase 1 scores just enough best-ceiling blocks to cover k docs and
+    * learns the k-th exact score θ; every other block whose ceiling
+    * reaches θ − 1e-4 (one 4dp rounding step of guard, so a true score
+    * that rounds up to tie θ can never be lost) is scored by the
+    * returned plan. Excluded docs satisfy score ≤ ceiling < θ − 1e-4,
+    * hence rank strictly below the k-th after rounding — no tiebreak
+    * can resurrect them.
+    *
+    * Each block is scored once: blocks are doc-disjoint, so a doc's
+    * score is the same in either phase, and `(score desc, doc_id asc)`
+    * is a total order, so the top k of phase 1's exact top-k rows
+    * (a local frame) united with the remaining blocks' scores is the top
+    * k of all of them. With no block left, phase 1's rows are the
+    * answer and collecting it runs no job. The result is bit-for-bit
+    * the unpruned plan's (TextIndexSpec law; every indexed-search
+    * oracle row replays it in DuckDB at three SFs).
     *
     * Applies only when exact: returns None (caller falls back) when any
     * segment predates the sidecar, when tombstones are live (the
     * sidecar's per-term Σcnt would overcount df), past
     * [[MaxPruneBlocks]], or when no query term is indexed. */
-  private def blockMaxTopK(s: SparkSession, dir: String, terms: Seq[String],
+  private def blockMaxTopK(s: SparkSession, snap: Snapshot, terms: Seq[String],
       k: Int): Option[DataFrame] = {
     lastPruneStats = None
-    if (terms.isEmpty || k <= 0) return None
-    val roots = segmentRoots(s, dir)
-    val fsys = hfs(s, dir)
-    if (!roots.forall(r => fsys.exists(new Path(s"$r/blockmax")))) return None
-    if (tombstoneRows(s, dir).isDefined) return None
+    if (terms.isEmpty || k <= 0 || snap.dead.nonEmpty) return None
+    val fsys = hfs(s, snap.dir)
+    if (!snap.roots.forall(r => fsys.exists(new Path(s"$r/blockmax")))) return None
     val dterms = terms.distinct
     val bs = dterms.map(bucketOfTerm).distinct
-    val bmRows = roots
-      .map(r => TableRead.bucketRead(s, s"$r/blockmax", Col, bs)
-        .where(col("term").isin(dterms: _*)))
-      .reduce(_ unionByName _)
-      // a doc-range block can span segments: bounds merge by max/min,
-      // counts add (segments are doc-disjoint)
-      .groupBy("term", "block_id")
-      .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"),
-        sum(col("cnt")).as("cnt"))
-      .limit(MaxPruneBlocks + 1).collect()
-    if (bmRows.isEmpty || bmRows.length > MaxPruneBlocks) return None
-    val st = combinedStats(s, dir).head()
-    val n = st.getLong(0)
-    val avgdl = st.getDouble(1)
+    // the wanted bucket leaves of every segment; a flat empty-segment
+    // husk is read whole (the term filter below is exact either way)
+    val dirs = snap.roots.flatMap(r =>
+      TableRead.bucketDirs(s, s"$r/blockmax", Col, bs).fold(Seq(s"$r/blockmax"))(_._1))
+    if (dirs.isEmpty) return None
+    val footer = TableRead.schemaOf(s, dirs.head)
+    val want = dterms.toSet
+    // (term, block) -> (max_tf, min_dl, cnt); a doc-range block can span
+    // segments: bounds merge by max/min, counts add (segments are
+    // doc-disjoint)
+    val bm = scala.collection.mutable.HashMap.empty[(String, Long), (Long, Int, Long)]
+    TableRead.localRows(s, dirs,
+        StructType(Seq("term", "block_id", "max_tf", "min_dl", "cnt").map(footer(_))),
+        Seq(org.apache.spark.sql.sources.In("term", dterms.toArray[Any]))) { rows =>
+      val live = rows.filter(r => want(r.getString(0)))
+      while (bm.size <= MaxPruneBlocks && live.hasNext) {
+        val r = live.next()
+        val key = (r.getString(0), r.getLong(1))
+        val (tf, dl, c) = (r.getLong(2), r.getInt(3), r.getLong(4))
+        bm(key) = bm.get(key).fold((tf, dl, c)) { case (tf0, dl0, c0) =>
+          (math.max(tf0, tf), math.min(dl0, dl), c0 + c) }
+      }
+    }
+    if (bm.isEmpty || bm.size > MaxPruneBlocks) return None
+    val n = snap.n
+    val avgdl = snap.meanDl.get
     // tombstone-free ⇒ Σcnt over a term's blocks IS its exact live df
-    val dfMap: Map[String, Long] = bmRows.groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(4)).sum }
+    val dfMap: Map[String, Long] = bm.toSeq.groupBy(_._1._1)
+      .map { case (t, rs) => t -> rs.map(_._2._3).sum }
     def idf(df: Long): Double =
       math.log((n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
     def ub(term: String, maxTf: Double, minDl: Double): Double =
@@ -886,13 +928,12 @@ object TextIndex {
     // per-block ceiling S(b) = Σ_t idf·g(max_tf, min_dl); cover(b) = a
     // lower bound on the distinct scorable docs in b (max over terms'
     // cnt — every doc a term counts WILL receive a score)
-    val perBlock: Seq[(Long, Double, Long)] = bmRows
-      .groupBy(_.getLong(1))
+    val perBlock: Seq[(Long, Double, Long)] = bm.toSeq
+      .groupBy(_._1._2)
       .map { case (b, rs) =>
         (b,
-          rs.map(r => ub(r.getString(0), r.getLong(2).toDouble,
-            r.getInt(3).toDouble)).sum,
-          rs.map(_.getLong(4)).max)
+          rs.map { case ((t, _), (tf, dl, _)) => ub(t, tf.toDouble, dl.toDouble) }.sum,
+          rs.map(_._2._3).max)
       }.toSeq.sortBy { case (b, ceil, _) => (-ceil, b) }
     // phase 1: just enough best-ceiling blocks to cover k docs
     val covered = perBlock.scanLeft(0L)(_ + _._3).tail
@@ -901,6 +942,9 @@ object TextIndex {
       case i  => i + 1
     })
     val p1Blocks = perBlock.take(p1Count).map(_._1)
+    // the query terms' pruned postings, resolved once for both phases
+    val posts = postingsOf(s, snap, dterms)
+    val dfLit = typedLit(dfMap)
     def scoreBlocks(blocks: Seq[Long]): DataFrame = {
       // coalesce adjacent blocks into doc-id ranges; the postings are
       // range-clustered by (bucket, term, doc_id), so these BETWEENs
@@ -913,29 +957,27 @@ object TextIndex {
       val pred = ranges.map { case (lo, hi) =>
         col("doc_id") >= lo * BlockWidth && col("doc_id") < hi * BlockWidth
       }.reduce(_ || _)
-      val dfLit = typedLit(dfMap)
-      postingsFor(s, dir, dterms).where(pred)
+      posts.where(pred)
         .withColumn("dfc", element_at(dfLit, col("term")))
-        .withColumn("w",
-          log((lit(n).cast("double") - col("dfc") + 0.5) / (col("dfc") + 0.5) + 1.0) *
-            (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+        .withColumn("w", bm25Weight(snap, col("dfc")))
         .groupBy("doc_id")
         .agg(round(sum("w"), 4).as("score"), count(lit(1)).as("matched"))
     }
-    val p1 = scoreBlocks(p1Blocks)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k).collect()
+    def topK(df: DataFrame) = df.orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    val p1Plan = topK(scoreBlocks(p1Blocks))
+    val p1 = p1Plan.collect()
     val theta =
       if (p1.length < k) Double.NegativeInfinity else p1.last.getDouble(1)
-    // competitive set: every block whose ceiling can still reach θ,
-    // with one 4dp rounding step of guard (θ is a rounded score; a true
-    // score in (θ − 1e-4, θ] rounds up to tie it)
-    val competitive = perBlock
-      .filter { case (_, ceil, _) => ceil >= theta - 1e-4 }.map(_._1)
-    val finalBlocks = (p1Blocks ++ competitive).distinct
-    lastPruneStats = Some((finalBlocks.length, perBlock.length))
-    Some(scoreBlocks(finalBlocks)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k))
+    // competitive set: every block phase 1 did not score whose ceiling
+    // can still reach θ, with one 4dp rounding step of guard (θ is a
+    // rounded score; a true score in (θ − 1e-4, θ] rounds up to tie it)
+    val scored = p1Blocks.toSet
+    val rest = perBlock.collect {
+      case (b, ceil, _) if ceil >= theta - 1e-4 && !scored(b) => b
+    }
+    lastPruneStats = Some((p1Blocks.length + rest.length, perBlock.length))
+    val exact = s.createDataFrame(java.util.Arrays.asList(p1: _*), p1Plan.schema)
+    Some(if (rest.isEmpty) exact else topK(scoreBlocks(rest).unionByName(exact)))
   }
 
   /** TEST/MEASUREMENT observability: (scored blocks, candidate blocks)
@@ -949,13 +991,11 @@ object TextIndex {
     * order as the scan path). */
   def searchTfIdf(s: SparkSession, dir: String, terms: Seq[String],
       k: Int): DataFrame = {
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
-    val posts = postingsFor(s, dir, terms)
+    val snap = snapshot(s, dir)
+    val posts = postingsOf(s, snap, terms)
     val dft = posts.groupBy("term").agg(count(lit(1)).as("dfc"))
-    val stats = combinedStats(s, dir)
-    posts.join(broadcast(dft), "term").crossJoin(broadcast(stats.drop("sum_dl")))
-      .withColumn("w", col("tf") * log(col("n").cast("double") / col("dfc")))
+    posts.join(broadcast(dft), "term")
+      .withColumn("w", col("tf") * log(lit(snap.n).cast("double") / col("dfc")))
       .groupBy("doc_id")
       .agg(round(sum("w"), 6).as("score"), count(lit(1)).as("matched"))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -1084,10 +1124,9 @@ object TextIndex {
       mustNot: Seq[String] = Nil): DataFrame = {
     require(phrase.nonEmpty, "searchPhrase: phrase must have at least one token")
     require(slop >= 0, s"searchPhrase: slop must be >= 0, got $slop")
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
-    val posts = restrictDocs(s, dir,
-      requireV2Postings(postingsFor(s, dir, phrase.distinct), dir),
+    val snap = snapshot(s, dir)
+    val posts = restrictDocs(s, snap,
+      requireV2Postings(postingsOf(s, snap, phrase.distinct), dir),
       allowedIds, mustNot)
     val perDoc = posts.groupBy("doc_id")
       .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
@@ -1134,8 +1173,7 @@ object TextIndex {
   def searchPhraseBatch(s: SparkSession, dir: String, queries: DataFrame,
       k: Int, allowedIds: Option[DataFrame] = None,
       mustNot: Seq[String] = Nil): DataFrame = {
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
+    val snap = snapshot(s, dir)
     val q = queries.select(col("qid"), col("pos"), col("term"))
     // slot contract validated up front (one tiny job over the bounded
     // query table): a gapped or duplicated slot list would otherwise
@@ -1151,9 +1189,9 @@ object TextIndex {
         s"0-based per qid; offending qids: ${bad.mkString(", ")}")
     val terms = q.select("term").distinct().limit(MaxPruneTerms + 1)
       .collect().map(_.getString(0)).toSeq
-    val posts = restrictDocs(s, dir, requireV2Postings(
-      if (terms.length <= MaxPruneTerms) postingsFor(s, dir, terms)
-      else allPostings(s, dir), dir), allowedIds, mustNot)
+    val posts = restrictDocs(s, snap, requireV2Postings(
+      if (terms.length <= MaxPruneTerms) postingsOf(s, snap, terms)
+      else allPostings(s, snap), dir), allowedIds, mustNot)
     val qlen = q.groupBy("qid")
       .agg(max(col("pos")).as("maxpos"), count(lit(1)).as("nterms"))
     val perDoc = posts.join(broadcast(q), "term")
@@ -1204,27 +1242,21 @@ object TextIndex {
     * ranking restricted to the allowed ids, re-cut at k. */
   def searchBatchBm25(s: SparkSession, dir: String, queries: DataFrame,
       k: Int, allowedIds: Option[DataFrame] = None): DataFrame = {
-    GenStamp.requireRebuildComplete(s, dir, "text", "TextIndex.build",
-      Seq(postingsPath(dir), statsPath(dir)))
+    val snap = snapshot(s, dir)
     val q = queries.select(col("qid"), col("term"))
     val terms = q.select("term").distinct().limit(MaxPruneTerms + 1)
       .collect().map(_.getString(0)).toSeq
     val posts =
-      if (terms.length <= MaxPruneTerms) postingsFor(s, dir, terms)
-      else allPostings(s, dir)
+      if (terms.length <= MaxPruneTerms) postingsOf(s, snap, terms)
+      else allPostings(s, snap)
     val m = posts.join(broadcast(q), "term")
     val dft = m.groupBy("qid", "term").agg(count(lit(1)).as("dfc"))
     val mAllowed = allowedIds.fold(m) { ids =>
       val a = ids.select(col(ids.columns(0)).as("__allowed")).distinct()
       m.join(broadcast(a), m("doc_id") === col("__allowed"), "left_semi")
     }
-    val stats = combinedStats(s, dir)
     val sc = mAllowed.join(dft, Seq("qid", "term"))
-      .crossJoin(broadcast(stats.drop("sum_dl")))
-      .withColumn("w",
-        log((col("n").cast("double") - col("dfc") + 0.5) / (col("dfc") + 0.5) + 1.0) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("w", bm25Weight(snap, col("dfc")))
       .groupBy("qid", "doc_id")
       .agg(round(sum("w"), 4).as("score"), count(lit(1)).as("matched"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1235,8 +1267,8 @@ object TextIndex {
   }
 
   /** Observability snapshot for an index root (r18): segment shape +
-    * exact corpus size from the 1-row stats tables (segment-count rows
-    * read, never postings) and a compaction recommendation at the
+    * exact corpus size from the search [[Snapshot]] (segment-count stats
+    * rows read on the driver, never postings; no Spark job) and a compaction recommendation at the
     * measured operating point — the merge-on-read search tax is linear
     * in LIVE SEGMENT COUNT (BASELINE.md, ScaleSmoke textidxseg), so
     * past `compactAt` live deltas the ~seconds-scale compact pays for
@@ -1247,17 +1279,16 @@ object TextIndex {
   def status(s: SparkSession, dir: String, compactAt: Int = 4): Status = {
     if (!exists(s, dir)) Status(exists = false, 0, 0L, compactRecommended = false)
     else {
-      val segs = deltaIds(s, dir).size
-      val n = combinedStats(s, dir).head().getLong(0)
+      val snap = resolve(s, dir)
+      val segs = snap.deltas.size
       // `docs` is the LIVE count (tombstones subtracted — what searches
       // serve); the tombstone count is reported separately so operators
       // see reclaimable bytes. The compaction recommendation stays keyed
       // on the segment count: that is the measured merge-on-read tax
-      // (BASELINE.md textidxseg); a tombstone costs one broadcast
-      // anti-join, cheap until the folded bytes matter.
-      val ts = tombstoneRows(s, dir).map(_.count()).getOrElse(0L)
-      Status(exists = true, segs, n, compactRecommended = segs >= compactAt,
-        tombstones = ts)
+      // (BASELINE.md textidxseg); a tombstone costs one entry in the
+      // searches' literal id filter, cheap until the folded bytes matter.
+      Status(exists = true, segs, snap.n, compactRecommended = segs >= compactAt,
+        tombstones = snap.dead.size.toLong)
     }
   }
 

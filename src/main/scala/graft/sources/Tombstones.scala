@@ -85,8 +85,13 @@ object Tombstones {
       // pre-fold generation carries across the swap
       val gen = GenStamp.read(s, tablePath)
       val hfs = fs(s, tablePath)
-      hfs.delete(new Path(tablePath), true)
-      hfs.rename(new Path(tmp), new Path(tablePath))
+      // the old table moves aside first and is deleted only once the
+      // rewrite is in place: a failed move throws with both on disk
+      val old = new Path(s"${tablePath}__compact_old")
+      hfs.delete(old, true)
+      FsMoves.move(hfs, new Path(tablePath), old)
+      FsMoves.move(hfs, new Path(tmp), new Path(tablePath))
+      hfs.delete(old, true)
       if (gen != 0L) GenStamp.stamp(s, tablePath, gen)
     }
 }

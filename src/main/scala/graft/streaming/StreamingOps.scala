@@ -899,7 +899,7 @@ object StreamingOps {
     * exact-dedup contract on an unbounded stream (global history requires
     * the batch path). Input needs `ts` and `text` columns. */
   def dedupByContent(docs: DataFrame, watermark: String = "1 hour"): DataFrame =
-    docs.withColumn("content_key", sha2(lower(trim(col("text"))), 256))
+    docs.withColumn("content_key", graft.operators.DedupOps.exactKey(col("text")))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("content_key")
 

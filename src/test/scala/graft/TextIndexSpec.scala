@@ -820,6 +820,31 @@ class TextIndexSpec extends AnyFunSuite {
       "live tombstones must force the unpruned fallback")
     assert(afterDel ===
       TextIndex.searchBm25(spark, sTwin, Seq("rare"), 5).collect().toSeq)
+    // live tombstones over base + delta (the unpruned plan, with the
+    // snapshot's tombstone filter and shrunk stats) == the pruned plan
+    // over a rebuild without the victims
+    val del = freshDir("bmxdel")
+    TextIndex.build(spark, del, docs.where(col("doc_id") % 2 === 0))
+    TextIndex.append(spark, del, docs.where(col("doc_id") % 2 === 1))
+    TextIndex.deleteFrom(spark, del, docs.where(col("doc_id") % 7 === 0).select("doc_id"))
+    val clean = freshDir("bmxclean")
+    val live = docs.where(col("doc_id") % 7 =!= 0)
+    TextIndex.build(spark, clean, live.where(col("doc_id") % 2 === 0))
+    TextIndex.append(spark, clean, live.where(col("doc_id") % 2 === 1))
+    for (terms <- Seq(Seq("query", "join", "table"), Seq("spark")); k <- Seq(1, 10, 25)) {
+      val unpruned = TextIndex.searchBm25(spark, del, terms, k).collect().toSeq
+      assert(TextIndex.lastPruneStats.isEmpty, "live tombstones must take the unpruned plan")
+      val pruned = TextIndex.searchBm25(spark, clean, terms, k).collect().toSeq
+      assert(TextIndex.lastPruneStats.isDefined, s"pruned path must engage for $terms")
+      assert(unpruned === pruned, s"tombstoned unpruned diverged from pruned for $terms k=$k")
+    }
+    // an empty index: no block to score, and both plans answer empty
+    val empty = freshDir("bmxempty")
+    TextIndex.build(spark, empty, docs.where(lit(false)))
+    assert(TextIndex.searchBm25(spark, empty, Seq("query", "join"), 5).collect().isEmpty)
+    assert(TextIndex.lastPruneStats.isEmpty, "an empty index has no block to prune")
+    assert(TextIndex.searchBm25(spark, empty, Seq("query"), 5, matchAll = true)
+      .collect().isEmpty)
   }
 
   test("boolean BM25 faces: mustNot == full ranking minus excluded docs; matchAll == matched filter") {
@@ -1109,5 +1134,140 @@ class TextIndexSpec extends AnyFunSuite {
       TextIndex.searchBm25(spark, oneshot, Seq("query", "join", "table"), 10).collect().toSeq)
     assert(phrase.toSeq ===
       TextIndex.searchPhrase(spark, oneshot, Seq("query", "join"), 10).collect().toSeq)
+  }
+
+  test("localRows == the file source's rows: stats, tombstones, blockmax leaves, flat husk") {
+    import graft.sources.TableRead
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    val dir = freshDir("localrows")
+    TextIndex.build(spark, dir, docs.where(col("doc_id") % 2 === 0))
+    TextIndex.append(spark, dir, docs.where(col("doc_id") % 2 === 1))
+    TextIndex.deleteFrom(spark, dir, Seq(2L, 3L, 4L).toDF("id"))
+    TextIndex.deleteFrom(spark, dir, Seq(3L).toDF("id"))
+    val husk = freshDir("localrowshusk")
+    TextIndex.build(spark, husk, docs.where(lit(false)))
+    def local(dirs: Seq[String], schema: StructType,
+        filters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Seq[String] =
+      TableRead.localRows(spark, dirs, schema, filters)(_.map(_.toString).toList).sorted
+    for (t <- Seq(TextIndex.statsPath(dir), s"$dir/deltas/1/stats",
+        TextIndex.tombstonesPath(dir), TextIndex.statsPath(husk))) {
+      val read = spark.read.parquet(t)
+      assert(local(Seq(t), TableRead.schemaOf(spark, t)) ===
+        read.collect().map(_.toString).sorted.toSeq, t)
+    }
+    // several tables under one reader, a column subset, a pushed filter
+    // the caller then applies exactly
+    val terms = Seq("query", "join", "table")
+    val bs = terms.map(TextIndex.bucketOfTerm).distinct
+    val leaves = Seq(dir, s"$dir/deltas/1").flatMap(r =>
+      TableRead.bucketDirs(spark, s"$r/blockmax", TextIndex.Col, bs).get._1)
+    val cols = Seq("term", "block_id", "cnt")
+    val sch = StructType(cols.map(TableRead.schemaOf(spark, leaves.head)(_)))
+    val got = TableRead.localRows(spark, leaves, sch,
+        Seq(org.apache.spark.sql.sources.In("term", terms.toArray[Any]))) {
+      _.filter(r => terms.contains(r.getString(0))).map(_.toString).toList
+    }.sorted
+    val want = Seq(dir, s"$dir/deltas/1")
+      .map(r => spark.read.parquet(s"$r/blockmax").where(col(TextIndex.Col).isin(bs: _*)))
+      .reduce(_ unionByName _)
+      .where(col("term").isin(terms: _*)).select(cols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    assert(want.nonEmpty && got === want, "blockmax leaves")
+    // the flat husk's blockmax carries the bucket as data; reading a
+    // subset of its columns is an empty read, not an error
+    assert(local(Seq(s"$husk/blockmax"), sch).isEmpty)
+    // a caller may stop early; the reader is closed either way
+    assert(TableRead.localRows(spark, leaves, sch)(_.take(2).size) === 2)
+  }
+
+  /** True when `e` or a cause says a file the plan listed is gone. */
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists { c =>
+      c.isInstanceOf[java.io.FileNotFoundException] ||
+        Option(c.getMessage).exists(m => m.contains("FILE_NOT_EXIST") ||
+          m.contains("does not exist"))
+    }
+
+  test("a search planned before a compaction answers the pre-compaction top-k or fails loudly, never a mix") {
+    val dir = freshDir("snapswap")
+    TextIndex.build(spark, dir, docs.where(col("doc_id") % 4 === 0))
+    for (r <- 1 to 3) TextIndex.append(spark, dir, docs.where(col("doc_id") % 4 === r))
+    val terms = Seq("query", "join", "table")
+    val phrase = Seq("join", "order")
+    val searches: Seq[(String, () => DataFrame)] =
+      Seq(1, 10, 25).map(k => s"bm25 k=$k" -> (() => TextIndex.searchBm25(spark, dir, terms, k))) :+
+        ("phrase" -> (() => TextIndex.searchPhrase(spark, dir, phrase, 10)))
+    val pre = searches.map(_._2().collect().toSeq)
+    assert(pre.forall(_.nonEmpty), "fixture defect: a search found nothing")
+    val planned = searches.map(_._2())
+    assert(TextIndex.compactTextIndex(spark, dir) === Seq(1L, 2L, 3L))
+    val outcomes = searches.map(_._1).zip(planned).zip(pre).map { case ((what, df), want) =>
+      scala.util.Try(df.collect().toSeq) match {
+        case scala.util.Success(got) =>
+          assert(got === want, s"$what: a search planned before the compaction mixed generations")
+          "pre"
+        case scala.util.Failure(e) =>
+          assert(missingFile(e), s"$what: failed, but not on a missing file: $e")
+          "loud"
+      }
+    }
+    // the phrase plan reads the folded deltas' postings, which are gone
+    assert(outcomes.last === "loud", outcomes.toString)
+    // and a search planned after the compaction answers as before it
+    assert(searches.map(_._2().collect().toSeq) === pre)
+  }
+
+  test("BM25, phrase, tf-idf and batch-BM25 searches scan no stats, blockmax or tombstones table") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val clean = freshDir("noside")
+    TextIndex.build(spark, clean, docs.where(col("doc_id") % 4 === 0))
+    for (r <- 1 to 3) TextIndex.append(spark, clean, docs.where(col("doc_id") % 4 === r))
+    val dead = freshDir("nosidedel")
+    TextIndex.build(spark, dead, docs.where(col("doc_id") % 2 === 0))
+    TextIndex.append(spark, dead, docs.where(col("doc_id") % 2 === 1))
+    TextIndex.deleteFrom(spark, dead, docs.where(col("doc_id") % 7 === 0).select("doc_id"))
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case r: LogicalRelation => r.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.foreach(p => scanned.add(p.toString))
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def scans(body: => Unit): Seq[String] = {
+      scanned.clear()
+      spark.listenerManager.register(listener)
+      try {
+        body
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      scala.jdk.CollectionConverters.CollectionHasAsScala(scanned).asScala.toSeq
+    }
+    val qs = Seq((1L, "query"), (1L, "join"), (2L, "spark")).toDF("qid", "term")
+    for (dir <- Seq(clean, dead)) {
+      val seen = scans {
+        TextIndex.searchBm25(spark, dir, Seq("query", "join", "table"), 10).collect()
+        TextIndex.searchBm25(spark, dir, Seq("query"), 10, mustNot = Seq("slow")).collect()
+        TextIndex.searchPhrase(spark, dir, Seq("join", "order"), 10).collect()
+        TextIndex.searchTfIdf(spark, dir, Seq("query", "join"), 10).collect()
+        TextIndex.searchBatchBm25(spark, dir, qs, 10).collect()
+        TextIndex.status(spark, dir)
+        TextIndex.corpusStats(spark, dir).collect()
+      }
+      assert(seen.exists(_.contains("/postings")), s"the listener saw no postings scan: $seen")
+      val side = seen.filter(p => Seq("/stats", "/blockmax", "/tombstones").exists(p.contains))
+      assert(side.isEmpty, s"$dir: searches scanned side tables:\n${side.mkString("\n")}")
+    }
+    // positive control: a plain read of a stats table is seen
+    assert(scans(spark.read.parquet(TextIndex.statsPath(clean)).collect())
+      .exists(_.contains("/stats")))
   }
 }
