@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.TableWrite.TableWriteOps
 import graft.{Q, Tables}
 import graft.functions.{BloomGate, GraftFunctions}
 import graft.sources.IdBuckets
@@ -35,15 +36,22 @@ object DedupOps {
   private[graft] def shingleExpr(drop: Int): String =
     s"array_distinct(graft_ngrams(toks, 3, $drop))"
 
-  /** Original + perturbed-copy corpus: (doc_id, source, sh) with distinct
-    * 3-gram shingle sets; copies drop the last 3 tokens. */
+  /** Keeps the rows whose [[shingleExpr]]`(drop)` is non-empty, by their
+    * token count: a filter on `size(sh)` itself is pushed below the
+    * shingle projection and runs the kernel a second time per row. */
+  private[graft] def hasShingles(drop: Int): Column = size(col("toks")) >= 3 + drop
+
+  /** Original + perturbed-copy corpus: (doc_id, source, sh) with distinct,
+    * non-empty 3-gram shingle sets; copies drop the last 3 tokens. */
   private[graft] def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val base = Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
-    val orig = base.select(col("doc_id"), col("source"), expr(shingleExpr(0)).as("sh"))
-    val variant = base.select((col("doc_id") + 1000000).as("doc_id"), col("source"),
-      expr(shingleExpr(3)).as("sh"))
+    val orig = base.where(hasShingles(0))
+      .select(col("doc_id"), col("source"), expr(shingleExpr(0)).as("sh"))
+    val variant = base.where(hasShingles(3))
+      .select((col("doc_id") + 1000000).as("doc_id"), col("source"),
+        expr(shingleExpr(3)).as("sh"))
     orig.unionByName(variant)
   }
 
@@ -195,7 +203,7 @@ object DedupOps {
         col("bucket") === col("bucket_b") && col("da") < col("db"))
       .select("da", "db").distinct()
     // refine candidates with true shingle-set Jaccard
-    val shs = nearDupCorpus(s, d).where(size(col("sh")) > 0)
+    val shs = nearDupCorpus(s, d)
     cands
       .join(shs.select(col("doc_id").as("da"), col("sh").as("sha")), "da")
       .join(shs.select(col("doc_id").as("db"), col("sh").as("shb")), "db")
@@ -286,7 +294,7 @@ object DedupOps {
     import s.implicits._
     Seq((k, bands, graft.sources.IndexMeta.GroupedLayout))
       .toDF("k", "bands", "layout")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
     graft.sources.GenStamp.completeRebuild(s, dir,
       Seq(s"$dir/cbuckets", s"$dir/pbands"))
   }
@@ -605,8 +613,8 @@ object DedupOps {
       // checkpoint truncates lineage to a LogicalRDD, so the parquet
       // scan under it is invisible to Plans' pushdown audit for this
       // query (the scan-adjacent filter here is on a computed column —
-      // size(sh) — which is non-pushable by shape anyway).
-      val u = nearDupCorpus(s, d).where(size(col("sh")) > 0).localCheckpoint(false)
+      // the token count — which is non-pushable by shape anyway).
+      val u = nearDupCorpus(s, d).localCheckpoint(false)
       val ex = u.select(col("doc_id"), col("source"), size(col("sh")).as("len"),
         explode(col("sh")).as("g"))
       val freq = ex.groupBy("g").agg(count(lit(1)).as("df_g"))
@@ -655,7 +663,7 @@ object DedupOps {
       // same corpus barrier as q_dedup_ngram_jaccard (three consumers
       // with different plan shapes: the A-prefix explode, the B posting
       // explode, and both refine sides)
-      val u = nearDupCorpus(s, d).where(size(col("sh")) > 0).localCheckpoint(false)
+      val u = nearDupCorpus(s, d).localCheckpoint(false)
       val ex = u.select(col("doc_id"), col("source"), size(col("sh")).as("len"),
         explode(col("sh")).as("g"))
       val freq = ex.groupBy("g").agg(count(lit(1)).as("df_g"))
@@ -746,8 +754,8 @@ object DedupOps {
       GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
+        .where(hasShingles(0))
         .withColumn("sh", expr(shingleExpr(0)))
-        .where(size(col("sh")) > 0)
         .select(col("doc_id"),
           expr("array_min(transform(sh, t -> xxhash64(t)))").as("fingerprint"),
           size(col("sh")).as("n_shingles"))

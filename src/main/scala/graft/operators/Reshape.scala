@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.TableWrite.TableWriteOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -115,7 +116,7 @@ object Reshape {
       li.where(col("l_orderkey") % 2 === 0)
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n_rows"), sum("qty").as("total_qty"))
-        .write.mode("overwrite").parquet(store)
+        .tableWrite.mode("overwrite").parquet(store)
       val state = s.read.parquet(store)
       val delta = li.where(col("l_orderkey") % 2 === 1)
         .groupBy("l_suppkey")

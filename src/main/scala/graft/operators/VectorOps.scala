@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.TableWrite.TableWriteOps
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -368,8 +369,8 @@ object VectorOps {
     // rebuild fence (GenStamp): a crash between the overwrites would
     // leave a new codebook against old postings — silent recall loss
     graft.sources.GenStamp.beginRebuild(s, dir)
-    cb.write.mode("overwrite").parquet(s"$dir/codebook")
-    postings.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
+    cb.tableWrite.mode("overwrite").parquet(s"$dir/codebook")
+    postings.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
     // build-time assignment-distortion snapshot (r18): one tiny row the
     // drift monitor (ivfDriftStats) compares against after frozen-
     // codebook appends — without it, recall degradation under
@@ -379,7 +380,7 @@ object VectorOps {
     distortionStats(assignmentDistortion(
         readCellPartitioned(s, s"$dir/postings"),
         s.read.parquet(s"$dir/codebook")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/buildstats")
+      .coalesce(1).tableWrite.mode("overwrite").parquet(s"$dir/buildstats")
     graft.sources.GenStamp.completeRebuild(s, dir,
       Seq(s"$dir/codebook", s"$dir/postings", s"$dir/buildstats"))
   }
@@ -475,15 +476,15 @@ object VectorOps {
         "rebuild with writeIvfIndex over a source corpus instead")
     val (cb, reassigned) = ivfIndex(corpus, k, iters)
     val stage = retrainStagePath(dir)
-    cb.write.mode("overwrite").parquet(s"$stage/codebook")
-    reassigned.write.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
+    cb.tableWrite.mode("overwrite").parquet(s"$stage/codebook")
+    reassigned.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
     // the drift snapshot is computed from the STAGED tables (they are
     // exactly what the swap publishes), so the monitor's baseline
     // describes what readers will see
     distortionStats(assignmentDistortion(
         readCellPartitioned(s, s"$stage/postings"),
         s.read.parquet(s"$stage/codebook")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/buildstats")
+      .coalesce(1).tableWrite.mode("overwrite").parquet(s"$stage/buildstats")
     writeRetrainManifest(s, dir)
     maybeFailRetrain(1)
     graft.sources.GenStamp.beginRebuild(s, dir)
@@ -515,18 +516,9 @@ object VectorOps {
   /** Atomic (tmp-then-rename) stage-complete marker: written only after
     * all three staged tables committed, so manifest-present means the
     * stage is publishable as-is. Content is irrelevant. */
-  private def writeRetrainManifest(s: SparkSession, dir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fsys = hfs(s, dir)
-    val qdir = fsys.makeQualified(new org.apache.hadoop.fs.Path(dir))
-    val tmp = new org.apache.hadoop.fs.Path(qdir,
-      s"_retrain_manifest.tmp.${ProcessHandle.current.pid}")
-    val out = fsys.create(tmp, true)
-    try out.write('1') finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(qdir.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(qdir, "_retrain_manifest"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def writeRetrainManifest(s: SparkSession, dir: String): Unit =
+    graft.sources.TableWrite.replaceFile(s,
+      new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), Array('1'.toByte))
 
   /** Idempotent tail of a staged retrain: swap each staged table into
     * place (skip tables the stage no longer holds — already moved),
@@ -929,9 +921,9 @@ object VectorOps {
     val s = e.sparkSession
     // rebuild fence: three tables must agree (see writeIvfIndex)
     graft.sources.GenStamp.beginRebuild(s, dir)
-    coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-    pqcb.write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-    codes.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    coarse.tableWrite.mode("overwrite").parquet(s"$dir/coarse")
+    pqcb.tableWrite.mode("overwrite").parquet(s"$dir/pq_codebooks")
+    codes.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
     graft.sources.GenStamp.completeRebuild(s, dir,
       Seq(s"$dir/coarse", s"$dir/pq_codebooks", s"$dir/codes"))
   }
@@ -1012,7 +1004,7 @@ object VectorOps {
     requireBatchDim(batch, cb.select(size(col("centroid"))).head().getInt(0), "IVF")
     rankCells(batch, cb)
       .select(expr("ranked[0].cl").as("cell"), col("vec_id"), col("label"), col("embedding"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/postings")
+      .tableWrite.mode("append").partitionBy("cell").parquet(s"$dir/postings")
   }
 
   /** Incrementally append to a persisted PQ index: assign-only encode of
@@ -1039,7 +1031,7 @@ object VectorOps {
       .select(col("vec_id"), col("label"), col("j"), expr("ranked[0].cl").as("code"))
       .groupBy("vec_id", "label")
       .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
-      .write.mode("append").parquet(s"$dir/codes")
+      .tableWrite.mode("append").parquet(s"$dir/codes")
   }
 
   /** Incrementally append to a persisted IVFADC index: frozen coarse
@@ -1074,7 +1066,7 @@ object VectorOps {
       .groupBy("vec_id", "label", "cell")
       .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
       .select(col("cell"), col("vec_id"), col("label"), col("codes"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+      .tableWrite.mode("append").partitionBy("cell").parquet(s"$dir/codes")
   }
 
   /** Delete vectors from a persisted IVF index: an O(ids) tombstone
@@ -1116,13 +1108,12 @@ object VectorOps {
       val table = readCellPartitioned(s, path)
       val affected = table.join(broadcast(t), table("vec_id") === t("id"), "left_semi")
         .select("cell").distinct().collect().map(_.getString(0)).toSeq
-      val hfs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val hfs = graft.sources.TableWrite.fs(s, new org.apache.hadoop.fs.Path(path))
       if (affected.nonEmpty) {
         val tmp = s"${path}__compact_tmp"
         table.where(col("cell").isin(affected: _*))
           .join(broadcast(t), table("vec_id") === t("id"), "left_anti")
-          .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+          .tableWrite.mode("overwrite").partitionBy("cell").parquet(tmp)
         graft.sources.FsMoves.swapPartitions(hfs, path, tmp, affected.map(c => s"cell=$c"))
       }
       graft.sources.Tombstones.clear(s, dir)
@@ -1163,8 +1154,8 @@ object VectorOps {
     val s = e.sparkSession
     // rebuild fence: codes encode against THESE codebooks (see writeIvfIndex)
     graft.sources.GenStamp.beginRebuild(s, dir)
-    cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
+    cb.tableWrite.mode("overwrite").parquet(s"$dir/codebooks")
+    codes.tableWrite.mode("overwrite").parquet(s"$dir/codes")
     graft.sources.GenStamp.completeRebuild(s, dir,
       Seq(s"$dir/codebooks", s"$dir/codes"))
   }
@@ -2084,7 +2075,7 @@ object VectorOps {
     import s.implicits._
     Seq((nPlanes, bands, dim, seed, graft.sources.IndexMeta.GroupedLayout))
       .toDF("n_planes", "bands", "dim", "seed", "layout")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
     graft.sources.GenStamp.completeRebuild(s, dir,
       Seq(s"$dir/cbuckets", s"$dir/pbands"))
   }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,7 +50,7 @@ object Scale {
   /** Hive-style partitioned parquet layout: readers prune whole
     * directories on the partition key (PartitionFilters in the scan). */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
+    df.tableWrite.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
   /** Bucketed layout: co-locates join/agg keys so equal-bucketed joins
     * skip their shuffle entirely. Table-catalog based (bucketing metadata
@@ -58,6 +59,8 @@ object Scale {
     * in-query layouts); None keeps the default warehouse location. */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
       path: Option[String] = None): Unit = {
+    // plain df.write: saveAsTable stores writer options as table
+    // properties, so TableWrite's filesystem options would outlive it
     val w = df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet")
@@ -77,7 +80,7 @@ object Scale {
     val files = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
     spark.read.parquet(srcPath)
       .repartition(files)
-      .write.mode(SaveMode.Overwrite).parquet(dstPath)
+      .tableWrite.mode(SaveMode.Overwrite).parquet(dstPath)
     files
   }
 
@@ -118,7 +121,7 @@ object Scale {
           .as("text"),
         col("lang"), col("source"))
       .withColumn("n_chars", length(col("text")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
+      .tableWrite.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
 
     reps(spark.read.parquet(s"$srcDir/embeddings.parquet"))
       .select(
@@ -126,7 +129,7 @@ object Scale {
         expr("concat(slice(embedding, rep + 1, size(embedding) - rep), slice(embedding, 1, rep))")
           .as("embedding"),
         col("label"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/embeddings.parquet")
+      .tableWrite.mode(SaveMode.Overwrite).parquet(s"$outDir/embeddings.parquet")
 
     // raw read: TIMESTAMP(NANOS) surfaces as LONG under nanosAsLong, and
     // writes back as INT64 — Tables.events handles both identically
@@ -137,7 +140,7 @@ object Scale {
         col("ts"),
         (col("user_id") * f + col("rep")).as("user_id"),
         col("event_type"), col("value"), col("props"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/events.parquet")
+      .tableWrite.mode(SaveMode.Overwrite).parquet(s"$outDir/events.parquet")
 
     val conf = spark.sparkContext.hadoopConfiguration
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
@@ -179,7 +182,7 @@ object Scale {
     markRebuild(df.sparkSession, path)
     df.repartitionByRange(partitions, col(key))
       .sortWithinPartitions(key)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+      .tableWrite.mode(SaveMode.Overwrite).parquet(path)
     writeManifest(df.sparkSession, path, key)
     unmarkRebuild(df.sparkSession, path)
   }
@@ -196,7 +199,7 @@ object Scale {
 
   private def markRebuild(spark: SparkSession, path: String): Unit = {
     val p = rebuildMarkerPath(path)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    val out = graft.sources.TableWrite.fs(spark, p).create(p, true)
     try out.write('1') finally out.close()
   }
 
@@ -252,7 +255,7 @@ object Scale {
         s"writeZOrdered: $keyA/$keyB contain only nulls — null keys are " +
           "not z-orderable; filter or fill them first")
       markRebuild(df.sparkSession, path)
-      df.write.mode(SaveMode.Overwrite).parquet(path)
+      df.tableWrite.mode(SaveMode.Overwrite).parquet(path)
       writeManifest2(df.sparkSession, path, keyA, keyB)
       unmarkRebuild(df.sparkSession, path)
       return
@@ -268,7 +271,7 @@ object Scale {
       .repartitionByRange(partitions, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+      .tableWrite.mode(SaveMode.Overwrite).parquet(path)
     writeManifest2(df.sparkSession, path, keyA, keyB)
     unmarkRebuild(df.sparkSession, path)
   }
@@ -289,7 +292,7 @@ object Scale {
   def writeManifest2(spark: SparkSession, path: String,
       keyA: String, keyB: String): Unit =
     fileStats2(spark, path, keyA, keyB).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(manifestPath2(path))
+      .tableWrite.mode(SaveMode.Overwrite).parquet(manifestPath2(path))
 
   /** Box-predicate scan pruned by the 2-D zone map: read only files whose
     * (a, b) bounding box intersects the query box, then apply the exact
@@ -333,7 +336,7 @@ object Scale {
     * deleted manifest degrades to correct-but-slower, never to wrong. */
   def writeManifest(spark: SparkSession, path: String, key: String): Unit =
     fileStats(spark, path, key).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
+      .tableWrite.mode(SaveMode.Overwrite).parquet(manifestPath(path))
 
   /** File-level zone map: one row per parquet file with the file's
     * min/max/count of `key` — the ANALYZE-style skipping statistics an
@@ -533,7 +536,7 @@ object Scale {
       s.read.parquet(s"$d/lineitem.parquet")
         .select("l_returnflag", "l_quantity", "l_extendedprice")
         .repartition(48)
-        .write.mode(SaveMode.Overwrite).parquet(s"$run/frag")
+        .tableWrite.mode(SaveMode.Overwrite).parquet(s"$run/frag")
       compact(s, s"$run/frag", s"$run/folded", targetBytesPerFile = 64L << 20)
       def nFiles(p: String): Long = s.read.parquet(p)
         .select(expr("count(DISTINCT _metadata.file_path)").as("n")).head().getLong(0)

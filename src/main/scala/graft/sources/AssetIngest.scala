@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import graft.sources.TableWrite.TableWriteOps
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,7 +156,7 @@ object AssetIngest {
     * is closed without caller discipline). */
   private def landIdempotent(df: DataFrame, path: String, batchId: String): Unit = {
     df.withColumn(LandCol, lit(batchId))
-      .write.mode("overwrite")
+      .tableWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(LandCol)
       .parquet(path)
@@ -233,9 +234,8 @@ object AssetIngest {
       targetBytesPerFile: Long = 128L << 20): Seq[String] = WriterLock.withLock(path) {
     require(targetBytesPerFile > 0,
       s"targetBytesPerFile must be > 0, got $targetBytesPerFile")
-    val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = TableWrite.fs(s, root)
     if (!fs.exists(root)) return Seq.empty
     def partDirs(): Map[String, Path] = fs.listStatus(root)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$LandCol="))
@@ -277,16 +277,12 @@ object AssetIngest {
       .drop(LandCol)
       .repartition(files)
       .withColumn(LandCol, lit(target))
-      .write.mode("append").partitionBy(LandCol).parquet(path)
+      .tableWrite.mode("append").partitionBy(LandCol).parquet(path)
     maybeFailCompact(1)
     // complete marker: temp-then-atomic-rename — a torn id list would
     // leave sources the heal pass never deletes (permanent duplicates)
-    val qdir = fs.makeQualified(new Path(root, s"$LandCol=$target"))
-    val tmp = new Path(qdir, s"$FoldCompleteMarker.tmp.${ProcessHandle.current.pid}")
-    val out = fs.create(tmp, true)
-    try out.write(toFold.mkString("\n").getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(qdir.toUri, conf)
-      .rename(tmp, new Path(qdir, FoldCompleteMarker), Options.Rename.OVERWRITE)
+    TableWrite.replaceFile(s, new Path(new Path(root, s"$LandCol=$target"), FoldCompleteMarker),
+      toFold.mkString("\n").getBytes("UTF-8"))
     maybeFailCompact(2)
     toFold.foreach(id => fs.delete(parts(id), true))
     s.catalog.refreshByPath(path)
@@ -370,9 +366,8 @@ object AssetIngest {
     require(ids.columns.length == 1,
       s"takedown ids must be a single-column frame, got ${ids.columns.mkString(",")}")
     healTakedown(s, path)
-    val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = TableWrite.fs(s, root)
     // "no landed table" must include the dir the WriterLock itself just
     // created to hold its `_graft_writer_lock` file: a root with no
     // ingest_batch= partitions has nothing to take down, and reading it
@@ -395,7 +390,7 @@ object AssetIngest {
     // files are never opened, let alone rewritten
     val base = landed.where(col(LandCol).isin(affected.toIndexedSeq: _*))
     base.join(broadcast(t), base(idCol) === t("__victim"), "left_anti")
-      .write.mode("overwrite").partitionBy(LandCol).parquet(takedownTmp(path))
+      .tableWrite.mode("overwrite").partitionBy(LandCol).parquet(takedownTmp(path))
     maybeFailTakedown(1)
     val trash = new Path(takedownTrash(path))
     fs.mkdirs(trash)
@@ -512,7 +507,7 @@ object AssetIngest {
         // already-deleted set finds zero rows here — absorbed by the
         // per-(takedown_id, keys) max on read)
         if (stats.limit(1).count() > 0)
-          stats.coalesce(1).write.mode("append").parquet(s"$sd/takedowns")
+          stats.coalesce(1).tableWrite.mode("append").parquet(s"$sd/takedowns")
       }
     }
     maybeFailComposed(1)
@@ -909,9 +904,8 @@ object AssetIngest {
         col("band") === col("band_b") && col("bucket") === col("bucket_b") &&
           col("da") < col("db"))
       .select("da", "db").distinct()
-    val shs = valid.select(col("doc_id"),
-        expr(DedupOps.shingleExpr(0)).as("sh"))
-      .where(size(col("sh")) > 0)
+    val shs = valid.where(DedupOps.hasShingles(0))
+      .select(col("doc_id"), expr(DedupOps.shingleExpr(0)).as("sh"))
     val inBatchLosers = cands
       .join(shs.select(col("doc_id").as("da"), col("sh").as("sha")), "da")
       .join(shs.select(col("doc_id").as("db"), col("sh").as("shb")), "db")

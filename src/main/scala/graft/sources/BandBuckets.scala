@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,7 +105,7 @@ object BandBuckets {
     df.withColumn(Col, partOf(col(bandCol), col(bucketCol)))
       .repartitionByRange(col(Col), col(bucketCol))
       .sortWithinPartitions(col(Col), col(bucketCol))
-      .write.mode(mode).partitionBy(Col).parquet(path)
+      .tableWrite.mode(mode).partitionBy(Col).parquet(path)
     dropIfPartless(df.sparkSession, path)
     // the path may have held a previous generation of the table (the
     // upgrade/rebuild flow) — drop any cached file listing so the next
@@ -184,9 +185,8 @@ object BandBuckets {
         base.join(broadcast(t), base(idCol) === t("id"), "left_anti")
           .repartitionByRange(col(Col), col(bucketCol))
           .sortWithinPartitions(col(Col), col(bucketCol))
-          .write.mode("overwrite").partitionBy(Col).parquet(tmp)
-        FsMoves.swapPartitions(
-          new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration),
+          .tableWrite.mode("overwrite").partitionBy(Col).parquet(tmp)
+        FsMoves.swapPartitions(TableWrite.fs(s, new Path(tablePath)),
           tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
         dropIfPartless(s, tablePath)
         s.catalog.refreshByPath(tablePath)

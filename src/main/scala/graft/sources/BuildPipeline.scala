@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object BuildPipeline {
     val computed = compute(missing).localCheckpoint()
     val n = computed.count()
     if (n > 0) {
-      computed.write.mode(SaveMode.Append)
+      computed.tableWrite.mode(SaveMode.Append)
         .partitionBy(keys: _*)
         .parquet(dataPath)
       Ledger.record(computed.select(keys.map(col): _*).distinct(), ledgerPath, batchId)

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.plans.Scale
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -126,7 +127,7 @@ object CurationPipeline {
     * global order with zero further shuffling. */
   def writeShards(layout: DataFrame, path: String): Unit =
     layout.repartition(col("shard")).sortWithinPartitions("shard", "pos")
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+      .tableWrite.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** MULTIMODAL pair curation — the aligned (text, image) training-pair
     * corpus a vision-language run consumes, composed from the same

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Append-GENERATION fencing for index families whose logical append
@@ -73,16 +73,9 @@ object GenStamp {
     * empty result (r16 advice, medium). An absent table reads as
     * generation 0 either way, so skipping the stamp loses nothing. */
   def stamp(s: SparkSession, tablePath: String, gen: Long): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
     val dir = new Path(tablePath)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return
-    val qdir = fs.makeQualified(dir)
-    val tmp = new Path(qdir, s"$Marker.tmp.${ProcessHandle.current.pid}")
-    val out = fs.create(tmp, true)
-    try out.write(gen.toString.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(qdir.toUri, conf)
-      .rename(tmp, new Path(qdir, Marker), Options.Rename.OVERWRITE)
+    if (TableWrite.fs(s, dir).exists(dir))
+      TableWrite.replaceFile(s, new Path(dir, Marker), gen.toString.getBytes("UTF-8"))
   }
 
   /** Step 1 of the append protocol: bump the primary's generation BEFORE
@@ -120,9 +113,8 @@ object GenStamp {
   /** Drop the rebuild-in-progress marker. Content is irrelevant —
     * existence is the signal, so a torn write is still a valid fence. */
   def beginRebuild(s: SparkSession, dir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
+    val fs = TableWrite.fs(s, d)
     if (!fs.exists(d)) fs.mkdirs(d)
     val out = fs.create(new Path(d, RebuildMarker), true)
     try out.write('1') finally out.close()

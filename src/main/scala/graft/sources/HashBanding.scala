@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,7 @@ object HashBanding {
       layout: Int = IndexMeta.FlatLayout): Unit = {
     import s.implicits._
     Seq((Bands, BandBits, layout)).toDF("bands", "bits", "layout")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** Fail loudly on an index written under different band semantics — a
@@ -327,12 +328,12 @@ object HashBanding {
     val primary = s"$dir/hashes"
     val derived = s"$dir/pbands"
     if (!BandBuckets.exists(s, derived)) {
-      hashed.write.mode("append").parquet(primary)
+      hashed.tableWrite.mode("append").parquet(primary)
       if (bootstrapLayout) writeProbeLayout(s, dir)
     } else {
       val wasInSync = GenStamp.read(s, primary) == GenStamp.read(s, derived)
       val gen = GenStamp.beginAppend(s, primary)
-      hashed.write.mode("append").parquet(primary)
+      hashed.tableWrite.mode("append").parquet(primary)
       if (wasInSync) {
         appendProbeLayout(s, dir, hashed)
         GenStamp.stamp(s, derived, gen)

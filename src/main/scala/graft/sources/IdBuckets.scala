@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -85,7 +86,7 @@ object IdBuckets {
     df.withColumn(Col, bucketOf(col(idCol)))
       .repartitionByRange(col(Col), col(idCol))
       .sortWithinPartitions(col(Col), col(idCol))
-      .write.mode(mode).partitionBy(Col).parquet(path)
+      .tableWrite.mode(mode).partitionBy(Col).parquet(path)
     dropIfPartless(df.sparkSession, path)
   }
 
@@ -137,9 +138,8 @@ object IdBuckets {
         base.join(tSide, base(idCol) === tSide("id"), "left_anti")
           .repartitionByRange(col(Col), col(idCol))
           .sortWithinPartitions(col(Col), col(idCol))
-          .write.mode("overwrite").partitionBy(Col).parquet(tmp)
-        FsMoves.swapPartitions(
-          new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration),
+          .tableWrite.mode("overwrite").partitionBy(Col).parquet(tmp)
+        FsMoves.swapPartitions(TableWrite.fs(s, new Path(tablePath)),
           tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
         // a fold that deleted every row leaves the same unreadable husk
         // as an empty write — normalize it away (see write's scaladoc)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
@@ -488,7 +489,7 @@ object ImageCodec {
       dir: String): Unit = WriterLock.withLock(dir) {
     GenStamp.beginRebuild(s, dir) // rebuild fence: see DedupOps.writeMinhashIndex
     imageHashes(assets).where(col("ok")).select("asset_id", "ahash")
-      .write.mode("overwrite").parquet(s"$dir/hashes")
+      .tableWrite.mode("overwrite").parquet(s"$dir/hashes")
     HashBanding.writeProbeLayout(s, dir)
     HashBanding.writeMeta(s, dir)
     GenStamp.completeRebuild(s, dir, Seq(s"$dir/hashes", s"$dir/pbands"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object Ledger {
   /** Append newly-computed keys (with a batch tag) to the ledger path. */
   def record(done: DataFrame, path: String, batchId: String): Unit =
     done.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Append).parquet(path)
+      .tableWrite.mode(SaveMode.Append).parquet(path)
 
   /** Load the ledger, empty-safe: a missing path is an empty, lineage-free
     * ledger with the key schema projected from `like`. Existence goes

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Deployment-mode selector for the per-modality index probes — the
@@ -75,18 +75,12 @@ object ProbeMode {
   def writeCalibration(s: SparkSession, indexDir: String,
       crossoverBytes: Long, note: String = ""): Unit = {
     require(crossoverBytes >= 0, s"crossoverBytes must be >= 0, got $crossoverBytes")
-    val conf = s.sparkContext.hadoopConfiguration
     val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(conf)
+    val fs = TableWrite.fs(s, dir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val qdir = fs.makeQualified(dir)
-    val tmp = new Path(qdir, s"$CalibrationFile.tmp.${ProcessHandle.current.pid}")
     val body = s"crossover_bytes=$crossoverBytes\n" +
       (if (note.nonEmpty) s"note=${note.replace('\n', ' ')}\n" else "")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(qdir.toUri, conf)
-      .rename(tmp, new Path(qdir, CalibrationFile), Options.Rename.OVERWRITE)
+    TableWrite.replaceFile(s, new Path(dir, CalibrationFile), body.getBytes("UTF-8"))
   }
 
   /** The calibrated crossover for `indexDir`, if one was ever measured

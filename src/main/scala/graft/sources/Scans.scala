@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object Scans {
       val store = graft.plans.Scale.scratch(s, "csv", d) + "/docs"
       s.read.parquet(s"$d/documents.parquet")
         .select("doc_id", "lang", "source", "n_chars", "text")
-        .write.mode("overwrite").option("header", "true").csv(store)
+        .tableWrite.mode("overwrite").option("header", "true").csv(store)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("source", StringType), StructField("n_chars", LongType),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.GraftFunctions
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -150,7 +151,7 @@ object SketchLedger {
       else raw.withColumn("folded", typedLit(Seq.empty[String]))
     withFolded
       .withColumn(PartCol, concat(lit("b"), col("batch_id")))
-      .write.mode("overwrite").partitionBy(PartCol).parquet(stage.toString)
+      .tableWrite.mode("overwrite").partitionBy(PartCol).parquet(stage.toString)
     require(hfs.rename(sketches, old),
       s"ledger migration at $dir: could not move $sketches aside")
     require(hfs.rename(stage, sketches),
@@ -260,7 +261,7 @@ object SketchLedger {
     if (readMeta(s, dir).isEmpty) {
       import s.implicits._
       Seq((lgConfigK, keys, value)).toDF("lgk", "keys", "value")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
+        .coalesce(1).tableWrite.mode("overwrite").parquet(metaPath(dir))
     }
     val sk = batch
       .groupBy(keys.map(col): _*)
@@ -269,7 +270,7 @@ object SketchLedger {
       .withColumn("batch_id", lit(batchId))
       .withColumn("folded", typedLit(Seq.empty[String]))
       .withColumn(PartCol, lit(bpartOf(batchId)))
-    sk.write.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
+    sk.tableWrite.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
   }
 
   /** Retried-batch absorption shared by both read paths: collapse to one
@@ -413,7 +414,7 @@ object SketchLedger {
     if (!fs(s, dir).exists(new Path(metaPath(dir)))) {
       import s.implicits._
       Seq((k, keys, value)).toDF("k", "keys", "value")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
+        .coalesce(1).tableWrite.mode("overwrite").parquet(metaPath(dir))
     }
     val sk = batch
       .groupBy(keys.map(col): _*)
@@ -422,7 +423,7 @@ object SketchLedger {
       .withColumn("batch_id", lit(batchId))
       .withColumn("folded", typedLit(Seq.empty[String]))
       .withColumn(PartCol, lit(bpartOf(batchId)))
-    sk.write.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
+    sk.tableWrite.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
   }
 
   /** Estimated values at the requested normalized ranks per key, merged
@@ -511,7 +512,7 @@ object SketchLedger {
     if (readSumMeta(s, dir).isEmpty) {
       import s.implicits._
       Seq((keys, value)).toDF("keys", "value")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
+        .coalesce(1).tableWrite.mode("overwrite").parquet(metaPath(dir))
     }
     batch.groupBy(keys.map(col): _*)
       .agg(sum(col(value).cast("double")).as("sum_val"),
@@ -519,7 +520,7 @@ object SketchLedger {
       .withColumn("batch_id", lit(batchId))
       .withColumn("folded", typedLit(Seq.empty[String]))
       .withColumn(PartCol, lit(bpartOf(batchId)))
-      .write.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
+      .tableWrite.mode("append").partitionBy(PartCol).parquet(s"$dir/sketches")
   }
 
   /** Exact metric total + processed rows per key, merged across every
@@ -628,7 +629,7 @@ object SketchLedger {
         .withColumn("folded", typedLit(newManifest))
       val hfs = fs(s, dir)
       val stage = new Path(s"$dir/_compact_stage")
-      out.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      out.coalesce(1).tableWrite.mode("overwrite").parquet(stage.toString)
       // single atomic publish: the staged files BECOME the consolidated
       // partition; everything after this line is garbage collection
       val dst = new Path(s"$dir/sketches/$PartCol=$CompactPrefix${g + 1}")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -234,12 +235,12 @@ object TextIndex {
       // IdBuckets empty-table lesson). Write the empty frame FLAT
       // instead: schema-bearing, bucket column present as data, so
       // searches return cleanly empty over an empty corpus.
-      posts.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/postings")
-      terms.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/terms")
+      posts.coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/postings")
+      terms.coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/terms")
       doclens.withColumn(IdBuckets.Col, IdBuckets.bucketOf(col("doc_id")))
-        .coalesce(1).write.mode("overwrite").parquet(s"$segRoot/doclens")
-      blockmax.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/blockmax")
-      stats.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/stats")
+        .coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/doclens")
+      blockmax.coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/blockmax")
+      stats.coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/stats")
     } else {
       // Overlap the five independent output jobs (guide §2.6): with
       // `posts` eagerly landed they share no lineage work, and
@@ -287,18 +288,18 @@ object TextIndex {
         inGroup("postings")(
           posts.repartitionByRange(col(Col), col("term"), col("doc_id"))
             .sortWithinPartitions(col(Col), col("term"), col("doc_id"))
-            .write.mode("overwrite").partitionBy(Col).parquet(s"$segRoot/postings")),
+            .tableWrite.mode("overwrite").partitionBy(Col).parquet(s"$segRoot/postings")),
         inGroup("terms")(
           terms.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-            .write.mode("overwrite").parquet(s"$segRoot/terms")),
+            .tableWrite.mode("overwrite").parquet(s"$segRoot/terms")),
         inGroup("doclens")(
           IdBuckets.write(doclens, "doc_id", s"$segRoot/doclens", "overwrite")),
         inGroup("blockmax")(
           blockmax.repartitionByRange(col(Col), col("term"), col("block_id"))
             .sortWithinPartitions(col(Col), col("term"), col("block_id"))
-            .write.mode("overwrite").partitionBy(Col).parquet(s"$segRoot/blockmax")),
+            .tableWrite.mode("overwrite").partitionBy(Col).parquet(s"$segRoot/blockmax")),
         inGroup("stats")(
-          stats.coalesce(1).write.mode("overwrite").parquet(s"$segRoot/stats")))
+          stats.coalesce(1).tableWrite.mode("overwrite").parquet(s"$segRoot/stats")))
       val settled = writes.map(f => Try(Await.result(f, Duration.Inf)))
       settled.collectFirst { case scala.util.Failure(e) => throw e }
       ()
@@ -485,7 +486,7 @@ object TextIndex {
       val victims = victimLens(s, dir, ids)
       val found = victims.count()
       if (found > 0)
-        victims.write.mode("append").parquet(tombstonesPath(dir))
+        victims.tableWrite.mode("append").parquet(tombstonesPath(dir))
       found
     }
 
@@ -647,15 +648,7 @@ object TextIndex {
   /** Atomic (tmp-then-rename) manifest of the delta ids a staged
     * compaction will fold — the heal's GC driver. */
   private def writeManifest(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fsys = hfs(s, dir)
-    val qdir = fsys.makeQualified(new Path(dir))
-    val tmp = new Path(qdir, s"_compact_manifest.tmp.${ProcessHandle.current.pid}")
-    val out = fsys.create(tmp, true)
-    try out.write(ids.mkString("\n").getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(qdir.toUri, conf)
-      .rename(tmp, new Path(qdir, "_compact_manifest"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    TableWrite.replaceFile(s, new Path(manifestPath(dir)), ids.mkString("\n").getBytes("UTF-8"))
   }
 
   private def readManifest(s: SparkSession, dir: String): Option[Seq[Long]] = {

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,7 +43,7 @@ object Tombstones {
     require(ids.columns.length == 1,
       s"tombstone ids must be a single-column frame, got ${ids.columns.mkString(",")}")
     ids.select(col(ids.columns(0)).as("id")).distinct()
-      .write.mode("append").parquet(path(dir))
+      .tableWrite.mode("append").parquet(path(dir))
     // the lock covers the whole index root, so a concurrent compaction
     // cannot clear tombstones between this append and its fold — the
     // resurrection race the crash fences alone cannot see
@@ -77,7 +78,7 @@ object Tombstones {
     read(s, dir).foreach { t =>
       val tmp = s"${tablePath}__compact_tmp"
       s.read.parquet(tablePath).join(broadcast(t), col(idCol) === t("id"), "left_anti")
-        .write.mode("overwrite").parquet(tmp)
+        .tableWrite.mode("overwrite").parquet(tmp)
       // the swap replaces the whole directory, which would drop the
       // table's GenStamp marker and leave it diverged from its fence
       // partners (readers would then refuse a perfectly consistent

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.TableWrite.TableWriteOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -607,7 +608,7 @@ object StreamingOps {
       k: Int, perLeg: Int = 20): Unit =
     fuseHybridTrigger(trigger, k, perLeg)
       .withColumn("trigger_id", lit(triggerId))
-      .write.mode("overwrite")
+      .tableWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("trigger_id")
       .parquet(outDir)
@@ -1263,7 +1264,7 @@ object StreamingOps {
     * usual partition pruning on batch_id. */
   def idempotentBatchAppend(batch: DataFrame, batchId: Long, dataPath: String): Unit =
     batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
+      .tableWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(dataPath)

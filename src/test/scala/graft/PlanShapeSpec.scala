@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TokenNgrams
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -118,36 +119,65 @@ class PlanShapeSpec extends AnyFunSuite {
     found.toSeq
   }
 
-  test("token n-gram paths carry no per-element lambda (the tokenizer cannot inline)") {
+  /** The most `graft_ngrams` evaluations any input row meets: the
+    * largest count of kernel calls along one leaf-to-root path. A filter
+    * on `size(sh)` is pushed below the shingle projection and makes it 2. */
+  private def ngramsPerRow(p: LogicalPlan): Int =
+    p.expressions.map(_.collect { case t: TokenNgrams => t }.size).sum +
+      (if (p.children.isEmpty) 0 else p.children.map(ngramsPerRow).max)
+
+  /** Optimized plans of every query `body` runs. */
+  private def plansOf(body: => Unit): List[LogicalPlan] = {
     import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.functions.{col, size}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val refine = graft.operators.DedupOps.nearDupCorpus(spark, sf).where(size(col("sh")) > 0)
+    val plans = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.optimizedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toList)
+  }
+
+  test("token n-gram paths carry no per-element lambda (the tokenizer cannot inline)") {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val refine = graft.operators.DedupOps.nearDupCorpus(spark, sf)
     assert(higherOrder(refine.queryExecution.optimizedPlan).isEmpty,
       refine.queryExecution.optimizedPlan.toString.take(3000))
     val profile = SparkEntry.queries("q_ngram_dup_profile")(spark, sf)
     assert(higherOrder(profile.queryExecution.optimizedPlan).isEmpty,
       profile.queryExecution.optimizedPlan.toString.take(3000))
     // the MinHash index write: every write command it runs, captured
-    val writes = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        writes.synchronized { writes += qe.optimizedPlan }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val dir = java.nio.file.Files.createTempDirectory("plan-shape-minhash").toString + "/idx"
-    spark.listenerManager.register(listener)
-    try {
-      graft.operators.DedupOps.writeMinhashIndex(spark, Tables.documents(spark, sf), dir)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    val shingleWrite = writes.synchronized(writes.toList).filter(_.exists {
+    val writes = plansOf(
+      graft.operators.DedupOps.writeMinhashIndex(spark, Tables.documents(spark, sf), dir))
+    val shingleWrite = writes.filter(_.exists {
       case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString.endsWith("/shingles")
       case _ => false
     })
     assert(shingleWrite.nonEmpty, "the shingles table write was not observed")
     shingleWrite.foreach(p => assert(higherOrder(p).isEmpty, p.toString.take(3000)))
+  }
+
+  test("every shingle consumer runs the n-gram kernel once per row") {
+    val corpus = graft.operators.DedupOps.nearDupCorpus(spark, sf).queryExecution.optimizedPlan
+    assert(ngramsPerRow(corpus) === 1, corpus.toString.take(3000))
+    val fingerprint = SparkEntry.queries("q_doc_fingerprint")(spark, sf).queryExecution.optimizedPlan
+    assert(ngramsPerRow(fingerprint) === 1, fingerprint.toString.take(3000))
+    // the ingest's in-batch refine, and every other plan the ingest runs
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("plan-shape-ingest").toString
+    val batch = (1L to 12L).map(i => (i, "s", (1 to 30).map(t => s"w${i % 4}_$t").mkString(" ")))
+      .toDF("doc_id", "source", "text")
+    val plans = plansOf(graft.sources.AssetIngest.ingestTextBatch(
+      spark, batch, s"$base/idx", s"$base/data", batchId = Some("b0")))
+    assert(plans.exists(ngramsPerRow(_) == 1), "no ingest plan shingled its batch")
+    plans.foreach(p => assert(ngramsPerRow(p) <= 1, p.toString.take(3000)))
   }
 
   test("sessionize keeps a single exchange keyed on user_id") {
