@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.sources.TableWrite.TableWriteOps
 import graft.{Q, Tables}
 import graft.functions.{BloomGate, GraftFunctions}
-import graft.sources.IdBuckets
+import graft.sources.{BandedIndex, IndexMeta}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -265,57 +264,53 @@ object DedupOps {
       k: Int, bands: Int): DataFrame =
     bandRowsOfBuckets(minhashBucketsOf(s, toks, k, bands))
 
+  /** The MinHash index's instance of the banded lifecycle: `cbuckets`
+    * (one row per doc — its ordered banded signature array, the GROUPED
+    * probe form: batch probes posexplode it per-row into candidate join
+    * keys, and the streaming gate's static side is a projection-only scan
+    * of it) over the `shingles` refine tier, both id-bucketed by
+    * `doc_id`; `pbands` holds the exploded (doc_id, band, bucket) rows. */
+  private[graft] val MinhashIndex: BandedIndex = new BandedIndex("minhash-text",
+    "DedupOps.writeMinhashIndex", primary = "cbuckets", refine = Some("shingles"),
+    idCol = "doc_id", bandIdCol = "doc_id", bandCol = "band", bucketCol = "bucket",
+    layout = IndexMeta.GroupedLayout, bandRowsOf = bandRowsOfBuckets)
+
+  /** The (doc_id, sh) refine rows of a (doc_id, toks) frame. */
+  private def shingleRows(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), expr(shingleExpr(0)).as("sh"))
+
   /** Persist a MinHash/LSH near-dup index for a (doc_id, source, text)
-    * corpus under `dir`: `cbuckets` (one row per doc — its ordered
-    * banded signature array, the GROUPED probe form: batch probes
-    * posexplode it per-row into candidate join keys, and the streaming
-    * gate's static side is a projection-only scan of it, never a
-    * corpus-wide re-aggregation per micro-batch), `shingles` (the
-    * refine tier), and a 1-row meta table pinning (k, bands) so appends
-    * and probes sign new documents identically. Both tables are
-    * id-hash-bucketed (IdBuckets) so compaction rewrites only the
-    * partitions holding tombstoned ids. The dedup lifecycle twin of
-    * writeIvfIndex/writePqIndex — built once over the corpus, then
-    * every new crawl batch probes and appends in O(batch). */
+    * corpus under `dir` ([[MinhashIndex]]), with a 1-row meta table
+    * pinning (k, bands) so appends and probes sign new documents
+    * identically. The dedup lifecycle twin of writeIvfIndex/writePqIndex
+    * — built once over the corpus, then every new crawl batch probes and
+    * appends in O(batch). */
   def writeMinhashIndex(s: SparkSession, docs: DataFrame, dir: String,
-      k: Int = 16, bands: Int = 4): Unit = graft.sources.WriterLock.withLock(dir) {
+      k: Int = 16, bands: Int = 4): Unit = {
     GraftFunctions.register(s)
     val toks = docs.withColumn("toks", split(col("text"), " "))
-    // rebuild fence (GenStamp): a crash between these commits could
-    // leave e.g. new signatures under an old meta's (k, bands) — every
-    // reader goes through requireMinhashMeta, which refuses while the
-    // marker stands
-    graft.sources.GenStamp.beginRebuild(s, dir)
-    IdBuckets.write(minhashBucketsOf(s, toks.select(col("doc_id"), col("toks")), k, bands),
-      "doc_id", s"$dir/cbuckets", "overwrite")
-    IdBuckets.write(toks.select(col("doc_id"), expr(shingleExpr(0)).as("sh")),
-      "doc_id", s"$dir/shingles", "overwrite")
-    rebuildMinhashProbeLayout(s, dir)
     import s.implicits._
-    Seq((k, bands, graft.sources.IndexMeta.GroupedLayout))
-      .toDF("k", "bands", "layout")
-      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/cbuckets", s"$dir/pbands"))
+    MinhashIndex.write(s, dir,
+      minhashBucketsOf(s, toks.select(col("doc_id"), col("toks")), k, bands),
+      Some(shingleRows(toks)),
+      Seq((k, bands, IndexMeta.GroupedLayout)).toDF("k", "bands", "layout"))
   }
 
-  /** (Re-)derive the band-partitioned probe table (`pbands`,
-    * BandBuckets layout) from the grouped signature table: one cheap
-    * pass over `cbuckets`, no re-signing. Called by every index write;
-    * also the UPGRADE path for an index persisted before the probe
-    * layout existed (probes fall back to the full scan until this
-    * runs). A husk-dropped empty index leaves no pbands either. */
+  /** (Re-)derive the band-partitioned probe table (`pbands`) from
+    * `cbuckets` (BandedIndex.heal): the upgrade path for an index
+    * persisted before the probe layout existed and the heal for a
+    * diverged one. */
   def rebuildMinhashProbeLayout(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-    if (graft.sources.BandBuckets.exists(s, s"$dir/cbuckets")) {
-      graft.sources.BandBuckets.write(
-        bandRowsOfBuckets(IdBuckets.read(s, s"$dir/cbuckets")),
-        s"$dir/pbands", "overwrite")
-      // the layout now reflects the signature table exactly — reconverge
-      // the append-generation stamps (GenStamp) so pruned probes resume
-      graft.sources.GenStamp.syncDerived(s, s"$dir/cbuckets", s"$dir/pbands")
-    }
-    }
+    MinhashIndex.heal(s, dir)
+
+  /** Read + validate a MinHash index's meta row (BandedIndex.requireMeta:
+    * rebuild fence, then the layout stamp — a pre-r11 flat-layout index
+    * must fail with a rebuild message, not a path-not-found or a silently
+    * skipped probe). Shared by every reader of the index (append, batch
+    * probe, streaming gate, ingest loop). */
+  private[graft] def requireMinhashMeta(s: SparkSession,
+      dir: String): org.apache.spark.sql.Row =
+    MinhashIndex.requireMeta(s, dir)
 
   /** Append a new batch to a persisted MinHash index — signatures use
     * the stored (k, bands), so appended rows are band-compatible with
@@ -324,65 +319,14 @@ object DedupOps {
     * rows for its ids (harmless to candidate CORRECTNESS — candidates
     * are distinct-ed — but it doubles their probe cost); gate retried
     * batches through Ledger.missing as the LlmOpsSpec resume test
-    * shows. */
-  /** Read + validate a MinHash index's meta row: layout stamp first
-    * (IndexMeta — a pre-r11 flat-layout index must fail with a rebuild
-    * message, not a path-not-found or a silently skipped probe), then
-    * the banding sanity the signing kernel assumes. Shared by every
-    * reader of the index (append, batch probe, streaming gate, ingest
-    * loop). */
-  private[graft] def requireMinhashMeta(s: SparkSession,
-      dir: String): org.apache.spark.sql.Row = {
-    graft.sources.GenStamp.requireNoRebuild(s, dir, "minhash",
-      "DedupOps.writeMinhashIndex")
-    val meta = graft.sources.IndexMeta.headCached(s, s"$dir/meta")
-    graft.sources.IndexMeta.requireLayout(meta,
-      graft.sources.IndexMeta.GroupedLayout, "minhash",
-      "DedupOps.writeMinhashIndex")
-    meta
-  }
-
-  def appendToMinhashIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
-    val meta = requireMinhashMeta(s, dir)
+    * shows. Shingles land first, then the fenced cbuckets + pbands pair
+    * (BandedIndex.append). */
+  def appendToMinhashIndex(s: SparkSession, batch: DataFrame, dir: String): Unit = {
     GraftFunctions.register(s)
     val toks = batch.withColumn("toks", split(col("text"), " "))
-    val buckets0 = minhashBucketsOf(s, toks.select(col("doc_id"), col("toks")),
-      meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
-    val hasLayout = graft.sources.BandBuckets.exists(s, s"$dir/pbands")
-    // barrier when the layout exists: `buckets` then feeds TWO parquet
-    // jobs (cbuckets + pbands) and would re-run the native signing per
-    // job without it (the image/audio append discipline; r15 advice)
-    val buckets = if (hasLayout) buckets0.localCheckpoint(false) else buckets0
-    // Commit order is crash-shaped (see GenStamp): the refine tier
-    // (shingles) lands FIRST — extra shingle rows with no signature are
-    // unreachable, never a false negative — then the fenced
-    // signature/layout pair. A crash anywhere leaves probes correct:
-    // before cbuckets the batch simply isn't admitted (Ledger retry
-    // re-appends); after cbuckets the diverged stamps force the
-    // full-scan fallback until the retry or rebuildMinhashProbeLayout
-    // reconverges.
-    IdBuckets.write(toks.select(col("doc_id"), expr(shingleExpr(0)).as("sh")),
-      "doc_id", s"$dir/shingles", "append")
-    val wasInSync = !hasLayout ||
-      graft.sources.GenStamp.read(s, s"$dir/cbuckets") ==
-        graft.sources.GenStamp.read(s, s"$dir/pbands")
-    val gen = if (hasLayout)
-      graft.sources.GenStamp.beginAppend(s, s"$dir/cbuckets") else 0L
-    IdBuckets.write(buckets, "doc_id", s"$dir/cbuckets", "append")
-    // keep the probe layout in sync — but never CREATE a partial one:
-    // an index persisted before pbands existed stays on the full-scan
-    // fallback until rebuildMinhashProbeLayout derives the whole table.
-    // A layout found ALREADY diverged (a previous append crashed in the
-    // window) is healed by re-deriving it whole — an incremental append
-    // would re-stamp it "in sync" while still missing the crashed
-    // batch's rows.
-    if (hasLayout) {
-      if (wasInSync) {
-        graft.sources.BandBuckets.write(bandRowsOfBuckets(buckets),
-          s"$dir/pbands", "append")
-        graft.sources.GenStamp.stamp(s, s"$dir/pbands", gen)
-      } else rebuildMinhashProbeLayout(s, dir)
+    MinhashIndex.append(s, dir, Some(shingleRows(toks))) { meta =>
+      minhashBucketsOf(s, toks.select(col("doc_id"), col("toks")),
+        meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
     }
   }
 
@@ -392,23 +336,10 @@ object DedupOps {
     * skew profile from the stored signatures BEFORE a probe or pair job
     * meets a degenerate bucket mid-flight (the classic cause: boilerplate
     * or template docs whose shingle sets collapse to the same bands;
-    * fallbacks as in HashBanding.DefaultMaxBucket's scaladoc). One
-    * aggregate over the same band rows every probe derives. */
+    * fallbacks as in HashBanding.DefaultMaxBucket's scaladoc). */
   def minhashBucketStats(s: SparkSession, dir: String,
-      perBand: Int = 10): DataFrame = {
-    require(perBand >= 1, s"perBand must be >= 1, got $perBand")
-    requireMinhashMeta(s, dir)
-    bandRowsOfBuckets(graft.sources.Tombstones.applyTo(
-        s, IdBuckets.read(s, s"$dir/cbuckets"), dir, "doc_id"))
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("population"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band")
-          .orderBy(col("population").desc, col("bucket"))))
-      .where(col("rnk") <= perBand)
-      .select("band", "bucket", "population")
-      .orderBy(col("band"), col("population").desc, col("bucket"))
-  }
+      perBand: Int = 10): DataFrame =
+    MinhashIndex.bucketStats(s, dir, perBand)
 
   /** Delete documents from a persisted MinHash index (takedowns, dedup
     * removals): an O(ids) tombstone append. `dedupAgainstIndex` and the
@@ -416,39 +347,14 @@ object DedupOps {
     * later folds them into the stored tables. Re-adding a deleted id
     * requires compaction first (see Tombstones). */
   def deleteFromMinhashIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    graft.sources.Tombstones.append(s, ids, dir)
+    MinhashIndex.delete(s, ids, dir)
 
   /** Fold tombstones into the stored MinHash tables and clear them —
-    * id-bucketed layout, so only the partitions holding tombstoned ids
-    * are rewritten (IndexMaintenanceSpec pins untouched partitions
-    * byte-identical). */
+    * only the partitions holding tombstoned ids are rewritten
+    * (BandedIndex.compact; IndexMaintenanceSpec pins untouched
+    * partitions byte-identical). */
   def compactMinhashIndex(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-    // The probe layout folds FIRST, and the two partition schemes
-    // COMPOSE: the deleted docs' band rows are located from the grouped
-    // table via its id-bucket directories (a pruned read — cbuckets is
-    // not folded yet), their pband values bound which band-partition
-    // directories get rewritten. Untouched directories in BOTH layouts
-    // are never opened.
-    graft.sources.Tombstones.read(s, dir).foreach { t =>
-      if (graft.sources.BandBuckets.exists(s, s"$dir/pbands")) {
-        // bounded driver list: at most NumBuckets id-bucket values
-        val idDirs = t.select(IdBuckets.bucketOf(col("id")).as("b"))
-          .distinct().collect().map(_.getInt(0))
-        val ids = t.select(col("id").as("doc_id"))
-        val deletedBands = bandRowsOfBuckets(
-          s.read.parquet(s"$dir/cbuckets")
-            .where(col(IdBuckets.Col).isin(idDirs.map(Integer.valueOf).toSeq: _*))
-            .join(broadcast(ids), Seq("doc_id"), "left_semi")
-            .drop(IdBuckets.Col))
-        graft.sources.BandBuckets.foldIntoBanded(
-          s, s"$dir/pbands", dir, "doc_id", deletedBands)
-      }
-    }
-    IdBuckets.foldIntoBucketed(s, s"$dir/cbuckets", dir, "doc_id")
-    IdBuckets.foldIntoBucketed(s, s"$dir/shingles", dir, "doc_id")
-    graft.sources.Tombstones.clear(s, dir)
-  }
+    MinhashIndex.compact(s, dir)
 
   /** INCREMENTAL near-dup dedup: flag the documents of a new batch that
     * near-duplicate anything already in a persisted MinHash index — the
@@ -466,56 +372,36 @@ object DedupOps {
     val meta = requireMinhashMeta(s, dir)
     GraftFunctions.register(s)
     val toks = batch.withColumn("toks", split(col("text"), " "))
-    val bBands0 = minhashBandsOf(s, toks.select(col("doc_id"), col("toks")),
+    val bBands = minhashBandsOf(s, toks.select(col("doc_id"), col("toks")),
       meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
     // deleted corpus docs (tombstones, see deleteFromMinhashIndex) must
-    // not veto new batches: apply the delete-aware view of both stored
-    // tiers before the candidate join / refine.
+    // not veto new batches: both stored tiers are delete-aware.
     //
-    // PRUNED probe (when the band-partitioned layout exists): the stored
-    // band rows come from a literal-pruned scan of `pbands` — the
-    // batch's (pband, bucket) keys prune directories and skip row
-    // groups (BandBuckets.prunedRead), so the candidate tier reads
-    // O(batch keys) row groups at ANY corpus size instead of scanning
-    // every signature. The refine tier then point-reads only the
-    // candidate ids' shingle rows (IdBuckets.prunedById) — the bounded
-    // candidate-id collect is the price of turning runtime keys into
-    // prunable literals (stream-static DPP never fires, measured; see
-    // BandBuckets). Construction therefore runs two small bounded jobs;
-    // output is IDENTICAL to the full-scan fallback (spec law).
-    // Pre-probe-layout indexes fall back to the full scan: band rows
-    // derive from the grouped cbuckets table per-row (posexplode after
-    // the anti-join — cheapest order, the join sees one row per doc).
-    val usePruned = graft.sources.GenStamp.prunedProbeOk(s,
-      s"$dir/cbuckets", s"$dir/pbands", "minhash",
-      "DedupOps.rebuildMinhashProbeLayout (or the append retry)")
-    val bBands = bBands0
-    val storedBands =
-      if (usePruned)
-        graft.sources.Tombstones.applyTo(s,
-          graft.sources.BandBuckets.prunedRead(s, s"$dir/pbands",
-            bBands.select("band", "bucket")),
-          dir, "doc_id")
-      else bandRowsOfBuckets(graft.sources.Tombstones.applyTo(
-        s, IdBuckets.read(s, s"$dir/cbuckets"), dir, "doc_id"))
-    val cands0 = bBands.select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
+    // PRUNED probe (when the band-partitioned layout is in sync,
+    // BandedIndex.probe): the stored band rows come from a literal-pruned
+    // scan of `pbands` — the batch's (pband, bucket) keys prune
+    // directories and skip row groups (BandBuckets.prunedRead), so the
+    // candidate tier reads O(batch keys) row groups at ANY corpus size
+    // instead of scanning every signature. The refine tier then
+    // point-reads only the candidate ids' shingle rows
+    // (IdBuckets.prunedById) — the bounded candidate-id collect is the
+    // price of turning runtime keys into prunable literals (stream-static
+    // DPP never fires, measured; see BandBuckets). Construction therefore
+    // runs two small bounded jobs; output is IDENTICAL to the full-scan
+    // fallback (spec law), whose band rows derive from the grouped
+    // cbuckets table per-row (posexplode after the anti-join — the join
+    // sees one row per doc).
+    val probe = MinhashIndex.probe(s, dir)
+    val storedBands = probe.bandRows(bBands.select("band", "bucket"))
+    // on the pruned path the candidate frame feeds the bounded id collect
+    // AND the refine join — the barrier runs the candidate join once
+    val cands = probe.barrier(bBands
+      .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
       .join(storedBands.select(col("doc_id").as("corpus_id"),
           col("band").as("band_c"), col("bucket").as("bucket_c")),
         col("band") === col("band_c") && col("bucket") === col("bucket_c"))
-      .select("batch_id", "corpus_id").distinct()
-    // in pruned mode the candidate frame feeds the bounded id collect
-    // AND the refine join — barrier it so the candidate join runs once
-    val cands = if (usePruned) cands0.localCheckpoint(false) else cands0
-    val storedSh0 =
-      if (usePruned) {
-        val idRows = cands.select("corpus_id").distinct()
-          .limit(IdBuckets.MaxIdLiterals + 1).collect()
-        if (idRows.length <= IdBuckets.MaxIdLiterals)
-          IdBuckets.prunedById(s, s"$dir/shingles", "doc_id",
-            idRows.map(_.getLong(0)).toSeq)
-        else IdBuckets.read(s, s"$dir/shingles")
-      } else IdBuckets.read(s, s"$dir/shingles")
-    val storedSh = graft.sources.Tombstones.applyTo(s, storedSh0, dir, "doc_id")
+      .select("batch_id", "corpus_id").distinct())
+    val storedSh = probe.rowsFor("shingles", cands.select("corpus_id"))
     val bSh = toks.select(col("doc_id").as("batch_id"), expr(shingleExpr(0)).as("shb"))
       .where(size(col("shb")) > 0)
     val cSh = storedSh

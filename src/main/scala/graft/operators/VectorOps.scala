@@ -2057,105 +2057,56 @@ object VectorOps {
   // engine; corpora without a natural block pass a constant.
   // --------------------------------------------------------------------
 
+  /** The embed-LSH index's instance of the banded lifecycle: `cbuckets`
+    * over the `embeddings` refine tier, both id-bucketed by `vec_id`;
+    * `pbands` holds (vec_id, label, band, bucket) rows. */
+  private[graft] val EmbedLshIndex: graft.sources.BandedIndex =
+    new graft.sources.BandedIndex("embed-lsh", "VectorOps.writeEmbedLshIndex",
+      primary = "cbuckets", refine = Some("embeddings"), idCol = "vec_id",
+      bandIdCol = "vec_id", bandCol = "band", bucketCol = "bucket",
+      layout = graft.sources.IndexMeta.GroupedLayout,
+      bandRowsOf = bandRowsOfLshBuckets)
+
   /** Build + persist the index over a (vec_id, label, embedding) corpus.
     * The dimension is validated across ALL corpus rows (mixed dims would
     * otherwise null-pad through zip_with into quietly-wrong signatures;
     * empty corpora error with a clear message) and frozen in meta;
     * mismatched later batches fail loudly. */
   def writeEmbedLshIndex(s: SparkSession, corpus: DataFrame, dir: String,
-      nPlanes: Int = 32, bands: Int = 4, seed: Long = 42L): Unit = graft.sources.WriterLock.withLock(dir) {
+      nPlanes: Int = 32, bands: Int = 4, seed: Long = 42L): Unit = {
     val dim = requireCorpusDim(corpus, "embed-lsh")
-    // rebuild fence — see DedupOps.writeMinhashIndex
-    graft.sources.GenStamp.beginRebuild(s, dir)
-    graft.sources.IdBuckets.write(lshBucketsOf(corpus, nPlanes, bands, dim, seed),
-      "vec_id", s"$dir/cbuckets", "overwrite")
-    graft.sources.IdBuckets.write(corpus.select("vec_id", "label", "embedding"),
-      "vec_id", s"$dir/embeddings", "overwrite")
-    rebuildEmbedLshProbeLayout(s, dir)
     import s.implicits._
-    Seq((nPlanes, bands, dim, seed, graft.sources.IndexMeta.GroupedLayout))
-      .toDF("n_planes", "bands", "dim", "seed", "layout")
-      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/cbuckets", s"$dir/pbands"))
+    EmbedLshIndex.write(s, dir, lshBucketsOf(corpus, nPlanes, bands, dim, seed),
+      Some(corpus.select("vec_id", "label", "embedding")),
+      Seq((nPlanes, bands, dim, seed, graft.sources.IndexMeta.GroupedLayout))
+        .toDF("n_planes", "bands", "dim", "seed", "layout"))
   }
 
-  /** (Re-)derive the band-partitioned probe table (`pbands`,
-    * BandBuckets layout — (vec_id, label, band, bucket) partitioned by
-    * pmod(xxhash64(band, bucket), P)) from the grouped signature table:
-    * one cheap pass over `cbuckets`, no re-signing. Called by every
-    * index write; also the UPGRADE path for a pre-probe-layout index
-    * (probes fall back to the full scan until it runs). */
+  /** (Re-)derive the band-partitioned probe table (`pbands`) from
+    * `cbuckets` (BandedIndex.heal): the upgrade path for a
+    * pre-probe-layout index and the heal for a diverged one. */
   def rebuildEmbedLshProbeLayout(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-    if (graft.sources.BandBuckets.exists(s, s"$dir/cbuckets")) {
-      graft.sources.BandBuckets.write(
-        bandRowsOfLshBuckets(graft.sources.IdBuckets.read(s, s"$dir/cbuckets")),
-        s"$dir/pbands", "overwrite")
-      // reconverge the append-generation fence (GenStamp) — the layout
-      // now reflects the signature table exactly
-      graft.sources.GenStamp.syncDerived(s, s"$dir/cbuckets", s"$dir/pbands")
-    }
-    }
+    EmbedLshIndex.heal(s, dir)
 
-  /** Read + validate an embed-LSH index's meta row: layout stamp first
-    * (IndexMeta — a pre-r11 flat-layout index fails with a rebuild
-    * message, not a path-not-found), shared by every reader of the
-    * index (append, batch probe, streaming gate, ingest loop). */
+  /** Read + validate an embed-LSH index's meta row (BandedIndex
+    * .requireMeta), shared by every reader of the index (append, batch
+    * probe, streaming gate, ingest loop). */
   private[graft] def requireEmbedLshMeta(s: SparkSession,
-      dir: String): org.apache.spark.sql.Row = {
-    graft.sources.GenStamp.requireNoRebuild(s, dir, "embed-lsh",
-      "VectorOps.writeEmbedLshIndex")
-    val meta = graft.sources.IndexMeta.headCached(s, s"$dir/meta")
-    graft.sources.IndexMeta.requireLayout(meta,
-      graft.sources.IndexMeta.GroupedLayout, "embed-lsh",
-      "VectorOps.writeEmbedLshIndex")
-    meta
-  }
+      dir: String): org.apache.spark.sql.Row =
+    EmbedLshIndex.requireMeta(s, dir)
 
   /** Append a batch — signed with the STORED (nPlanes, bands, dim, seed),
     * so appended rows are band-compatible with the base; O(batch), no
     * corpus re-signing. Caller owns vec_id uniqueness (gate retries
-    * through Ledger.missing, as with every other index family).
-    *
-    * Crash-shaped commit order (the minhash append's discipline): the
-    * refine tier (embeddings) lands FIRST — an embedding row with no
-    * signature is unreachable, never a false negative — then the
-    * signature/layout pair under the GenStamp fence: a crash between
-    * the cbuckets and pbands commits leaves the stamps diverged, probes
-    * fall back to the full scan, and the next append (or
-    * rebuildEmbedLshProbeLayout) heals the layout. */
-  def appendToEmbedLshIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
-    val meta = requireEmbedLshMeta(s, dir)
-    requireBatchDim(batch, meta.getAs[Int]("dim"), "embed-lsh")
-    val buckets0 = lshBucketsOf(batch, meta.getAs[Int]("n_planes"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
-    val hasLayout = graft.sources.BandBuckets.exists(s, s"$dir/pbands")
-    // barrier when the layout exists: `buckets` feeds TWO parquet jobs
-    // (cbuckets + pbands) and would re-run the native signing per job
-    // without it (the image/audio append discipline; r15 advice)
-    val buckets = if (hasLayout) buckets0.localCheckpoint(false) else buckets0
-    graft.sources.IdBuckets.write(batch.select("vec_id", "label", "embedding"),
-      "vec_id", s"$dir/embeddings", "append")
-    val wasInSync = !hasLayout ||
-      graft.sources.GenStamp.read(s, s"$dir/cbuckets") ==
-        graft.sources.GenStamp.read(s, s"$dir/pbands")
-    val gen = if (hasLayout)
-      graft.sources.GenStamp.beginAppend(s, s"$dir/cbuckets") else 0L
-    graft.sources.IdBuckets.write(buckets, "vec_id", s"$dir/cbuckets", "append")
-    // keep the probe layout in sync — but never CREATE a partial one
-    // (pre-probe-layout indexes stay on the full-scan fallback until
-    // rebuildEmbedLshProbeLayout derives the whole table); a layout
-    // found ALREADY diverged is healed by re-deriving it whole
-    if (hasLayout) {
-      if (wasInSync) {
-        graft.sources.BandBuckets.write(bandRowsOfLshBuckets(buckets),
-          s"$dir/pbands", "append")
-        graft.sources.GenStamp.stamp(s, s"$dir/pbands", gen)
-      } else rebuildEmbedLshProbeLayout(s, dir)
+    * through Ledger.missing, as with every other index family). The
+    * embeddings land first, then the fenced cbuckets + pbands pair
+    * (BandedIndex.append). */
+  def appendToEmbedLshIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    EmbedLshIndex.append(s, dir, Some(batch.select("vec_id", "label", "embedding"))) { meta =>
+      requireBatchDim(batch, meta.getAs[Int]("dim"), "embed-lsh")
+      lshBucketsOf(batch, meta.getAs[Int]("n_planes"), meta.getAs[Int]("bands"),
+        meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     }
-  }
 
   /** Operator diagnostic over a persisted embed-LSH index: the `perBand`
     * most-populated (label, band, bucket) cells (tombstone-aware) — the
@@ -2166,54 +2117,19 @@ object VectorOps {
     * degenerate content class — mass-identical embeddings pile one
     * bucket high) BEFORE a probe dies on the loud guard. */
   def embedLshBucketStats(s: SparkSession, dir: String,
-      perBand: Int = 10): DataFrame = {
-    require(perBand >= 1, s"perBand must be >= 1, got $perBand")
-    requireEmbedLshMeta(s, dir)
-    bandRowsOfLshBuckets(graft.sources.Tombstones.applyTo(
-        s, graft.sources.IdBuckets.read(s, s"$dir/cbuckets"), dir, "vec_id"))
-      .groupBy(col("label"), col("band"), col("bucket"))
-      .agg(count(lit(1)).as("population"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band")
-          .orderBy(col("population").desc, col("label"), col("bucket"))))
-      .where(col("rnk") <= perBand)
-      .select("label", "band", "bucket", "population")
-      .orderBy(col("band"), col("population").desc, col("label"), col("bucket"))
-  }
+      perBand: Int = 10): DataFrame =
+    EmbedLshIndex.bucketStats(s, dir, perBand, Seq("label"))
 
   /** Takedown/removal: O(ids) tombstone append; probes exclude the ids
     * immediately, compaction folds them in later. */
   def deleteFromEmbedLshIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    graft.sources.Tombstones.append(s, ids, dir)
+    EmbedLshIndex.delete(s, ids, dir)
 
-  /** Fold tombstones into the stored tables and clear them —
-    * id-bucketed, so only the partitions holding tombstoned ids are
-    * rewritten (the flat-table twin of IVF's affected-cell
-    * compaction). */
+  /** Fold tombstones into the stored tables and clear them — only the
+    * partitions holding tombstoned ids are rewritten (BandedIndex
+    * .compact; the flat-table twin of IVF's affected-cell compaction). */
   def compactEmbedLshIndex(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-    // probe layout first, located from the not-yet-folded grouped table
-    // via its id-bucket directories — the two partition schemes compose
-    // (see DedupOps.compactMinhashIndex)
-    graft.sources.Tombstones.read(s, dir).foreach { t =>
-      if (graft.sources.BandBuckets.exists(s, s"$dir/pbands")) {
-        val idDirs = t.select(graft.sources.IdBuckets.bucketOf(col("id")).as("b"))
-          .distinct().collect().map(_.getInt(0))
-        val ids = t.select(col("id").as("vec_id"))
-        val deletedBands = bandRowsOfLshBuckets(
-          s.read.parquet(s"$dir/cbuckets")
-            .where(col(graft.sources.IdBuckets.Col)
-              .isin(idDirs.map(Integer.valueOf).toSeq: _*))
-            .join(broadcast(ids), Seq("vec_id"), "left_semi")
-            .drop(graft.sources.IdBuckets.Col))
-        graft.sources.BandBuckets.foldIntoBanded(
-          s, s"$dir/pbands", dir, "vec_id", deletedBands)
-      }
-    }
-    graft.sources.IdBuckets.foldIntoBucketed(s, s"$dir/cbuckets", dir, "vec_id")
-    graft.sources.IdBuckets.foldIntoBucketed(s, s"$dir/embeddings", dir, "vec_id")
-    graft.sources.Tombstones.clear(s, dir)
-  }
+    EmbedLshIndex.compact(s, dir)
 
   /** INCREMENTAL embedding near-dup: flag batch vectors that
     * near-duplicate anything stored — the vector twin of
@@ -2238,27 +2154,18 @@ object VectorOps {
     requireBatchDim(batch, meta.getAs[Int]("dim"), "embed-lsh")
     val bBands = lshBandRowsOf(batch, meta.getAs[Int]("n_planes"),
       meta.getAs[Int]("bands"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
-    // PRUNED probe when the band-partitioned layout exists: the batch's
-    // (pband, bucket) keys prune directories and skip row groups
-    // (BandBuckets.prunedRead), so the candidate tier reads O(batch
-    // keys) row groups at any corpus size; the semi-join below then
-    // restricts EXACTLY as before (pruning is a scan optimization, the
-    // probed set and the flood-guard populations are unchanged — spec
-    // law pins output identity with the fallback). Pre-probe-layout
-    // indexes fall back to the full grouped scan: band rows derive from
+    // PRUNED probe when the band-partitioned layout is in sync
+    // (BandedIndex.probe): the batch's (pband, bucket) keys prune
+    // directories and skip row groups (BandBuckets.prunedRead), so the
+    // candidate tier reads O(batch keys) row groups at any corpus size;
+    // the semi-join below then restricts EXACTLY as before (pruning is a
+    // scan optimization, the probed set and the flood-guard populations
+    // are unchanged — spec law pins output identity with the fallback).
+    // The fallback is the full grouped scan: band rows derive from
     // cbuckets per-row (posexplode after the tombstone anti-join — one
     // row per vector through the join, bands x rows only after).
-    val usePruned = graft.sources.GenStamp.prunedProbeOk(s,
-      s"$dir/cbuckets", s"$dir/pbands", "embed-lsh",
-      "VectorOps.rebuildEmbedLshProbeLayout (or the append retry)")
-    val stored0 =
-      if (usePruned)
-        graft.sources.Tombstones.applyTo(s,
-          graft.sources.BandBuckets.prunedRead(s, s"$dir/pbands",
-            bBands.select("band", "bucket")),
-          dir, "vec_id")
-      else bandRowsOfLshBuckets(graft.sources.Tombstones.applyTo(
-        s, graft.sources.IdBuckets.read(s, s"$dir/cbuckets"), dir, "vec_id"))
+    val probe = EmbedLshIndex.probe(s, dir)
+    val stored0 = probe.bandRows(bBands.select("band", "bucket"))
     // Restrict the stored side to the buckets this batch actually probes
     // BEFORE anything corpus-wide happens: the semi-join prunes to
     // O(batch buckets x occupancy) rows, which keeps both the flood
@@ -2287,23 +2194,13 @@ object VectorOps {
         col("label") === col("label_c") && col("band") === col("band_c") &&
           col("bucket") === col("bucket_c"))
       .select("batch_id", "corpus_id").distinct()
-    // in pruned mode the candidate frame feeds the bounded id collect
-    // AND the refine join — barrier it so the candidate join runs once
-    val cands = if (usePruned) cands0.localCheckpoint(false) else cands0
-    // refine tier: with the probe layout present, point-read only the
-    // candidate ids' embedding rows (bounded candidate collect →
-    // id-bucket directory pruning + pushed id IN filter); tombstones
-    // are already applied upstream of the candidate ids
-    val storedEmb0 =
-      if (usePruned) {
-        val idRows = cands.select("corpus_id").distinct()
-          .limit(graft.sources.IdBuckets.MaxIdLiterals + 1).collect()
-        if (idRows.length <= graft.sources.IdBuckets.MaxIdLiterals)
-          graft.sources.IdBuckets.prunedById(s, s"$dir/embeddings", "vec_id",
-            idRows.map(_.getLong(0)).toSeq)
-        else graft.sources.IdBuckets.read(s, s"$dir/embeddings")
-      } else graft.sources.IdBuckets.read(s, s"$dir/embeddings")
-    val storedEmb = graft.sources.Tombstones.applyTo(s, storedEmb0, dir, "vec_id")
+    // on the pruned path the candidate frame feeds the bounded id collect
+    // AND the refine join — the barrier runs the candidate join once
+    val cands = probe.barrier(cands0)
+    // refine tier: on the pruned path, point-read only the candidate
+    // ids' embedding rows; tombstones are already applied upstream of
+    // the candidate ids
+    val storedEmb = probe.rowsFor("embeddings", cands.select("corpus_id"))
     GraftFunctions.register(s)
     cands
       .join(batch.select(col("vec_id").as("batch_id"), col("embedding").as("eb")), "batch_id")

@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * different logical batches under one id would overwrite each other's
   * landings (the Ledger.step contract). The narrower window BETWEEN
   * the hashes append and the pbands append is FENCED (GenStamp, via
-  * HashBanding.appendHashes): a crash there leaves the two tables'
+  * BandedIndex.append): a crash there leaves the two tables'
   * generation stamps diverged, so the retry's probe takes the full-scan
   * fallback — it SEES the already-landed hashes, admits nothing, and
   * re-lands nothing — and the retry's (empty) append heals the layout
@@ -601,20 +601,6 @@ object AssetIngest {
         s"$sinkDir/size", LandCol))
   }
 
-  private def storedHashes(s: SparkSession, indexDir: String): DataFrame = {
-    val p = new Path(s"$indexDir/hashes")
-    val exists = p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    if (exists) {
-      // same guard as dedup*AgainstIndex: probing a differently-banded
-      // index would silently lose the Hamming recall guarantee
-      HashBanding.requireMeta(s, indexDir)
-      Tombstones.applyTo(s, s.read.parquet(s"$indexDir/hashes"), indexDir, "asset_id")
-    } else {
-      import s.implicits._
-      Seq.empty[(Long, Array[Long])].toDF("asset_id", "ahash")
-    }
-  }
-
   /** Run one ingest cycle over an image batch (`asset_id`, `payload`).
     * Lands admitted assets (payload + decoded dims) under `dataDir`,
     * appends their hashes to `indexDir`, returns the accounting. */
@@ -630,7 +616,7 @@ object AssetIngest {
         col("height").between(minSide, maxSide),
       landCols = Seq("asset_id", "payload", "width", "height", "channels"),
       indexDir = indexDir, dataDir = dataDir, maxHamming = maxHamming,
-      sketches = sketches, modality = "image",
+      sketches = sketches, index = ImageCodec.HashIndex, modality = "image",
       sizeMetric = col("width") * col("height"), batchId = batchId)
   }
 
@@ -650,7 +636,8 @@ object AssetIngest {
       gate = col("n_samples").between(minSamples, maxSamples),
       landCols = Seq("asset_id", "payload", "sample_rate", "channels", "n_samples"),
       indexDir = indexDir, dataDir = dataDir, maxHamming = maxHamming,
-      sketches = sketches, modality = "audio", sizeMetric = col("n_samples"),
+      sketches = sketches, index = AudioCodec.HashIndex, modality = "audio",
+      sizeMetric = col("n_samples"),
       batchId = batchId)
   }
 
@@ -987,8 +974,8 @@ object AssetIngest {
     * for every downstream read. */
   private def ingestCore(s: SparkSession, annotated: DataFrame, gate: Column,
       landCols: Seq[String], indexDir: String, dataDir: String,
-      maxHamming: Int, sketches: Option[SketchSink], modality: String,
-      sizeMetric: Column, batchId: Option[String]): IngestReport = {
+      maxHamming: Int, sketches: Option[SketchSink], index: BandedIndex,
+      modality: String, sizeMetric: Column, batchId: Option[String]): IngestReport = {
     val ann = annotated.localCheckpoint(false)
     val total = ann.count()
     val nOk = ann.where(col("ok")).count()
@@ -1004,20 +991,18 @@ object AssetIngest {
     // corpus probe: linear in batch, tombstone-aware; takes the
     // literal-pruned pbands path when the index carries the probe
     // layout (HashBanding.probeAgainstDir — identical output by spec
-    // law), the full-scan fallback otherwise (including bootstrap,
-    // where the index doesn't exist yet)
-    val hashesPath = new Path(s"$indexDir/hashes")
+    // law), the full-scan fallback otherwise; before the first batch
+    // there is no corpus to probe
+    val hashesPath = new Path(s"$indexDir/${index.primary}")
     val indexExists = hashesPath.getFileSystem(
       s.sparkContext.hadoopConfiguration).exists(hashesPath)
-    val corpusDupIds = (
+    val corpusDupIds =
       if (indexExists) {
-        HashBanding.requireMeta(s, indexDir)
+        index.requireMeta(s, indexDir)
         HashBanding.probeAgainstDir(s,
-          keepers.select(col("asset_id"), col("ahash")), indexDir, maxHamming)
-      } else HashBanding.probe(
-        keepers.select(col("asset_id"), col("ahash")),
-        storedHashes(s, indexDir), maxHamming))
-      .select(col("batch_id").as("asset_id")).distinct()
+            keepers.select(col("asset_id"), col("ahash")), indexDir, maxHamming)
+          .select(col("batch_id").as("asset_id")).distinct()
+      } else keepers.select("asset_id").limit(0)
     val novel = keepers.join(corpusDupIds, Seq("asset_id"), "left_anti")
       .localCheckpoint(false) // landing + index append + count read it once
     val nNovel = novel.count()
@@ -1031,10 +1016,10 @@ object AssetIngest {
       HashBanding.writeMeta(s, indexDir)
     // fenced hashes + probe-layout append (GenStamp; a crash between the
     // commits degrades probes to the full scan, and the next cycle's
-    // append heals the layout); bootstrapLayout derives the whole table
-    // on the first batch / a pre-layout index upgrade
-    HashBanding.appendHashes(s, indexDir, novel.select("asset_id", "ahash"),
-      bootstrapLayout = true)
+    // append heals the layout), then — as the video loop does — the
+    // whole layout derived on the first batch / a pre-layout index
+    index.append(s, indexDir)(_ => novel.select("asset_id", "ahash"))
+    if (!BandBuckets.exists(s, s"$indexDir/pbands")) index.heal(s, indexDir)
     recordSketches(s, sketches, novel.withColumn("modality", lit(modality)),
       nNovel, Seq("modality"), "asset_id", sizeMetric,
       digest = xxhash64(col("payload")))

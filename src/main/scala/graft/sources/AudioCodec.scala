@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.sources.TableWrite.TableWriteOps
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
@@ -199,42 +198,31 @@ object AudioCodec {
   // index built from a BENCHMARK clip set is audio decontamination —
   // same op, different corpus. ---
 
+  /** The audio index's instance of the banded lifecycle (flat `hashes`). */
+  private[graft] val HashIndex: BandedIndex =
+    HashBanding.flatIndex("audio-hash", "AudioCodec.writeAudioHashIndex")
+
   /** Build the index: decode + envelope-hash every clip, store
     * (asset_id, ahash). */
-  def writeAudioHashIndex(s: SparkSession, assets: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    GenStamp.beginRebuild(s, dir) // rebuild fence: see DedupOps.writeMinhashIndex
-    audioHashes(assets).where(col("ok")).select("asset_id", "ahash")
-      .tableWrite.mode("overwrite").parquet(s"$dir/hashes")
-    HashBanding.writeProbeLayout(s, dir)
-    HashBanding.writeMeta(s, dir)
-    GenStamp.completeRebuild(s, dir, Seq(s"$dir/hashes", s"$dir/pbands"))
-  }
+  def writeAudioHashIndex(s: SparkSession, assets: DataFrame, dir: String): Unit =
+    HashIndex.write(s, dir, audioHashes(assets).where(col("ok")).select("asset_id", "ahash"),
+      None, HashBanding.meta(s))
 
   /** Assign-only append — deterministic codec path, nothing rewritten.
     * Caller owns id uniqueness (Ledger discipline; a retried batch
     * duplicates rows — same contract as every other index append).
     * Fenced dual write: see ImageCodec.appendToImageHashIndex. */
-  def appendToAudioHashIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    HashBanding.requireMeta(s, dir)
-    val hashed = audioHashes(batch).where(col("ok"))
-      .select("asset_id", "ahash").localCheckpoint(false)
-    HashBanding.appendHashes(s, dir, hashed)
-  }
+  def appendToAudioHashIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    HashIndex.append(s, dir)(_ => audioHashes(batch).where(col("ok")).select("asset_id", "ahash"))
 
   /** Takedown path: O(ids) tombstone append; probes exclude the ids
     * immediately, compaction folds them in later. */
   def deleteFromAudioHashIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    Tombstones.append(s, ids, dir)
+    HashIndex.delete(s, ids, dir)
 
   /** Fold tombstones into the stored hash table and clear them. */
   def compactAudioHashIndex(s: SparkSession, dir: String): Unit =
-    WriterLock.withLock(dir) {
-    HashBanding.foldProbeLayout(s, dir)
-    Tombstones.foldIntoFlat(s, s"$dir/hashes", dir, "asset_id")
-    Tombstones.clear(s, dir)
-  }
+    HashIndex.compact(s, dir)
 
   /** Probe: which batch clips perceptually duplicate an indexed clip?
     * Batch side is decoded + hashed once behind a barrier; stored side
@@ -245,7 +233,7 @@ object AudioCodec {
   def dedupAudioAgainstIndex(s: SparkSession, batch: DataFrame, dir: String,
       maxHamming: Int = HashBanding.DefaultMaxHamming,
       maxBucket: Int = HashBanding.DefaultMaxBucket): DataFrame = {
-    HashBanding.requireMeta(s, dir)
+    HashIndex.requireMeta(s, dir)
     val bHashes = audioHashes(batch).where(col("ok"))
       .select("asset_id", "ahash").localCheckpoint(false)
     HashBanding.probeAgainstDir(s, bHashes, dir, maxHamming, maxBucket)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.sources.TableWrite.TableWriteOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -102,25 +101,11 @@ object BandBuckets {
       throw new IllegalStateException(
         "graft test fault injection: probe-layout append suppressed")
     }
-    df.withColumn(Col, partOf(col(bandCol), col(bucketCol)))
-      .repartitionByRange(col(Col), col(bucketCol))
-      .sortWithinPartitions(col(Col), col(bucketCol))
-      .tableWrite.mode(mode).partitionBy(Col).parquet(path)
-    dropIfPartless(df.sparkSession, path)
+    Partitioned.write(df, Col, partOf(col(bandCol), col(bucketCol)), bucketCol, path, mode)
     // the path may have held a previous generation of the table (the
     // upgrade/rebuild flow) — drop any cached file listing so the next
     // reader lists the files actually on disk
     df.sparkSession.catalog.refreshByPath(path)
-  }
-
-  private def dropIfPartless(s: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hfs.exists(p) &&
-        !hfs.listStatus(p).exists(_.getPath.getName.startsWith(s"$Col="))) {
-      hfs.delete(p, true)
-      ()
-    }
   }
 
   /** The logical view (partition column dropped) — the fallback full
@@ -164,32 +149,20 @@ object BandBuckets {
   /** Fold tombstones into a band-partitioned table, rewriting ONLY the
     * partitions that hold the deleted ids' band rows. The deleted rows'
     * (band, bucket) keys are not derivable from the tombstone ids alone
-    * — the caller locates them from its GROUPED signature table (an
-    * id-bucket-pruned read + explode, run BEFORE that table is itself
-    * folded) and passes them as `deletedBandRows`. Affected partitions
-    * are a bounded collect (at most [[NumParts]] values); untouched
-    * directories' files are never opened. Same swap discipline as
-    * IdBuckets.foldIntoBucketed; does NOT clear the tombstones — the
-    * owning compact* clears once every table of the index is folded. */
-  def foldIntoBanded(s: SparkSession, tablePath: String, dir: String,
-      idCol: String, deletedBandRows: DataFrame,
-      bandCol: String = "band", bucketCol: String = "bucket"): Unit =
-    Tombstones.read(s, dir).foreach { t =>
-      val affected = deletedBandRows
-        .select(partOf(col(bandCol), col(bucketCol)).as("pb"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      if (affected.nonEmpty && exists(s, tablePath)) {
-        val tmp = s"${tablePath}__compact_tmp"
-        val base = s.read.parquet(tablePath)
-          .where(col(Col).isin(affected.map(Integer.valueOf).toSeq: _*))
-        base.join(broadcast(t), base(idCol) === t("id"), "left_anti")
-          .repartitionByRange(col(Col), col(bucketCol))
-          .sortWithinPartitions(col(Col), col(bucketCol))
-          .tableWrite.mode("overwrite").partitionBy(Col).parquet(tmp)
-        FsMoves.swapPartitions(TableWrite.fs(s, new Path(tablePath)),
-          tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
-        dropIfPartless(s, tablePath)
-        s.catalog.refreshByPath(tablePath)
-      }
-    }
+    * — the caller locates them from its primary signature table (run
+    * BEFORE that table is itself folded) and passes them as
+    * `deletedBandRows`. Affected partitions are a bounded collect (at
+    * most [[NumParts]] values); untouched directories' files are never
+    * opened. `tombstones` is the gated join side ([[Tombstones.foldSide]]).
+    * Does NOT clear the tombstones — the index lifecycle
+    * (BandedIndex.compact) clears once every table is folded. */
+  private[sources] def fold(s: SparkSession, tablePath: String, idCol: String,
+      deletedBandRows: DataFrame, tombstones: DataFrame, bandCol: String,
+      bucketCol: String): Unit = {
+    val key = partOf(col(bandCol), col(bucketCol))
+    Partitioned.fold(s, tablePath, Col, key, bucketCol, idCol,
+      deletedBandRows.select(key).distinct().collect().map(_.getInt(0)).sorted.toSeq,
+      tombstones)
+    s.catalog.refreshByPath(tablePath)
+  }
 }

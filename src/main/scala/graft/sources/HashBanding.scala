@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.TableWrite.TableWriteOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Modality-agnostic banded 256-bit perceptual-hash dedup engine — the
@@ -75,37 +75,55 @@ object HashBanding {
     h
   }
 
-  /** Record this engine's band geometry (and the index's on-disk layout
-    * generation, IndexMeta) next to a persisted hash index. Image/audio
-    * keep the default flat layout — their physical shape never changed;
-    * the video index passes [[IndexMeta.GroupedLayout]] for its r11
-    * one-table grouped form. */
-  def writeMeta(s: SparkSession, dir: String,
-      layout: Int = IndexMeta.FlatLayout): Unit = {
+  /** This engine's band geometry plus the index's on-disk layout
+    * generation (IndexMeta) as a 1-row meta frame. Image/audio keep the
+    * default flat layout — their physical shape never changed; the video
+    * index passes [[IndexMeta.GroupedLayout]] for its r11 one-table
+    * grouped form. */
+  def meta(s: SparkSession, layout: Int = IndexMeta.FlatLayout): DataFrame = {
     import s.implicits._
     Seq((Bands, BandBits, layout)).toDF("bands", "bits", "layout")
-      .tableWrite.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Fail loudly on an index written under different band semantics — a
+  /** Record [[meta]] next to a persisted hash index. */
+  def writeMeta(s: SparkSession, dir: String,
+      layout: Int = IndexMeta.FlatLayout): Unit =
+    meta(s, layout).tableWrite.mode("overwrite").parquet(s"$dir/meta")
+
+  /** A meta row written under different band semantics fails loudly: a
     * probe through mismatched banding would silently lose the Hamming
-    * recall guarantee — or under a different on-disk layout (`rebuild`
-    * names the writer to re-run; a pre-stamping meta row reads as
-    * [[IndexMeta.FlatLayout]], so old image/audio indexes stay readable
-    * and old grouped-family indexes fail with the rebuild message
-    * instead of a path-not-found). Shared by every index
-    * reader/appender (image, audio, video; including AssetIngest's
-    * probe path). */
-  def requireMeta(s: SparkSession, dir: String,
-      layout: Int = IndexMeta.FlatLayout,
-      rebuild: String = "the index writer"): Unit = {
-    GenStamp.requireNoRebuild(s, dir, "perceptual-hash", rebuild)
-    val meta = IndexMeta.headCached(s, s"$dir/meta")
+    * recall guarantee. */
+  private[sources] def checkBanding(meta: Row): Unit =
     require(meta.getAs[Int]("bands") == Bands && meta.getAs[Int]("bits") == BandBits,
       s"unsupported index banding (${meta.getAs[Int]("bands")}x${meta.getAs[Int]("bits")}" +
         s", this engine is ${Bands}x$BandBits)")
-    IndexMeta.requireLayout(meta, layout, "perceptual-hash", rebuild)
-  }
+
+  /** The hash-index meta check ([[checkBanding]] plus the layout stamp,
+    * `rebuild` naming the writer to re-run) for callers that know a
+    * layout but not a family (the streaming hash gates). A pre-stamping
+    * meta row reads as [[IndexMeta.FlatLayout]], so old image/audio
+    * indexes stay readable and old grouped-family indexes fail with the
+    * rebuild message instead of a path-not-found. */
+  def requireMeta(s: SparkSession, dir: String,
+      layout: Int = IndexMeta.FlatLayout,
+      rebuild: String = "the index writer"): Unit =
+    BandedIndex.requireMeta(s, dir, "perceptual-hash", rebuild, layout)(checkBanding)
+
+  /** The flat hash index of the image and audio families: `hashes` (one
+    * (asset_id, ahash) row per asset, banding recomputed at read) and its
+    * `pbands` rows carrying the full hash, so a pruned probe answers
+    * candidates AND the exact popcount refine from one literal-pruned
+    * scan. */
+  private[sources] def flatIndex(name: String, writer: String): BandedIndex =
+    new BandedIndex(name, writer, primary = "hashes", refine = None,
+      idCol = "asset_id", bandIdCol = "asset_id", bandCol = "band_idx",
+      bucketCol = "band_val", layout = IndexMeta.FlatLayout,
+      bandRowsOf = banded(_, "asset_id", "ahash"), checkMeta = checkBanding)
+
+  /** The image and audio indexes share their tables; this instance serves
+    * the calls that do not name a family ([[writeProbeLayout]],
+    * [[probeAgainstDir]], the streaming hash gates). */
+  private[graft] val FlatHashes = flatIndex("perceptual-hash", "the index writer")
 
   private val BandsPerWord = 64 / BandBits
 
@@ -193,19 +211,9 @@ object HashBanding {
     * consumes plus a per-band top-k window — cheap enough to run on
     * every index build report. Returns (band, bucket, population),
     * population-descending within each band. */
-  def bucketStats(hashes: DataFrame, perBand: Int = 10): DataFrame = {
-    require(perBand >= 1, s"perBand must be >= 1, got $perBand")
-    banded(hashes, "a_id", "a_hash")
-      .groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("population"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band_idx")
-          .orderBy(col("population").desc, col("band_val"))))
-      .where(col("rnk") <= perBand)
-      .select(col("band_idx").as("band"), col("band_val").as("bucket"),
-        col("population"))
-      .orderBy(col("band"), col("population").desc, col("bucket"))
-  }
+  def bucketStats(hashes: DataFrame, perBand: Int = 10): DataFrame =
+    BandedIndex.topBuckets(banded(hashes, "a_id", "a_hash"), perBand,
+      "band_idx", "band_val")
 
   /** Self-join: all pairs (a_id < b_id) at Hamming <= maxHamming.
     * Worst-case join work under the default cap is real money at scale
@@ -286,114 +294,27 @@ object HashBanding {
       .where(col("hamming") <= maxHamming)
   }
 
-  // --- Band-partitioned probe layout for the flat hash indexes (the
-  // image/audio twin of the MinHash/embed-LSH `pbands` tables, see
-  // BandBuckets): band rows persisted WITH the full 256-bit hash
-  // carried, so a pruned probe answers candidates AND the exact
-  // popcount refine from one literal-pruned scan — no second table
-  // lookup, per-probe cost O(batch keys) row groups at any corpus
-  // size. Derived data: re-derivable from `hashes` at any time, and
-  // probes fall back to the full scan when absent. ---
-
-  /** (Re-)derive `dir/pbands` from `dir/hashes` — called by the index
-    * writers; also the upgrade path for a pre-layout index and the HEAL
-    * path for a layout diverged by a crashed append (the re-derivation
-    * ends by reconverging the GenStamp fence, so pruned probes resume). */
+  /** (Re-)derive `dir/pbands` from `dir/hashes` (BandedIndex.heal) — the
+    * upgrade path for a pre-layout image/audio index and the heal for a
+    * layout diverged by a crashed append. */
   def writeProbeLayout(s: SparkSession, dir: String): Unit =
-    WriterLock.withLock(dir) {
-    if (BandBuckets.exists(s, s"$dir/hashes")) {
-      BandBuckets.write(
-        banded(s.read.parquet(s"$dir/hashes"), "asset_id", "ahash"),
-        s"$dir/pbands", "overwrite", bandCol = "band_idx", bucketCol = "band_val")
-      GenStamp.syncDerived(s, s"$dir/hashes", s"$dir/pbands")
-    }
-    }
-
-  /** FENCED dual append of a hashed batch: the flat `hashes` table plus
-    * its derived probe layout land as separate parquet jobs, so the pair
-    * is fenced with append-generation stamps (GenStamp's protocol — the
-    * primary's stamp is bumped BEFORE its commit, the layout's after
-    * its own, so a crash anywhere in the window leaves the stamps
-    * diverged and probes take the full-scan fallback instead of
-    * silently missing the batch). An append that FINDS the layout
-    * already diverged (a previous append crashed mid-window) re-derives
-    * the whole layout from `hashes` instead of appending — the batch's
-    * rows AND the crashed batch's missing rows land in one pass, and
-    * the fence reconverges. When the layout doesn't exist: plain append
-    * (never create a partial layout), plus the bootstrap derivation iff
-    * `bootstrapLayout` (the ingest-loop convention; the codec-level
-    * appends leave pre-layout indexes on the full-scan fallback). */
-  def appendHashes(s: SparkSession, dir: String, hashed: DataFrame,
-      bootstrapLayout: Boolean = false): Unit = WriterLock.withLock(dir) {
-    val primary = s"$dir/hashes"
-    val derived = s"$dir/pbands"
-    if (!BandBuckets.exists(s, derived)) {
-      hashed.tableWrite.mode("append").parquet(primary)
-      if (bootstrapLayout) writeProbeLayout(s, dir)
-    } else {
-      val wasInSync = GenStamp.read(s, primary) == GenStamp.read(s, derived)
-      val gen = GenStamp.beginAppend(s, primary)
-      hashed.tableWrite.mode("append").parquet(primary)
-      if (wasInSync) {
-        appendProbeLayout(s, dir, hashed)
-        GenStamp.stamp(s, derived, gen)
-      } else writeProbeLayout(s, dir) // heal: see scaladoc
-    }
-  }
-
-  /** Append a hashed batch's band rows — only if the layout already
-    * exists (never create a partial table; pre-layout indexes stay on
-    * the full-scan fallback until [[writeProbeLayout]] runs). Callers
-    * appending to `hashes` as well must go through [[appendHashes]] so
-    * the pair is fenced. */
-  def appendProbeLayout(s: SparkSession, dir: String, hashed: DataFrame): Unit =
-    if (BandBuckets.exists(s, s"$dir/pbands"))
-      BandBuckets.write(banded(hashed, "asset_id", "ahash"),
-        s"$dir/pbands", "append", bandCol = "band_idx", bucketCol = "band_val")
-
-  /** Fold tombstones into the probe layout (before/independent of the
-    * flat `hashes` fold — the deleted band rows are derived from the
-    * tombstoned hashes themselves). */
-  def foldProbeLayout(s: SparkSession, dir: String): Unit =
-    Tombstones.read(s, dir).foreach { t =>
-      if (BandBuckets.exists(s, s"$dir/pbands")) {
-        val hs = s.read.parquet(s"$dir/hashes")
-        val deleted = banded(
-          hs.join(broadcast(t), hs("asset_id") === t("id"), "left_semi"),
-          "asset_id", "ahash")
-        BandBuckets.foldIntoBanded(s, s"$dir/pbands", dir, "asset_id",
-          deleted, bandCol = "band_idx", bucketCol = "band_val")
-      }
-    }
+    FlatHashes.heal(s, dir)
 
   /** The banded batch side of a probe — exposed for family-specific
     * pruned probes (VideoCodec) that share [[probeOnBanded]]. */
   private[sources] def bandedBatch(hashedBatch: DataFrame): DataFrame =
     banded(hashedBatch, "batch_id", "b_hash")
 
-  /** PRUNED batch-vs-corpus probe over the persisted layout under `dir`:
-    * identical output to [[probe]] (spec law), but the corpus side is a
-    * literal-pruned scan of `dir/pbands` instead of a full `dir/hashes`
-    * scan. Falls back to the full-scan [[probe]] shape over `dir/hashes`
-    * when the layout is absent. */
+  /** Batch-vs-corpus probe against the image/audio index under `dir`:
+    * identical output to [[probe]] (spec law), with the corpus side a
+    * literal-pruned scan of `dir/pbands` when the layout is in sync, a
+    * full `dir/hashes` scan otherwise (BandedIndex.probe). */
   def probeAgainstDir(s: SparkSession, hashedBatch: DataFrame, dir: String,
       maxHamming: Int, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val b = bandedBatch(hashedBatch)
-    if (GenStamp.prunedProbeOk(s, s"$dir/hashes", s"$dir/pbands",
-        "perceptual-hash", "HashBanding.writeProbeLayout (or the next append)")) {
-      val c = Tombstones.applyTo(s,
-        BandBuckets.prunedRead(s, s"$dir/pbands",
-          b.select("band_idx", "band_val"),
-          bandCol = "band_idx", bucketCol = "band_val"),
-        dir, "asset_id")
-        .select(col("asset_id").as("corpus_id"), col("ahash").as("c_hash"),
-          col("band_idx"), col("band_val"))
-      probeOnBanded(b, c, maxHamming, maxBucket)
-    } else {
-      val stored = Tombstones.applyTo(
-        s, s.read.parquet(s"$dir/hashes"), dir, "asset_id")
-      probeOnBanded(b, banded(stored, "corpus_id", "c_hash"),
-        maxHamming, maxBucket)
-    }
+    val c = FlatHashes.probe(s, dir).bandRows(b.select("band_idx", "band_val"))
+      .select(col("asset_id").as("corpus_id"), col("ahash").as("c_hash"),
+        col("band_idx"), col("band_val"))
+    probeOnBanded(b, c, maxHamming, maxBucket)
   }
 }

@@ -75,75 +75,99 @@ object IdBuckets {
     * husk is removed and existence checks / bootstrap logic behave as if
     * nothing was written — the first NON-empty batch creates the table.
     * A zero-row append to an EXISTING table keeps its partitions and is
-    * a true no-op. The check is one directory listing, not a job. */
-  def write(df: DataFrame, idCol: String, path: String, mode: String): Unit = {
-    // Range-cluster by (bucket, id) before the partitioned write: each
-    // directory's files then carry DISJOINT id ranges with tight
-    // row-group min/max stats, so a pruned point-lookup's pushed
-    // `id IN (...)` filter ([[prunedById]]) skips the row groups a
-    // candidate list doesn't touch. Write parallelism stays at the
-    // range sampler's allocation, not NumBuckets.
-    df.withColumn(Col, bucketOf(col(idCol)))
-      .repartitionByRange(col(Col), col(idCol))
-      .sortWithinPartitions(col(Col), col(idCol))
-      .tableWrite.mode(mode).partitionBy(Col).parquet(path)
-    dropIfPartless(df.sparkSession, path)
-  }
-
-  private def dropIfPartless(s: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (hfs.exists(p) &&
-        !hfs.listStatus(p).exists(_.getPath.getName.startsWith(s"$Col="))) {
-      hfs.delete(p, true)
-      ()
-    }
-  }
+    * a true no-op. The check is one directory listing, not a job.
+    *
+    * Rows are range-clustered by (bucket, id) before the partitioned
+    * write: each directory's files then carry DISJOINT id ranges with
+    * tight row-group min/max stats, so a pruned point-lookup's pushed
+    * `id IN (...)` filter ([[prunedById]]) skips the row groups a
+    * candidate list doesn't touch. Write parallelism stays at the range
+    * sampler's allocation, not NumBuckets. */
+  def write(df: DataFrame, idCol: String, path: String, mode: String): Unit =
+    Partitioned.write(df, Col, bucketOf(col(idCol)), idCol, path, mode)
 
   /** The logical view of a bucketed table (partition column dropped). */
   def read(s: SparkSession, path: String): DataFrame =
     TableRead.read(s, path).drop(Col)
 
+  /** The distinct id buckets of a tombstone frame's `id` column, sorted —
+    * a bounded driver list (at most NumBuckets values). */
+  private[sources] def bucketsOf(tombstones: DataFrame): Seq[Int] =
+    tombstones.select(bucketOf(col("id"))).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+
   /** Fold `dir`'s tombstones into a bucketed table, rewriting ONLY the
     * affected bucket partitions; untouched partitions' files are not
     * opened, let alone rewritten (IndexMaintenanceSpec pins them
-    * byte-identical). Same swap discipline as Tombstones.foldIntoFlat:
-    * survivors land in a temp dir first, then partition dirs swap in; a
-    * bucket whose rows all died is simply removed. Does NOT clear the
-    * tombstones — the caller clears once every table of the index is
-    * folded. */
-  /** Tombstone sets small enough to ride as a broadcast in the
-    * compaction anti-join — ~16 MB of long ids, far past any takedown
-    * batch. A MASS deletion above this falls back to a shuffle
-    * anti-join: slower, but it cannot OOM the driver, and a fold that
-    * big is rewriting most of the table anyway. */
-  val MaxBroadcastTombstones: Long = 1L << 20
-
+    * byte-identical). The tombstone side is broadcast only up to
+    * `maxBroadcastTombstones` ids ([[Tombstones.foldSide]]). Does NOT
+    * clear the tombstones — the caller clears once every table of the
+    * index is folded. */
   def foldIntoBucketed(s: SparkSession, tablePath: String, dir: String,
       idCol: String,
-      maxBroadcastTombstones: Long = MaxBroadcastTombstones): Unit =
+      maxBroadcastTombstones: Long = Tombstones.MaxBroadcastTombstones): Unit =
     Tombstones.read(s, dir).foreach { t =>
-      // bounded driver list: at most NumBuckets values
-      val affected = t.select(bucketOf(col("id")).as("b")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (affected.nonEmpty) {
-        // count-gate the broadcast (r11 verdict nit): takedowns are the
-        // documented small case, but a pathological mass-deletion set
-        // must degrade to a shuffle anti-join, not a driver OOM
-        val tSide =
-          if (t.count() <= maxBroadcastTombstones) broadcast(t) else t
-        val tmp = s"${tablePath}__compact_tmp"
-        val base = s.read.parquet(tablePath)
-          .where(col(Col).isin(affected.map(Integer.valueOf).toSeq: _*))
-        base.join(tSide, base(idCol) === tSide("id"), "left_anti")
-          .repartitionByRange(col(Col), col(idCol))
-          .sortWithinPartitions(col(Col), col(idCol))
-          .tableWrite.mode("overwrite").partitionBy(Col).parquet(tmp)
-        FsMoves.swapPartitions(TableWrite.fs(s, new Path(tablePath)),
-          tablePath, tmp, affected.map(b => s"$Col=$b").toSeq)
-        // a fold that deleted every row leaves the same unreadable husk
-        // as an empty write — normalize it away (see write's scaladoc)
-        dropIfPartless(s, tablePath)
-      }
+      fold(s, tablePath, idCol, bucketsOf(t), Tombstones.foldSide(t, maxBroadcastTombstones))
+    }
+
+  /** [[foldIntoBucketed]] over the tombstoned ids' `buckets` and their
+    * gated join side ([[Tombstones.foldSide]]). */
+  private[sources] def fold(s: SparkSession, tablePath: String, idCol: String,
+      buckets: Seq[Int], tombstones: DataFrame): Unit =
+    Partitioned.fold(s, tablePath, Col, bucketOf(col(idCol)), idCol, idCol,
+      buckets, tombstones)
+}
+
+/** The write and the tombstone fold shared by the two partitioned index
+  * layouts: [[IdBuckets]] (partition = id hash bucket, clustered by id)
+  * and [[BandBuckets]] (partition = band-key hash, clustered by bucket).
+  */
+private[sources] object Partitioned {
+
+  /** Write `df` under `path` with `partCol = key`, range-clustered and
+    * sorted by (`partCol`, `sortCol`), then drop the husk a zero-row
+    * write leaves ([[dropIfPartless]]). */
+  def write(df: DataFrame, partCol: String, key: Column, sortCol: String,
+      path: String, mode: String): Unit = {
+    df.withColumn(partCol, key)
+      .repartitionByRange(col(partCol), col(sortCol))
+      .sortWithinPartitions(col(partCol), col(sortCol))
+      .tableWrite.mode(mode).partitionBy(partCol).parquet(path)
+    dropIfPartless(df.sparkSession, path, partCol)
+  }
+
+  /** A partitioned write that leaves no `partCol=` directory (zero rows,
+    * or a fold that deleted every row) leaves an unreadable husk with no
+    * footer to infer a schema from; it is removed, so existence checks
+    * read "no table". One listing, no job. */
+  def dropIfPartless(s: SparkSession, path: String, partCol: String): Unit = {
+    val p = new Path(path)
+    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (hfs.exists(p) &&
+        !hfs.listStatus(p).exists(_.getPath.getName.startsWith(s"$partCol="))) {
+      hfs.delete(p, true)
+      ()
+    }
+  }
+
+  /** Rewrite the `affected` partitions of `tablePath` minus the rows whose
+    * `idCol` is in `tombstones` (the gated `id` join side,
+    * [[Tombstones.foldSide]]). Only the affected leaf directories are read
+    * ([[TableRead.bucketRead]]; the partition column is recomputed from
+    * the row); the survivors are written to a temp root and swapped in
+    * partition by partition ([[FsMoves.swapPartitions]]); a partition
+    * whose rows all died is removed. Untouched partitions are never
+    * opened. */
+  def fold(s: SparkSession, tablePath: String, partCol: String, key: Column,
+      sortCol: String, idCol: String, affected: Seq[Int],
+      tombstones: DataFrame): Unit =
+    if (affected.nonEmpty) {
+      val tmp = s"${tablePath}__compact_tmp"
+      val base = TableRead.bucketRead(s, tablePath, partCol, affected)
+      write(base.join(tombstones, base(idCol) === tombstones("id"), "left_anti"),
+        partCol, key, sortCol, tmp, "overwrite")
+      FsMoves.swapPartitions(TableWrite.fs(s, new Path(tablePath)),
+        tablePath, tmp, affected.map(b => s"$partCol=$b"))
+      dropIfPartless(s, tablePath, partCol)
     }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.sources.TableWrite.TableWriteOps
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
@@ -484,47 +483,34 @@ object ImageCodec {
   // against an index built from a BENCHMARK image set is image
   // decontamination — same op, different corpus. ---
 
+  /** The image index's instance of the banded lifecycle (flat `hashes`). */
+  private[graft] val HashIndex: BandedIndex =
+    HashBanding.flatIndex("image-hash", "ImageCodec.writeImageHashIndex")
+
   /** Build the index: decode + aHash every asset, store (asset_id, ahash). */
-  def writeImageHashIndex(s: SparkSession, assets: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    GenStamp.beginRebuild(s, dir) // rebuild fence: see DedupOps.writeMinhashIndex
-    imageHashes(assets).where(col("ok")).select("asset_id", "ahash")
-      .tableWrite.mode("overwrite").parquet(s"$dir/hashes")
-    HashBanding.writeProbeLayout(s, dir)
-    HashBanding.writeMeta(s, dir)
-    GenStamp.completeRebuild(s, dir, Seq(s"$dir/hashes", s"$dir/pbands"))
-  }
+  def writeImageHashIndex(s: SparkSession, assets: DataFrame, dir: String): Unit =
+    HashIndex.write(s, dir, imageHashes(assets).where(col("ok")).select("asset_id", "ahash"),
+      None, HashBanding.meta(s))
 
   /** Assign-only append: hash the batch with the same (deterministic)
     * codec path and append — no retraining, nothing rewritten. Caller
     * owns id uniqueness (Ledger discipline; a retried batch duplicates
     * rows — same contract as every other index append). The hashes +
     * probe-layout pair lands under the GenStamp fence
-    * (HashBanding.appendHashes): a crash between the two commits leaves
-    * the stamps diverged, probes fall back to the full scan, and the
-    * next append heals the layout by re-deriving it. */
-  def appendToImageHashIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    HashBanding.requireMeta(s, dir)
-    val hashed = imageHashes(batch).where(col("ok"))
-      .select("asset_id", "ahash").localCheckpoint(false)
-    HashBanding.appendHashes(s, dir, hashed)
-  }
+    * (BandedIndex.append): a crash between the two commits leaves the
+    * stamps diverged, probes fall back to the full scan, and the next
+    * append heals the layout by re-deriving it. */
+  def appendToImageHashIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    HashIndex.append(s, dir)(_ => imageHashes(batch).where(col("ok")).select("asset_id", "ahash"))
 
   /** Takedown path: O(ids) tombstone append; probes exclude the ids
     * immediately, compaction folds them in later. */
   def deleteFromImageHashIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    Tombstones.append(s, ids, dir)
+    HashIndex.delete(s, ids, dir)
 
   /** Fold tombstones into the stored hash table and clear them. */
   def compactImageHashIndex(s: SparkSession, dir: String): Unit =
-    WriterLock.withLock(dir) {
-    // probe layout first (deleted band rows derive from the not-yet-
-    // folded hashes table), then the flat fold
-    HashBanding.foldProbeLayout(s, dir)
-    Tombstones.foldIntoFlat(s, s"$dir/hashes", dir, "asset_id")
-    Tombstones.clear(s, dir)
-  }
+    HashIndex.compact(s, dir)
 
   /** Probe: which batch images perceptually duplicate an indexed image?
     * Batch side is decoded + hashed once (the barrier keeps the codec
@@ -536,7 +522,7 @@ object ImageCodec {
   def dedupImagesAgainstIndex(s: SparkSession, batch: DataFrame, dir: String,
       maxHamming: Int = HashBanding.DefaultMaxHamming,
       maxBucket: Int = HashBanding.DefaultMaxBucket): DataFrame = {
-    HashBanding.requireMeta(s, dir)
+    HashIndex.requireMeta(s, dir)
     val bHashes = imageHashes(batch).where(col("ok"))
       .select("asset_id", "ahash").localCheckpoint(false)
     HashBanding.probeAgainstDir(s, bHashes, dir, maxHamming, maxBucket)

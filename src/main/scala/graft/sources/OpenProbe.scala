@@ -43,38 +43,22 @@ import org.apache.spark.sql.SparkSession
   */
 object OpenProbe {
 
-  /** A banded index family: its primary signature table and the
-    * whole-layout re-derivation that heals `pbands` from it (each ends
-    * by reconverging the GenStamp fence — see the rebuild scaladocs). */
-  sealed abstract class Family(val name: String, val primaryTable: String) {
-    def healLayout(s: SparkSession, indexDir: String): Unit
+  /** A banded index family: its instance of the banded lifecycle, whose
+    * primary signature table the layout fence compares against and whose
+    * whole-layout re-derivation ([[BandedIndex.heal]]) heals `pbands`. */
+  sealed abstract class Family(val index: BandedIndex) {
+    def name: String = index.name
   }
   /** MinHash text near-dup index (DedupOps.writeMinhashIndex family). */
-  case object MinhashText extends Family("minhash-text", "cbuckets") {
-    def healLayout(s: SparkSession, indexDir: String): Unit =
-      graft.operators.DedupOps.rebuildMinhashProbeLayout(s, indexDir)
-  }
+  case object MinhashText extends Family(graft.operators.DedupOps.MinhashIndex)
   /** Embedding-LSH near-dup index (VectorOps.writeEmbedLshIndex family). */
-  case object EmbedLsh extends Family("embed-lsh", "cbuckets") {
-    def healLayout(s: SparkSession, indexDir: String): Unit =
-      graft.operators.VectorOps.rebuildEmbedLshProbeLayout(s, indexDir)
-  }
+  case object EmbedLsh extends Family(graft.operators.VectorOps.EmbedLshIndex)
   /** Image perceptual-hash index (ImageCodec.writeImageHashIndex family). */
-  case object ImageHash extends Family("image-hash", "hashes") {
-    def healLayout(s: SparkSession, indexDir: String): Unit =
-      HashBanding.writeProbeLayout(s, indexDir)
-  }
-  /** Audio envelope-hash index (AudioCodec.writeAudioHashIndex family —
-    * same flat-hashes layout engine as images). */
-  case object AudioHash extends Family("audio-hash", "hashes") {
-    def healLayout(s: SparkSession, indexDir: String): Unit =
-      HashBanding.writeProbeLayout(s, indexDir)
-  }
+  case object ImageHash extends Family(ImageCodec.HashIndex)
+  /** Audio envelope-hash index (AudioCodec.writeAudioHashIndex family). */
+  case object AudioHash extends Family(AudioCodec.HashIndex)
   /** Video frame-hash index (VideoCodec.writeVideoHashIndex family). */
-  case object VideoHash extends Family("video-hash", "grouped") {
-    def healLayout(s: SparkSession, indexDir: String): Unit =
-      VideoCodec.writeVideoProbeLayout(s, indexDir)
-  }
+  case object VideoHash extends Family(VideoCodec.HashIndex)
 
   /** The probe layout's fence state relative to its primary table. */
   sealed trait LayoutStatus
@@ -96,9 +80,9 @@ object OpenProbe {
   /** The layout fence state for `family`'s index under `indexDir` — one
     * existence listing plus two marker reads, no Spark job. */
   def layoutStatus(s: SparkSession, indexDir: String, family: Family): LayoutStatus = {
-    val derived = s"$indexDir/pbands"
+    val derived = s"$indexDir/${BandedIndex.Derived}"
     if (!BandBuckets.exists(s, derived)) Absent
-    else if (GenStamp.read(s, s"$indexDir/${family.primaryTable}") ==
+    else if (GenStamp.read(s, s"$indexDir/${family.index.primary}") ==
       GenStamp.read(s, derived)) InSync
     else Diverged
   }
@@ -152,7 +136,7 @@ object OpenProbe {
       case ProbeMode.Pruned => seen match {
         case InSync => Opened(ProbeMode.Pruned, InSync, seen, healed = false)
         case Absent | Diverged if heal =>
-          family.healLayout(s, indexDir)
+          family.index.heal(s, indexDir)
           val after = layoutStatus(s, indexDir, family)
           // a rebuild over an absent/empty primary is a no-op — then the
           // honest answer is still the full scan

@@ -69,30 +69,53 @@ object Tombstones {
     ()
   }
 
+  /** Tombstone sets small enough to ride as a broadcast in a fold's
+    * joins — ~16 MB of long ids, far past any takedown batch. */
+  val MaxBroadcastTombstones: Long = 1L << 20
+
+  /** The one broadcast gate of the folds: the tombstone side of every
+    * fold join (the anti-join that rewrites a table, the semi-join that
+    * finds the deleted band rows) is broadcast up to
+    * `maxBroadcastTombstones` ids and a plain shuffle side past it, so a
+    * mass deletion degrades to a shuffle join instead of collecting the
+    * whole set on the driver — a fold that big rewrites most of the
+    * table anyway. One count job decides. Bounded collects that pick the
+    * partitions to rewrite read the ungated frame. */
+  def foldSide(t: DataFrame,
+      maxBroadcastTombstones: Long = MaxBroadcastTombstones): DataFrame =
+    if (t.count() <= maxBroadcastTombstones) broadcast(t) else t
+
   /** Fold `dir`'s tombstones into one flat (non-partitioned) parquet
     * table: rewrite minus the deleted ids, then swap the rewrite in. A
     * flat table has no finer rewrite unit than itself. Does NOT clear
     * the tombstones — an index may own several tables (e.g. MinHash
     * bands + shingles); the caller clears once all are folded. */
-  def foldIntoFlat(s: SparkSession, tablePath: String, dir: String, idCol: String): Unit =
-    read(s, dir).foreach { t =>
-      val tmp = s"${tablePath}__compact_tmp"
-      s.read.parquet(tablePath).join(broadcast(t), col(idCol) === t("id"), "left_anti")
-        .tableWrite.mode("overwrite").parquet(tmp)
-      // the swap replaces the whole directory, which would drop the
-      // table's GenStamp marker and leave it diverged from its fence
-      // partners (readers would then refuse a perfectly consistent
-      // index); folding changes no cross-table consistency, so the
-      // pre-fold generation carries across the swap
-      val gen = GenStamp.read(s, tablePath)
-      val hfs = fs(s, tablePath)
-      // the old table moves aside first and is deleted only once the
-      // rewrite is in place: a failed move throws with both on disk
-      val old = new Path(s"${tablePath}__compact_old")
-      hfs.delete(old, true)
-      FsMoves.move(hfs, new Path(tablePath), old)
-      FsMoves.move(hfs, new Path(tmp), new Path(tablePath))
-      hfs.delete(old, true)
-      if (gen != 0L) GenStamp.stamp(s, tablePath, gen)
-    }
+  def foldIntoFlat(s: SparkSession, tablePath: String, dir: String, idCol: String,
+      maxBroadcastTombstones: Long = MaxBroadcastTombstones): Unit =
+    read(s, dir).foreach(t =>
+      foldFlat(s, tablePath, idCol, foldSide(t, maxBroadcastTombstones)))
+
+  /** [[foldIntoFlat]] over a gated tombstone side ([[foldSide]]). */
+  private[sources] def foldFlat(s: SparkSession, tablePath: String, idCol: String,
+      tombstones: DataFrame): Unit = {
+    val tmp = s"${tablePath}__compact_tmp"
+    val base = TableRead.read(s, tablePath)
+    base.join(tombstones, base(idCol) === tombstones("id"), "left_anti")
+      .tableWrite.mode("overwrite").parquet(tmp)
+    // the swap replaces the whole directory, which would drop the
+    // table's GenStamp marker and leave it diverged from its fence
+    // partners (readers would then refuse a perfectly consistent
+    // index); folding changes no cross-table consistency, so the
+    // pre-fold generation carries across the swap
+    val gen = GenStamp.read(s, tablePath)
+    val hfs = fs(s, tablePath)
+    // the old table moves aside first and is deleted only once the
+    // rewrite is in place: a failed move throws with both on disk
+    val old = new Path(s"${tablePath}__compact_old")
+    hfs.delete(old, true)
+    FsMoves.move(hfs, new Path(tablePath), old)
+    FsMoves.move(hfs, new Path(tmp), new Path(tablePath))
+    hfs.delete(old, true)
+    if (gen != 0L) GenStamp.stamp(s, tablePath, gen)
+  }
 }

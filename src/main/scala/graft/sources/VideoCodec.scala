@@ -531,27 +531,6 @@ object VideoCodec {
       .select(col("asset_id"), col("f.first_idx").as("first_idx"),
         col("f.cnt").as("cnt"), col("f.ahash").as("ahash"))
 
-  /** The video index's meta check: band geometry + the r11 grouped
-    * layout stamp — a pre-r11 hashes+counts index fails with a rebuild
-    * message instead of being silently treated as absent (the hazard:
-    * an existence check keyed on `grouped` alone would skip corpus
-    * dedup over a perfectly real old index and admit duplicates). */
-  private[graft] def requireVideoMeta(s: SparkSession, dir: String): Unit =
-    HashBanding.requireMeta(s, dir, IndexMeta.GroupedLayout,
-      "VideoCodec.writeVideoHashIndex")
-
-  /** Build the index: decode + hash every frame, persist the grouped
-    * per-video rows. */
-  def writeVideoHashIndex(s: SparkSession, assets: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    val hashed = videoFrameHashes(assets).localCheckpoint(false)
-    GenStamp.beginRebuild(s, dir) // rebuild fence: see DedupOps.writeMinhashIndex
-    IdBuckets.write(groupedVideoRows(hashed), "asset_id", s"$dir/grouped", "overwrite")
-    writeVideoProbeLayout(s, dir)
-    HashBanding.writeMeta(s, dir, IndexMeta.GroupedLayout)
-    GenStamp.completeRebuild(s, dir, Seq(s"$dir/grouped", s"$dir/pbands"))
-  }
-
   /** The band-partitioned probe rows of a collapsed-frame view: one row
     * per (collapsed frame, band) carrying the frame uid, the owning
     * video id (tombstones apply at video granularity), the multiplicity
@@ -563,21 +542,34 @@ object VideoCodec {
         .select((col("asset_id") * MaxFramesPerVideo + col("first_idx")).as("uid"),
           col("asset_id").as("vid"), col("cnt"), col("ahash")))
 
+  /** The video index's instance of the banded lifecycle: the grouped
+    * per-video table, its per-frame band rows keyed by `vid`, and the
+    * band-geometry meta check under the r11 grouped layout stamp (a
+    * pre-r11 hashes+counts index fails with a rebuild message instead of
+    * being silently treated as absent). */
+  private[graft] val HashIndex: BandedIndex = new BandedIndex("video-hash",
+    "VideoCodec.writeVideoHashIndex", primary = "grouped", refine = None,
+    idCol = "asset_id", bandIdCol = "vid", bandCol = "band_idx",
+    bucketCol = "band_val", layout = IndexMeta.GroupedLayout,
+    bandRowsOf = g => videoProbeRows(collapsedRowsOfGrouped(g)),
+    checkMeta = HashBanding.checkBanding)
+
+  /** The video index's meta check ([[HashIndex]]). */
+  private[graft] def requireVideoMeta(s: SparkSession, dir: String): Unit =
+    HashIndex.requireMeta(s, dir)
+
+  /** Build the index: decode + hash every frame, persist the grouped
+    * per-video rows. */
+  def writeVideoHashIndex(s: SparkSession, assets: DataFrame, dir: String): Unit =
+    HashIndex.write(s, dir,
+      groupedVideoRows(videoFrameHashes(assets).localCheckpoint(false)), None,
+      HashBanding.meta(s, IndexMeta.GroupedLayout))
+
   /** (Re-)derive the video probe layout (`pbands`) from the grouped
-    * table — called by the index writers; also the upgrade path for a
-    * pre-layout index (probes fall back to the full scan until it
-    * runs). */
+    * table — the upgrade path for a pre-layout index and the heal for a
+    * diverged one. */
   def writeVideoProbeLayout(s: SparkSession, dir: String): Unit =
-    WriterLock.withLock(dir) {
-    if (BandBuckets.exists(s, s"$dir/grouped")) {
-      BandBuckets.write(
-        videoProbeRows(collapsedRowsOfGrouped(IdBuckets.read(s, s"$dir/grouped"))),
-        s"$dir/pbands", "overwrite", bandCol = "band_idx", bucketCol = "band_val")
-      // reconverge the append-generation fence (GenStamp) — the layout
-      // now reflects the grouped table exactly
-      GenStamp.syncDerived(s, s"$dir/grouped", s"$dir/pbands")
-    }
-    }
+    HashIndex.heal(s, dir)
 
   /** Assign-only append of a new video batch. Caller owns asset_id
     * uniqueness (Ledger discipline — see the image/audio index
@@ -588,62 +580,22 @@ object VideoCodec {
   /** Append PRE-COMPUTED frame hashes (asset_id, frame_idx, ahash) —
     * the ingest loop's path, where one decode pass feeds gate, dedup,
     * probe, and this append. `hashed` must be materialized (barriered)
-    * by the caller; rows are collapsed + grouped before storage. */
-  def appendVideoHashes(s: SparkSession, hashed: DataFrame,
-      dir: String): Unit = WriterLock.withLock(dir) {
-    requireVideoMeta(s, dir)
-    val hasLayout = BandBuckets.exists(s, s"$dir/pbands")
-    val wasInSync = !hasLayout ||
-      GenStamp.read(s, s"$dir/grouped") == GenStamp.read(s, s"$dir/pbands")
-    val gen = if (hasLayout) GenStamp.beginAppend(s, s"$dir/grouped") else 0L
-    IdBuckets.write(groupedVideoRows(hashed.select("asset_id", "frame_idx", "ahash")),
-      "asset_id", s"$dir/grouped", "append")
-    // keep the probe layout in sync — never CREATE a partial one
-    // (pre-layout indexes stay on the full-scan fallback until
-    // writeVideoProbeLayout derives the whole table). The grouped +
-    // pbands pair is fenced (GenStamp): a crash between the commits
-    // leaves the stamps diverged and probes take the full-scan
-    // fallback; a layout found ALREADY diverged heals by re-derivation.
-    if (hasLayout) {
-      if (wasInSync) {
-        BandBuckets.write(
-          videoProbeRows(collapseFrames(hashed.select("asset_id", "frame_idx", "ahash"))),
-          s"$dir/pbands", "append", bandCol = "band_idx", bucketCol = "band_val")
-        GenStamp.stamp(s, s"$dir/pbands", gen)
-      } else writeVideoProbeLayout(s, dir)
-    }
-  }
+    * by the caller; rows are collapsed + grouped before storage. The
+    * grouped + pbands pair lands under the GenStamp fence
+    * (BandedIndex.append). */
+  def appendVideoHashes(s: SparkSession, hashed: DataFrame, dir: String): Unit =
+    HashIndex.append(s, dir)(_ =>
+      groupedVideoRows(hashed.select("asset_id", "frame_idx", "ahash")))
 
   /** Takedown: O(ids) tombstone append. */
   def deleteFromVideoHashIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    Tombstones.append(s, ids, dir)
+    HashIndex.delete(s, ids, dir)
 
-  /** Fold tombstones into the grouped table, then clear them —
-    * id-bucketed, so only the partitions holding tombstoned videos are
-    * rewritten. */
+  /** Fold tombstones into the grouped table and its probe layout, then
+    * clear them — id-bucketed, so only the partitions holding tombstoned
+    * videos are rewritten. */
   def compactVideoHashIndex(s: SparkSession, dir: String): Unit =
-    WriterLock.withLock(dir) {
-    // probe layout first: the deleted videos' band rows are located from
-    // the not-yet-folded grouped table via its id-bucket directories,
-    // bounding the band-partition rewrite (the two schemes compose —
-    // see DedupOps.compactMinhashIndex)
-    Tombstones.read(s, dir).foreach { t =>
-      if (BandBuckets.exists(s, s"$dir/pbands")) {
-        val idDirs = t.select(IdBuckets.bucketOf(col("id")).as("b"))
-          .distinct().collect().map(_.getInt(0))
-        val ids = t.select(col("id").as("asset_id"))
-        val deleted = videoProbeRows(collapsedRowsOfGrouped(
-          s.read.parquet(s"$dir/grouped")
-            .where(col(IdBuckets.Col).isin(idDirs.map(Integer.valueOf).toSeq: _*))
-            .join(broadcast(ids), Seq("asset_id"), "left_semi")
-            .drop(IdBuckets.Col)))
-        BandBuckets.foldIntoBanded(s, s"$dir/pbands", dir, "vid", deleted,
-          bandCol = "band_idx", bucketCol = "band_val")
-      }
-    }
-    IdBuckets.foldIntoBucketed(s, s"$dir/grouped", dir, "asset_id")
-    Tombstones.clear(s, dir)
-  }
+    HashIndex.compact(s, dir)
 
   /** Probe: which batch videos near-duplicate an indexed video? Batch
     * frames are decoded + hashed once behind a barrier; candidates come
@@ -679,63 +631,30 @@ object VideoCodec {
     val bCnt = bCollapsed.select(
       (col("asset_id") * MaxFramesPerVideo + col("first_idx")).as("batch_id"),
       col("cnt").as("cnt_b"))
-    // PRUNED corpus side when the band-partition layout exists: frame
-    // candidates, multiplicities AND per-video frame counts all come
-    // from literal-pruned reads (BandBuckets.prunedRead for band rows,
-    // IdBuckets.prunedById for the candidate videos' n_frames), so the
-    // probe reads O(batch frame keys) row groups at any corpus size —
-    // output identical to the full-scan fallback (spec law). Tombstones
-    // apply at VIDEO granularity via the carried `vid` column.
-    val usePruned = GenStamp.prunedProbeOk(s, s"$dir/grouped", s"$dir/pbands",
-      "video", "VideoCodec.writeVideoProbeLayout (or the append retry)")
+    // The stored side (BandedIndex.probe): frame candidates and their
+    // multiplicities come from the tombstone-applied band rows — a
+    // literal-pruned `pbands` read when the layout is in sync, where
+    // every candidate frame has >= 1 band row, so its multiplicity rides
+    // along — and the candidate VIDEOS' n_frames from the grouped table
+    // (a point read on the pruned path). Tombstones apply at VIDEO
+    // granularity via the carried `vid` column. Output is identical on
+    // both paths (spec law).
     val b = HashBanding.bandedBatch(batchUids)
-    val (frameMatches, cCnt, corpusCounts) =
-      if (usePruned) {
-        val prunedC = Tombstones.applyTo(s,
-          BandBuckets.prunedRead(s, s"$dir/pbands",
-            b.select("band_idx", "band_val"),
-            bandCol = "band_idx", bucketCol = "band_val"),
-          dir, "vid")
-        val c0 = prunedC.select(col("uid").as("corpus_id"),
-          col("ahash").as("c_hash"), col("band_idx"), col("band_val"))
-        // every candidate frame has >= 1 band row in the pruned scan,
-        // so its multiplicity rides along — no grouped-table read
-        val cnts = prunedC
-          .select(col("uid").as("corpus_id"), col("cnt").as("cnt_c")).distinct()
-        // barrier: the frame-match frame feeds the bounded vid collect
-        // AND the alignment vote — without it the banded probe join
-        // re-runs per job (the pruned probe's fixed per-trigger
-        // constant, BASELINE.md r15)
-        val matches = HashBanding.probeOnBanded(b, c0, maxHamming, maxBucket)
-          .localCheckpoint(false)
-        // n_frames only for the candidate VIDEOS: bounded collect ->
-        // point-read of the grouped table (full read past the cap)
-        val vidRows = matches
-          .select(expr(s"corpus_id div $MaxFramesPerVideo").as("vid")).distinct()
-          .limit(IdBuckets.MaxIdLiterals + 1).collect()
-        val groupedView =
-          if (vidRows.length <= IdBuckets.MaxIdLiterals)
-            IdBuckets.prunedById(s, s"$dir/grouped", "asset_id",
-              vidRows.map(_.getLong(0)).toSeq)
-          else IdBuckets.read(s, s"$dir/grouped")
-        val counts = Tombstones.applyTo(s, groupedView, dir, "asset_id")
-          .select(col("asset_id").as("corpus_id"), col("n_frames").as("n_corpus"))
-        (matches, cnts, counts)
-      } else {
-        val grouped = Tombstones.applyTo(
-          s, IdBuckets.read(s, s"$dir/grouped"), dir, "asset_id")
-        val stored = requireUidRange(collapsedRowsOfGrouped(grouped))
-        val storedUids = stored
-          .select((col("asset_id") * MaxFramesPerVideo + col("first_idx")).as("asset_id"),
-            col("ahash"))
-        val cnts = stored.select(
-          (col("asset_id") * MaxFramesPerVideo + col("first_idx")).as("corpus_id"),
-          col("cnt").as("cnt_c"))
-        val counts = grouped
-          .select(col("asset_id").as("corpus_id"), col("n_frames").as("n_corpus"))
-        (HashBanding.probe(batchUids, storedUids, maxHamming, maxBucket),
-          cnts, counts)
-      }
+    val probe = HashIndex.probe(s, dir)
+    val stored = probe.bandRows(b.select("band_idx", "band_val"))
+    val cCnt = stored
+      .select(col("uid").as("corpus_id"), col("cnt").as("cnt_c")).distinct()
+    // barrier on the pruned path: the frame matches feed the bounded vid
+    // collect AND the alignment vote — without it the banded probe join
+    // re-runs per job (the pruned probe's fixed per-trigger constant,
+    // BASELINE.md r15)
+    val frameMatches = probe.barrier(HashBanding.probeOnBanded(b,
+      stored.select(col("uid").as("corpus_id"), col("ahash").as("c_hash"),
+        col("band_idx"), col("band_val")),
+      maxHamming, maxBucket))
+    val corpusCounts = probe.rowsFor(HashIndex.primary,
+        frameMatches.select(expr(s"corpus_id div $MaxFramesPerVideo")))
+      .select(col("asset_id").as("corpus_id"), col("n_frames").as("n_corpus"))
     val aligned = frameMatches
       .join(bCnt, Seq("batch_id"))
       .join(cCnt, Seq("corpus_id"))

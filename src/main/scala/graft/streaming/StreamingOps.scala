@@ -146,13 +146,11 @@ object StreamingOps {
     // index layout for exactly this reason (ProbeStreamPlanSpec pins the
     // static subtree Aggregate/ShuffleExchange-free).
     val idx = maybeCache(s, indexDir, "cbuckets", cacheStatic)(
-        graft.sources.Tombstones.applyTo(
-          s, graft.sources.IdBuckets.read(s, s"$indexDir/cbuckets"), indexDir, "doc_id"))
+        graft.operators.DedupOps.MinhashIndex.live(s, indexDir))
       .select(col("doc_id").as("corpus_id"), col("cbuckets"),
         posexplode(col("cbuckets")).as(Seq("band_c", "bucket_c")))
     val csh = maybeCache(s, indexDir, "shingles", cacheStatic)(
-        graft.sources.Tombstones.applyTo(
-          s, graft.sources.IdBuckets.read(s, s"$indexDir/shingles"), indexDir, "doc_id")
+        graft.operators.DedupOps.MinhashIndex.live(s, indexDir, "shingles")
         .select(col("doc_id").as("corpus_id"), col("sh").as("shc"))
         .where(size(col("shc")) > 0))
     bandRows
@@ -1012,7 +1010,7 @@ object StreamingOps {
       maxHamming: Int = graft.sources.HashBanding.DefaultMaxHamming,
       minFrac: Double = 0.5, symmetric: Boolean = false,
       minMatchedFrames: Long = 0L, cacheStatic: Boolean = false): DataFrame = {
-    import graft.sources.{HashBanding, Tombstones, VideoCodec}
+    import graft.sources.{HashBanding, VideoCodec}
     val s = assets.sparkSession
     VideoCodec.requireVideoMeta(s, indexDir)
     require(maxHamming >= 0 && maxHamming <= HashBanding.MaxGuaranteedHamming,
@@ -1034,8 +1032,7 @@ object StreamingOps {
     // a scan + generate, never a corpus-wide aggregation
     // (ProbeStreamPlanSpec pins the static subtree).
     val corpusRows = maybeCache(s, indexDir, "grouped", cacheStatic)(
-        Tombstones.applyTo(
-          s, graft.sources.IdBuckets.read(s, s"$indexDir/grouped"), indexDir, "asset_id")
+        VideoCodec.HashIndex.live(s, indexDir)
         .select(col("asset_id").as("corpus_id"), col("chashes"),
           col("n_frames").as("n_corpus"))
         .withColumn("c_keys", expr(HashBanding.packedFrameBandKeysExpr("chashes"))))
@@ -1083,7 +1080,6 @@ object StreamingOps {
   def embedDedupProbeStream(vecs: DataFrame, indexDir: String,
       threshold: Double = 0.99, cacheStatic: Boolean = false): DataFrame = {
     import graft.operators.VectorOps
-    import graft.sources.Tombstones
     val s = vecs.sparkSession
     graft.functions.GraftFunctions.register(s)
     val meta = VectorOps.requireEmbedLshMeta(s, indexDir)
@@ -1112,13 +1108,11 @@ object StreamingOps {
     // never a per-micro-batch corpus re-aggregation
     // (ProbeStreamPlanSpec pins the static subtree).
     val idx = maybeCache(s, indexDir, "cbuckets", cacheStatic)(
-        Tombstones.applyTo(
-          s, graft.sources.IdBuckets.read(s, s"$indexDir/cbuckets"), indexDir, "vec_id"))
+        VectorOps.EmbedLshIndex.live(s, indexDir))
       .select(col("vec_id").as("corpus_id"), col("label").as("label_c"), col("cbuckets"),
         posexplode(col("cbuckets")).as(Seq("band_c", "bucket_c")))
     val cemb = maybeCache(s, indexDir, "embeddings", cacheStatic)(
-        Tombstones.applyTo(
-          s, graft.sources.IdBuckets.read(s, s"$indexDir/embeddings"), indexDir, "vec_id")
+        VectorOps.EmbedLshIndex.live(s, indexDir, "embeddings")
         .select(col("vec_id").as("corpus_id"), col("embedding").as("ec")))
     bandRows
       .join(idx, col("label") === col("label_c") && col("band") === col("band_c") &&
@@ -1155,15 +1149,15 @@ object StreamingOps {
     * hashed stream frame (asset_id, ahash) against a stored hash index. */
   private def hashProbeStream(hashed: DataFrame, indexDir: String,
       maxHamming: Int, cacheStatic: Boolean = false): DataFrame = {
-    import graft.sources.{HashBanding, Tombstones}
+    import graft.sources.HashBanding
     val s = hashed.sparkSession
     HashBanding.requireMeta(s, indexDir)
     require(maxHamming >= 0 && maxHamming <= HashBanding.MaxGuaranteedHamming,
       s"banding only guarantees recall for Hamming <= " +
         s"${HashBanding.MaxGuaranteedHamming}, got $maxHamming")
     val streamBands = HashBanding.bandRowsCarried(hashed, "batch_id", "b_hash", "b_bands")
-    val stored = maybeCache(s, indexDir, "hashes", cacheStatic)(Tombstones.applyTo(
-      s, s.read.parquet(s"$indexDir/hashes"), indexDir, "asset_id"))
+    val stored = maybeCache(s, indexDir, "hashes", cacheStatic)(
+      HashBanding.FlatHashes.live(s, indexDir))
     val corpusBands = HashBanding.bandRowsCarried(stored, "corpus_id", "c_hash", "c_bands")
     streamBands.join(corpusBands, Seq("band_idx", "band_val"))
       // band-priority pick: drop the row if any EARLIER band also agrees

@@ -429,6 +429,62 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       maxBroadcastTombstones = 1L)
     val left = IdBuckets.read(spark, table).select("id").as[Long].collect().toSet
     assert(left === all.filter(_ % 2 == 0).toSet)
+
+    // the same gate serves the flat fold and the banded lifecycle's
+    // compaction (the deleted-band-row semi-join, the pbands fold and the
+    // id-bucket folds): over the gate, with auto-broadcast off, no fold
+    // join broadcasts; under it, the tombstones are broadcast
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.operators.DedupOps
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    def broadcastsIn(body: => Unit): Boolean = {
+      val saved = autoKeys.map(k => k -> spark.conf.getOption(k))
+      autoKeys.foreach(spark.conf.set(_, "-1"))
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        body
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
+      assert(!plans.isEmpty, "the listener saw no fold query")
+      scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala
+        .exists(_.contains("BroadcastHashJoin"))
+    }
+    val survivors = all.filter(_ % 2 == 0).toSet
+    def flatTable(name: String): String = {
+      val t = s"$base/$name"
+      all.toDF("id").write.parquet(t)
+      t
+    }
+    val flat = flatTable("flat")
+    assert(!broadcastsIn(Tombstones.foldIntoFlat(spark, flat, base, "id",
+      maxBroadcastTombstones = 1L)), "the flat fold broadcast past its gate")
+    assert(spark.read.parquet(flat).as[Long].collect().toSet === survivors)
+    val flat2 = flatTable("flat2")
+    assert(broadcastsIn(Tombstones.foldIntoFlat(spark, flat2, base, "id")),
+      "control: the flat fold did not broadcast a small tombstone set")
+    assert(spark.read.parquet(flat2).as[Long].collect().toSet === survivors)
+    val mh = s"$base/mh"
+    val docIds = 1L to 200L
+    DedupOps.writeMinhashIndex(spark,
+      docIds.map(i => (i, "s", s"a$i b$i c$i d$i e$i")).toDF("doc_id", "source", "text"), mh)
+    DedupOps.deleteFromMinhashIndex(spark, docIds.filter(_ % 2 == 1).toDF("id"), mh)
+    assert(!broadcastsIn(DedupOps.MinhashIndex.compact(spark, mh, maxBroadcastTombstones = 1L)),
+      "the banded compaction broadcast past its gate")
+    for (t <- Seq("pbands", "cbuckets", "shingles"))
+      assert(spark.read.parquet(s"$mh/$t").select("doc_id").distinct().as[Long]
+        .collect().toSet === docIds.filter(_ % 2 == 0).toSet, s"$t after the shuffle fold")
   }
 
   test("composed embedding ingest loop: bootstrap, gate, in-batch dedup, corpus probe, retry") {
