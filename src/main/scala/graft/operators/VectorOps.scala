@@ -281,29 +281,51 @@ object VectorOps {
   /** Train + encode phase of PQ: returns (codebooks (j, cell, centroid,
     * c2), codes (vec_id, label, codes)) — the two index tables a
     * production deployment persists (`writePqIndex`) and reuses across
-    * queries. */
+    * queries. The corpus must hold one dimension that `m` subspaces
+    * tile exactly. */
   def pqIndex(e: DataFrame, m: Int, ks: Int, iters: Int = 2): (DataFrame, DataFrame) = {
-    // 1-scalar sizing lookup (like Multimodal's byte-stats aggregate);
-    // subspaces must tile the dimension exactly
-    val dim = e.select(size(col("embedding"))).head().getInt(0)
-    require(dim % m == 0, s"PQ subspaces ($m) must divide dim ($dim)")
-    val d = dim / m
-    // exploded subvector frame: n*m rows of dim/m floats — same total
-    // bytes as the corpus, so training + encoding stay one-pass-shaped
-    val subs = e.select(col("vec_id"), col("label"),
-        explode(expr(s"transform(sequence(0, ${m - 1}), jj -> " +
-          s"named_struct('j', jj, 'sub', slice(embedding, jj * $d + 1, $d)))")).as("js"))
-      .select(col("vec_id"), col("label"), col("js.j").as("j"), col("js.sub").as("sub"))
-    val cb = trainPqCodebooks(subs, ks, iters)
-    // encode: one nearest-cell pass over the exploded frame, then codes
-    // packed in subspace order (the shuffle carries (vec_id, j, code)
-    // triples — m small ints per vector, nothing embedding-sized)
-    val codes = rankSubCells(subs, cb)
-      .select(col("vec_id"), col("label"), col("j"), expr("ranked[0].cl").as("code"))
-      .groupBy("vec_id", "label")
-      .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
-    (cb, codes)
+    val d = subspaceDim(requireCorpusDim(e, "PQ"), m)
+    val cb = trainPqCodebooks(pqSubvectors(e, m, d), ks, iters)
+    (cb, pqEncode(e, cb, m, d))
   }
+
+  /** The subvector length of `m` subspaces tiling `dim` exactly. */
+  private def subspaceDim(dim: Int, m: Int): Int = {
+    require(dim % m == 0, s"PQ subspaces ($m) must divide dim ($dim)")
+    dim / m
+  }
+
+  /** The exploded subvector frame (keys..., j, sub): the `m` slices of
+    * `src`, `d` floats each, one row per (row, subspace) — n*m rows of
+    * the corpus's bytes once, so training and encoding stay
+    * one-pass-shaped. */
+  private def subvectors(rows: DataFrame, keys: Seq[String], src: String,
+      m: Int, d: Int): DataFrame =
+    rows.select(keys.map(col) :+ explode(expr(s"transform(sequence(0, ${m - 1}), jj -> " +
+        s"named_struct('j', jj, 'sub', slice($src, jj * $d + 1, $d)))")).as("js"): _*)
+      .select(keys.map(col) ++ Seq(col("js.j").as("j"), col("js.sub").as("sub")): _*)
+
+  /** PQ's subvectors: the raw embeddings', keyed by (vec_id, label). */
+  private def pqSubvectors(e: DataFrame, m: Int, d: Int): DataFrame =
+    subvectors(e, Seq("vec_id", "label"), "embedding", m, d)
+
+  /** Codes of a subvector frame against PQ codebooks `cb`: per subspace
+    * the nearest cell, packed into one array<int> per key row (every
+    * column but `j` and `sub`) in subspace order. The shuffle carries
+    * (keys, j, code) — m small ints per vector, nothing embedding-sized. */
+  private def pqCodes(subs: DataFrame, cb: DataFrame): DataFrame = {
+    val keys = subs.columns.toSeq.filterNot(Set("j", "sub")).map(col)
+    rankSubCells(subs, cb)
+      .select(keys ++ Seq(col("j"), expr("ranked[0].cl").as("code")): _*)
+      .groupBy(keys: _*)
+      .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
+  }
+
+  /** The PQ encoder, shared by the build and the frozen-codebook append:
+    * (vec_id, label, codes) of `e` against codebooks `cb` of `m`
+    * subspaces of `d` floats. */
+  private def pqEncode(e: DataFrame, cb: DataFrame, m: Int, d: Int): DataFrame =
+    pqCodes(pqSubvectors(e, m, d), cb)
 
   /** ADC search phase of PQ over a (persisted or freshly built) index.
     * The subvector length is read off each centroid (size(centroid)),
@@ -312,30 +334,159 @@ object VectorOps {
     * measured operating points, not hope — see knnPqOn's caveat (32-bit
     * codes shortlist, they don't rank; default 200). */
   def pqSearch(cb: DataFrame, codes: DataFrame, full: DataFrame,
-      queryId: Long = 0, k: Int = 20, rerank: Int = 200): DataFrame = {
-    val q = full.where(col("vec_id") === queryId).select(col("embedding").as("qv"))
-    // ADC table: dot(q_j, centroid) for every (subspace, cell), packed as
-    // tabs[j][cell] — one broadcast row of m*ks doubles
-    val tabs = cb.crossJoin(broadcast(q))
+      queryId: Long = 0, k: Int = 20, rerank: Int = 200): DataFrame =
+    adcRerank(cb, codes.where(col("vec_id") =!= queryId), None,
+      full, queryVector(full, queryId), k, rerank)
+
+  /** The query vector `queryId` of `full` as a one-row (qv) frame. */
+  private def queryVector(full: DataFrame, queryId: Long): DataFrame =
+    full.where(col("vec_id") === queryId).select(col("embedding").as("qv"))
+
+  /** ADC scoring and exact rerank, shared by PQ and IVFADC. The ADC
+    * table holds dot(q_j, centroid) for every (subspace, cell) of `pqcb`,
+    * packed as tabs[j][cell] — one broadcast row of m*ks doubles; a
+    * candidate's approximate score is `offset` (IVFADC's coarse-cell dot)
+    * plus the m lookups of its codes, fused into the scan. The
+    * top-`rerank` candidates fetch their float embeddings from `full`
+    * and are rescored with the exact `graft_dot`; the top `k` of those
+    * are returned as (vec_id, label, sim). */
+  private def adcRerank(pqcb: DataFrame, candidates: DataFrame, offset: Option[Column],
+      full: DataFrame, q: DataFrame, k: Int, rerank: Int): DataFrame = {
+    val tabs = pqcb.crossJoin(broadcast(q))
       .select(col("j"), col("cell"),
         expr("graft_dot(slice(qv, j * size(centroid) + 1, size(centroid)), centroid)").as("t"))
       .groupBy("j")
       .agg(expr("transform(array_sort(collect_list(struct(cell, t))), x -> x.t)").as("tj"))
       .agg(expr("transform(array_sort(collect_list(struct(j, tj))), x -> x.tj)").as("tabs"))
-    val adc = codes.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(tabs))
-      .withColumn("asim", expr(
-        "aggregate(zip_with(codes, tabs, (cd, tb) -> element_at(tb, cd + 1)), " +
-          "CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
+    val lookups = expr("aggregate(zip_with(codes, tabs, (cd, tb) -> element_at(tb, cd + 1)), " +
+      "CAST(0.0 AS DOUBLE), (a, v) -> a + v)")
+    candidates.crossJoin(broadcast(tabs))
+      .withColumn("asim", offset.fold(lookups)(_ + lookups))
       .orderBy(col("asim").desc, col("vec_id").asc)
       .limit(rerank)
-    adc.join(full.select(col("vec_id"), col("embedding")), "vec_id")
+      .select("vec_id", "label")
+      .join(full.select(col("vec_id"), col("embedding")), "vec_id")
       .crossJoin(broadcast(q))
       .withColumn("sim", round(expr("graft_dot(embedding, qv)"), 6))
       .select("vec_id", "label", "sim")
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(k)
   }
+
+  /** One persisted ANN index family — IVF, PQ or IVFADC — and the
+    * lifecycle the three share: a fenced build, a fenced read, the
+    * frozen-codebook append, the tombstone delete and the compaction.
+    * `tables` are the tables a reader reads, codebooks first; the last
+    * one carries `vec_id` (tombstones apply to it, appends and
+    * compactions rewrite it), and `cellTable` is the one stored
+    * cell-partitioned. `snapshot` is a further table a build derives
+    * from its landed tables (IVF's drift baseline). Readers and appenders
+    * require `tables` generation-equal; a build stamps them and the
+    * snapshot to one generation. `heal` runs at the head of every
+    * mutator. */
+  private final class AnnIndex(name: String, writer: String,
+      tables: Seq[String], cellTable: Option[String],
+      snapshot: Option[(String, Seq[DataFrame] => DataFrame)] = None,
+      heal: (SparkSession, String) => Unit = (_, _) => ()) {
+
+    /** The tables a build writes and stamps. */
+    val written: Seq[String] = tables ++ snapshot.map(_._1)
+
+    private def paths(dir: String, ts: Seq[String]): Seq[String] = ts.map(t => s"$dir/$t")
+
+    /** The rebuild fence over `fence` (a reader's tables by default). */
+    def requireComplete(s: SparkSession, dir: String, fence: Seq[String] = tables): Unit =
+      graft.sources.GenStamp.requireRebuildComplete(s, dir, name, writer, paths(dir, fence))
+
+    /** One stored table, read under its footer schema (no inference job). */
+    def readTable(s: SparkSession, root: String, t: String): DataFrame =
+      if (cellTable.contains(t)) readCellPartitioned(s, s"$root/$t")
+      else graft.sources.TableRead.read(s, s"$root/$t")
+
+    private def writeTable(df: DataFrame, root: String, t: String, mode: String): Unit =
+      if (cellTable.contains(t)) df.tableWrite.mode(mode).partitionBy("cell").parquet(s"$root/$t")
+      else df.tableWrite.mode(mode).parquet(s"$root/$t")
+
+    /** The fenced tables in order, the tombstones applied to the last. */
+    def read(s: SparkSession, dir: String): Seq[DataFrame] = {
+      requireComplete(s, dir)
+      tables.init.map(readTable(s, dir, _)) :+
+        graft.sources.Tombstones.applyTo(s, readTable(s, dir, tables.last), dir, "vec_id")
+    }
+
+    /** Land `frames` as the tables under `root` (the index root, or a
+      * staged retrain), then the snapshot computed from what landed. */
+    def writeTables(s: SparkSession, root: String, frames: Seq[DataFrame]): Unit = {
+      tables.zip(frames).foreach { case (t, f) => writeTable(f, root, t, "overwrite") }
+      snapshot.foreach { case (t, of) =>
+        of(tables.map(readTable(s, root, _)))
+          .coalesce(1).tableWrite.mode("overwrite").parquet(s"$root/$t")
+      }
+    }
+
+    /** Stamp every written table to one generation and lift the fence. */
+    def completeRebuild(s: SparkSession, dir: String): Unit =
+      graft.sources.GenStamp.completeRebuild(s, dir, paths(dir, written))
+
+    /** Build under `dir`, replacing any previous index: `build` trains
+      * and returns the tables' frames before the rebuild marker goes up
+      * (a failed training leaves the old index serving), then the tables
+      * land and the fence lifts. A crash between the overwrites leaves
+      * the marker up, and readers fail loudly naming `writer`. */
+    def write(s: SparkSession, dir: String)(build: => Seq[DataFrame]): Unit =
+      graft.sources.WriterLock.withLock(dir) {
+        val frames = build
+        graft.sources.GenStamp.beginRebuild(s, dir)
+        writeTables(s, dir, frames)
+        completeRebuild(s, dir)
+      }
+
+    /** Append a batch encoded against the FROZEN stored codebooks:
+      * `encode` receives every table but the last (read job-free) and
+      * returns the last table's new rows, which land as an append —
+      * existing files are untouched. */
+    def append(s: SparkSession, dir: String)(encode: Seq[DataFrame] => DataFrame): Unit =
+      graft.sources.WriterLock.withLock(dir) {
+        heal(s, dir)
+        requireComplete(s, dir)
+        writeTable(encode(tables.init.map(readTable(s, dir, _))), dir, tables.last, "append")
+      }
+
+    /** Delete vectors: an O(ids) tombstone append under the root's lock. */
+    def delete(s: SparkSession, ids: DataFrame, dir: String): Unit =
+      graft.sources.WriterLock.withLock(dir) {
+        heal(s, dir)
+        graft.sources.Tombstones.append(s, ids, dir)
+      }
+
+    /** Fold the tombstones into the last table — its affected cell
+      * partitions when cell-partitioned, the whole table when flat — and
+      * clear them. */
+    def compact(s: SparkSession, dir: String): Unit =
+      graft.sources.WriterLock.withLock(dir) {
+        heal(s, dir)
+        val path = s"$dir/${tables.last}"
+        if (cellTable.contains(tables.last)) compactCellPartitioned(s, path, dir)
+        else graft.sources.Tombstones.foldIntoFlat(s, path, dir, "vec_id")
+        graft.sources.Tombstones.clear(s, dir)
+      }
+  }
+
+  /** IVF: the coarse codebook and the cell-partitioned postings, with
+    * the build-time distortion snapshot the drift monitor compares
+    * against; every mutator first heals a crashed staged retrain. */
+  private val Ivf = new AnnIndex("IVF", "VectorOps.writeIvfIndex",
+    Seq("codebook", "postings"), Some("postings"),
+    snapshot = Some(("buildstats", driftSnapshot _)), heal = healIvfRetrain)
+
+  /** PQ: the subspace codebooks and the flat codes table. */
+  private val Pq = new AnnIndex("PQ", "VectorOps.writePqIndex",
+    Seq("codebooks", "codes"), None)
+
+  /** IVFADC: the coarse codebook, the residual PQ codebooks and the
+    * cell-partitioned codes. */
+  private val IvfPq = new AnnIndex("IVFADC", "VectorOps.writeIvfPqIndex",
+    Seq("coarse", "pq_codebooks", "codes"), Some("codes"))
 
   /** Train + assign phase of a persistable IVF index — the coarse twin of
     * `pqIndex`, completing the index lifecycle for BOTH ANN families:
@@ -346,43 +497,40 @@ object VectorOps {
     * serves from). */
   def ivfIndex(e: DataFrame, cells: Int, iters: Int = 2): (DataFrame, DataFrame) = {
     val cb = trainCodebook(e, cells, iters)
-    val postings = rankCells(e, cb)
-      .select(expr("ranked[0].cl").as("cell"), col("vec_id"), col("label"), col("embedding"))
-    (cb, postings)
+    (cb, ivfEncode(e, cb))
   }
+
+  /** The IVF encoder, shared by the build, the frozen-codebook append and
+    * IVFADC's coarse assignment: every row of `e` tagged with its top-1
+    * cell of codebook `cb`, as (cell, vec_id, label, embedding). */
+  private def ivfEncode(e: DataFrame, cb: DataFrame): DataFrame =
+    rankCells(e, cb)
+      .select(expr("ranked[0].cl").as("cell"), col("vec_id"), col("label"), col("embedding"))
 
   /** Persist an IVF index under `dir`: codebook + cell-partitioned
     * postings (partitionBy makes the per-cell file pruning real — a
-    * probe's scan reads only the probed cells' directories). */
+    * probe's scan reads only the probed cells' directories), plus the
+    * build-time assignment-distortion snapshot (r18): one tiny row the
+    * drift monitor (ivfDriftStats) compares against after frozen-
+    * codebook appends — without it, recall degradation under
+    * distribution shift is invisible until an offline recall harness
+    * runs. It is computed from the LANDED tables, so it describes
+    * exactly what a reader sees. The whole corpus must hold one
+    * dimension. */
   def writeIvfIndex(e: DataFrame, cells: Int, dir: String,
-      iters: Int = 2): Unit = graft.sources.WriterLock.withLock(dir) {
+      iters: Int = 2): Unit = {
     GraftFunctions.register(e.sparkSession)
-    val (cb, postings) = ivfIndex(e, cells, iters)
-    val s = e.sparkSession
-    // drop any crashed retrain's stage + manifest BEFORE raising the
-    // marker (the TextIndex.build lesson): a build that crashes after
-    // beginRebuild must read as "crashed build — loud error", never let
-    // a STALE retrain manifest heal an outdated staged index over this
-    // build's intent
-    hfs(s, dir).delete(new org.apache.hadoop.fs.Path(retrainStagePath(dir)), true)
-    hfs(s, dir).delete(new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), false)
-    // rebuild fence (GenStamp): a crash between the overwrites would
-    // leave a new codebook against old postings — silent recall loss
-    graft.sources.GenStamp.beginRebuild(s, dir)
-    cb.tableWrite.mode("overwrite").parquet(s"$dir/codebook")
-    postings.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$dir/postings")
-    // build-time assignment-distortion snapshot (r18): one tiny row the
-    // drift monitor (ivfDriftStats) compares against after frozen-
-    // codebook appends — without it, recall degradation under
-    // distribution shift is invisible until an offline recall harness
-    // runs. Computed from the LANDED tables so it describes exactly
-    // what a reader sees.
-    distortionStats(assignmentDistortion(
-        readCellPartitioned(s, s"$dir/postings"),
-        s.read.parquet(s"$dir/codebook")))
-      .coalesce(1).tableWrite.mode("overwrite").parquet(s"$dir/buildstats")
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/codebook", s"$dir/postings", s"$dir/buildstats"))
+    Ivf.write(e.sparkSession, dir) {
+      requireCorpusDim(e, "IVF")
+      val (cb, postings) = ivfIndex(e, cells, iters)
+      // drop any crashed retrain's stage + manifest BEFORE raising the
+      // marker (the TextIndex.build lesson): a build that crashes after
+      // beginRebuild must read as "crashed build — loud error", never let
+      // a STALE retrain manifest heal an outdated staged index over this
+      // build's intent
+      discardRetrainStage(e.sparkSession, dir)
+      Seq(cb, postings)
+    }
   }
 
   /** Per-row distortion of stored postings against their OWN cells'
@@ -396,6 +544,14 @@ object VectorOps {
   private def distortionStats(d: DataFrame): DataFrame =
     d.agg(count(lit(1)).as("n"), avg(col("dist")).as("mean_dist"),
       expr("percentile(dist, CAST(0.95 AS DOUBLE))").as("p95_dist"))
+
+  /** The one-row distortion distribution (n, mean, p95) of an IVF
+    * index's (codebook, postings) — the build-time snapshot and the
+    * drift monitor's current reading. */
+  private def driftSnapshot(tables: Seq[DataFrame]): DataFrame = {
+    val Seq(cb, postings) = tables
+    distortionStats(assignmentDistortion(postings, cb))
+  }
 
   /** Drift monitor outcome: the build-time distortion distribution vs
     * the CURRENT postings' (base + frozen-codebook appends, tombstones
@@ -420,12 +576,9 @@ object VectorOps {
     val bsPath = new org.apache.hadoop.fs.Path(s"$dir/buildstats")
     if (!bsPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(bsPath))
       return None
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVF",
-      "VectorOps.writeIvfIndex",
-      Seq(s"$dir/codebook", s"$dir/postings", s"$dir/buildstats"))
-    val b = s.read.parquet(s"$dir/buildstats").head()
-    val (cb, postings) = readIvfIndex(s, dir)
-    val now = distortionStats(assignmentDistortion(postings, cb)).head()
+    Ivf.requireComplete(s, dir, Ivf.written)
+    val b = graft.sources.TableRead.read(s, s"$dir/buildstats").head()
+    val now = driftSnapshot(Ivf.read(s, dir)).head()
     val (nB, mB, pB) = (b.getLong(0), b.getDouble(1), b.getDouble(2))
     if (now.getLong(0) == 0L || now.isNullAt(1))
       Some(IvfDrift(nB, mB, pB, 0L, 0.0, 0.0, tol, retrainRecommended = false))
@@ -475,16 +628,10 @@ object VectorOps {
         "tombstoned) — a zero-row rewrite would leave an unreadable husk; " +
         "rebuild with writeIvfIndex over a source corpus instead")
     val (cb, reassigned) = ivfIndex(corpus, k, iters)
-    val stage = retrainStagePath(dir)
-    cb.tableWrite.mode("overwrite").parquet(s"$stage/codebook")
-    reassigned.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
     // the drift snapshot is computed from the STAGED tables (they are
     // exactly what the swap publishes), so the monitor's baseline
     // describes what readers will see
-    distortionStats(assignmentDistortion(
-        readCellPartitioned(s, s"$stage/postings"),
-        s.read.parquet(s"$stage/codebook")))
-      .coalesce(1).tableWrite.mode("overwrite").parquet(s"$stage/buildstats")
+    Ivf.writeTables(s, retrainStagePath(dir), Seq(cb, reassigned))
     writeRetrainManifest(s, dir)
     maybeFailRetrain(1)
     graft.sources.GenStamp.beginRebuild(s, dir)
@@ -520,6 +667,13 @@ object VectorOps {
     graft.sources.TableWrite.replaceFile(s,
       new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), Array('1'.toByte))
 
+  /** Drop a retrain's stage and manifest (nothing of it was published). */
+  private def discardRetrainStage(s: SparkSession, dir: String): Unit = {
+    hfs(s, dir).delete(new org.apache.hadoop.fs.Path(retrainStagePath(dir)), true)
+    hfs(s, dir).delete(new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), false)
+    ()
+  }
+
   /** Idempotent tail of a staged retrain: swap each staged table into
     * place (skip tables the stage no longer holds — already moved),
     * drop the stage, clear the folded tombstones, lift the fence, and
@@ -530,7 +684,7 @@ object VectorOps {
   private def finishIvfRetrain(s: SparkSession, dir: String): Unit = {
     val fsys = hfs(s, dir)
     val stage = retrainStagePath(dir)
-    Seq("codebook", "postings", "buildstats").foreach { t =>
+    Ivf.written.foreach { t =>
       val src = new org.apache.hadoop.fs.Path(s"$stage/$t")
       if (fsys.exists(src)) {
         fsys.delete(new org.apache.hadoop.fs.Path(s"$dir/$t"), true)
@@ -544,8 +698,7 @@ object VectorOps {
     // postdate the stage: every tombstone append on this root heals a
     // crashed retrain first, under the same WriterLock)
     graft.sources.Tombstones.clear(s, dir)
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/codebook", s"$dir/postings", s"$dir/buildstats"))
+    Ivf.completeRebuild(s, dir)
     fsys.delete(new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), false)
     ()
   }
@@ -563,11 +716,7 @@ object VectorOps {
       graft.sources.GenStamp.RebuildMarker))
     val manifest = fsys.exists(new org.apache.hadoop.fs.Path(retrainManifestPath(dir)))
     if (markerUp && manifest) finishIvfRetrain(s, dir)
-    else if (!markerUp) {
-      fsys.delete(new org.apache.hadoop.fs.Path(retrainStagePath(dir)), true)
-      fsys.delete(new org.apache.hadoop.fs.Path(retrainManifestPath(dir)), false)
-      ()
-    }
+    else if (!markerUp) discardRetrainStage(s, dir)
   }
 
   /** Consult the drift monitor and retrain when it recommends — the
@@ -597,10 +746,8 @@ object VectorOps {
     * codebook ranking would then hinge on implicit numeric-string
     * coercion — matching nothing if cell ids ever became non-numeric. */
   def readIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVF",
-      "VectorOps.writeIvfIndex", Seq(s"$dir/codebook", s"$dir/postings"))
-    (graft.sources.TableRead.read(s, s"$dir/codebook"),
-      graft.sources.Tombstones.applyTo(s, readCellPartitioned(s, s"$dir/postings"), dir, "vec_id"))
+    val Seq(cb, postings) = Ivf.read(s, dir)
+    (cb, postings)
   }
 
   /** Content fingerprint of the corpus behind a persisted demo store:
@@ -832,32 +979,33 @@ object VectorOps {
     * + one residual pass + `trainPqCodebooks` (all m subspaces in one
     * grouped training); the coarse codebook rides as a broadcast into
     * the residual computation, so nothing here shuffles more than the
-    * corpus once per Lloyd's iteration. */
+    * corpus once per Lloyd's iteration. The corpus must hold one
+    * dimension that `m` subspaces tile exactly. */
   def ivfPqIndex(e: DataFrame, cells: Int, m: Int, ks: Int, iters: Int = 2)
       : (DataFrame, DataFrame, DataFrame) = {
-    val dim = e.select(size(col("embedding"))).head().getInt(0)
-    require(dim % m == 0, s"PQ subspaces ($m) must divide dim ($dim)")
-    val d = dim / m
+    val d = subspaceDim(requireCorpusDim(e, "IVFADC"), m)
     val coarse = trainCodebook(e, cells, iters)
-    val assigned = rankCells(e, coarse)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        expr("ranked[0].cl").as("cell"))
+    val pqcb = trainPqCodebooks(residualSubvectors(e, coarse, m, d), ks, iters)
+    (coarse, pqcb, ivfPqEncode(e, coarse, pqcb, m, d))
+  }
+
+  /** IVFADC's subvectors, keyed by (vec_id, label, cell): the slices of
+    * each row's RESIDUAL against its top-1 coarse cell's centroid (the
+    * coarse codebook rides as a broadcast). */
+  private def residualSubvectors(e: DataFrame, coarse: DataFrame, m: Int, d: Int): DataFrame = {
+    val residuals = ivfEncode(e, coarse)
       .join(broadcast(coarse.select(col("cell"), col("centroid").as("cc"))), "cell")
       .withColumn("res", expr("zip_with(embedding, cc, (x, c) -> CAST(x AS DOUBLE) - c)"))
-    val subs = assigned.select(col("vec_id"), col("label"), col("cell"),
-        explode(expr(s"transform(sequence(0, ${m - 1}), jj -> " +
-          s"named_struct('j', jj, 'sub', slice(res, jj * $d + 1, $d)))")).as("js"))
-      .select(col("vec_id"), col("label"), col("cell"),
-        col("js.j").as("j"), col("js.sub").as("sub"))
-    val pqcb = trainPqCodebooks(subs, ks, iters)
-    val codes = rankSubCells(subs, pqcb)
-      .select(col("vec_id"), col("label"), col("cell"), col("j"),
-        expr("ranked[0].cl").as("code"))
-      .groupBy("vec_id", "label", "cell")
-      .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
-      .select(col("cell"), col("vec_id"), col("label"), col("codes"))
-    (coarse, pqcb, codes)
+    subvectors(residuals, Seq("vec_id", "label", "cell"), "res", m, d)
   }
+
+  /** The IVFADC encoder, shared by the build and the frozen-codebook
+    * append: (cell, vec_id, label, codes) of `e` — its coarse cell and
+    * the residual PQ codes against `pqcb`. */
+  private def ivfPqEncode(e: DataFrame, coarse: DataFrame, pqcb: DataFrame,
+      m: Int, d: Int): DataFrame =
+    pqCodes(residualSubvectors(e, coarse, m, d), pqcb)
+      .select(col("cell"), col("vec_id"), col("label"), col("codes"))
 
   /** Probe + ADC + rerank over a (persisted or fresh) IVFADC index.
     * dot(q, x) = dot(q, c) + dot(q, r) for x = c + r, so the approximate
@@ -870,32 +1018,14 @@ object VectorOps {
   def ivfPqSearch(coarse: DataFrame, pqcb: DataFrame, codes: DataFrame,
       full: DataFrame, queryId: Long = 0, nprobe: Int = 2, k: Int = 20,
       rerank: Int = 200): DataFrame = {
-    val q = full.where(col("vec_id") === queryId).select(col("embedding").as("qv"))
+    val q = queryVector(full, queryId)
     val qCells = rankCells(q.select(col("qv").as("embedding")), coarse)
       .select(explode(expr(s"slice(ranked, 1, $nprobe)")).as("pc"))
       .select(col("pc.cl").as("q_cell"), (-col("pc.negs")).as("qoff"))
-    // residual ADC table: one broadcast row of m arrays of ks doubles
-    val tabs = pqcb.crossJoin(broadcast(q))
-      .select(col("j"), col("cell"),
-        expr("graft_dot(slice(qv, j * size(centroid) + 1, size(centroid)), centroid)").as("t"))
-      .groupBy("j")
-      .agg(expr("transform(array_sort(collect_list(struct(cell, t))), x -> x.t)").as("tj"))
-      .agg(expr("transform(array_sort(collect_list(struct(j, tj))), x -> x.tj)").as("tabs"))
-    val adc = codes.where(col("vec_id") =!= queryId)
-      .join(broadcast(qCells), col("cell") === col("q_cell"))
-      .crossJoin(broadcast(tabs))
-      .withColumn("asim", col("qoff") + expr(
-        "aggregate(zip_with(codes, tabs, (cd, tb) -> element_at(tb, cd + 1)), " +
-          "CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
-      .orderBy(col("asim").desc, col("vec_id").asc)
-      .limit(rerank)
-    adc.select("vec_id", "label")
-      .join(full.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("sim", round(expr("graft_dot(embedding, qv)"), 6))
-      .select("vec_id", "label", "sim")
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(k)
+    adcRerank(pqcb,
+      codes.where(col("vec_id") =!= queryId)
+        .join(broadcast(qCells), col("cell") === col("q_cell")),
+      Some(col("qoff")), full, q, k, rerank)
   }
 
   /** Train + search in one call — the declared q_knn_ivfpq shape;
@@ -916,17 +1046,11 @@ object VectorOps {
     * float vector (those live with the source table for the bounded
     * rerank fetch only). */
   def writeIvfPqIndex(e: DataFrame, cells: Int, m: Int, ks: Int, dir: String,
-      iters: Int = 2): Unit = graft.sources.WriterLock.withLock(dir) {
-    val (coarse, pqcb, codes) = ivfPqIndex(e, cells, m, ks, iters)
-    val s = e.sparkSession
-    // rebuild fence: three tables must agree (see writeIvfIndex)
-    graft.sources.GenStamp.beginRebuild(s, dir)
-    coarse.tableWrite.mode("overwrite").parquet(s"$dir/coarse")
-    pqcb.tableWrite.mode("overwrite").parquet(s"$dir/pq_codebooks")
-    codes.tableWrite.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/coarse", s"$dir/pq_codebooks", s"$dir/codes"))
-  }
+      iters: Int = 2): Unit =
+    IvfPq.write(e.sparkSession, dir) {
+      val (coarse, pqcb, codes) = ivfPqIndex(e, cells, m, ks, iters)
+      Seq(coarse, pqcb, codes)
+    }
 
   /** Load a persisted IVFADC index: (coarse, pq codebooks, codes). The
     * codes' `cell` partition column is pinned to string on read (see
@@ -935,11 +1059,8 @@ object VectorOps {
     * guess int and leave the probe equi-join against the string-typed
     * coarse codebook to implicit coercion. */
   def readIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVFADC",
-      "VectorOps.writeIvfPqIndex",
-      Seq(s"$dir/coarse", s"$dir/pq_codebooks", s"$dir/codes"))
-    (s.read.parquet(s"$dir/coarse"), s.read.parquet(s"$dir/pq_codebooks"),
-      graft.sources.Tombstones.applyTo(s, readCellPartitioned(s, s"$dir/codes"), dir, "vec_id"))
+    val Seq(coarse, pqcb, codes) = IvfPq.read(s, dir)
+    (coarse, pqcb, codes)
   }
 
   /** Fail loudly when an append batch's vector dimension disagrees with
@@ -978,6 +1099,17 @@ object VectorOps {
     dims.head
   }
 
+  /** The (m, d) shape of stored PQ codebooks `cb` — subspace count and
+    * subvector length, read off the codebook so a stored index stays
+    * self-describing — after checking that `batch` has their dimension
+    * m * d. */
+  private def storedPqShape(batch: DataFrame, cb: DataFrame, family: String): (Int, Int) = {
+    val r = cb.agg(max(col("j")), max(size(col("centroid")))).head()
+    val (m, d) = (r.getInt(0) + 1, r.getInt(1))
+    requireBatchDim(batch, m * d, family)
+    (m, d)
+  }
+
   /** Incrementally append a new vector batch to a persisted IVF index —
     * the lifecycle a growing corpus actually runs: the coarse codebook is
     * FROZEN (read from the store, never retrained), the batch is
@@ -991,21 +1123,15 @@ object VectorOps {
     * batch appends duplicate postings for its ids (searches then return
     * duplicate candidates) — gate retries through Ledger.missing, the
     * discipline every index append in this library shares (see
-    * appendToMinhashIndex's scaladoc and BuildPipelineSpec). */
-  def appendToIvfIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
-    // finish a crashed staged retrain first (idempotent): an unattended
-    // ingest loop's next window must not wedge on a marker the heal
-    // could have cleared (the TextIndex.append convention)
-    healIvfRetrain(s, dir)
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVF",
-      "VectorOps.writeIvfIndex", Seq(s"$dir/codebook", s"$dir/postings"))
-    val cb = s.read.parquet(s"$dir/codebook")
-    requireBatchDim(batch, cb.select(size(col("centroid"))).head().getInt(0), "IVF")
-    rankCells(batch, cb)
-      .select(expr("ranked[0].cl").as("cell"), col("vec_id"), col("label"), col("embedding"))
-      .tableWrite.mode("append").partitionBy("cell").parquet(s"$dir/postings")
-  }
+    * appendToMinhashIndex's scaladoc and BuildPipelineSpec). A crashed
+    * staged retrain is finished first (idempotent): an unattended ingest
+    * loop's next window must not wedge on a marker the heal could have
+    * cleared (the TextIndex.append convention). */
+  def appendToIvfIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    Ivf.append(s, dir) { case Seq(cb) =>
+      requireBatchDim(batch, cb.select(size(col("centroid"))).head().getInt(0), "IVF")
+      ivfEncode(batch, cb)
+    }
 
   /** Incrementally append to a persisted PQ index: assign-only encode of
     * the batch against the FROZEN residual-free codebooks (subvector
@@ -1013,87 +1139,45 @@ object VectorOps {
     * stays self-describing), appended to the codes table. No retrain.
     * Caller owns vec_id uniqueness (Ledger discipline — see
     * appendToIvfIndex). */
-  def appendToPqIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "PQ",
-      "VectorOps.writePqIndex", Seq(s"$dir/codebooks", s"$dir/codes"))
-    val cb = s.read.parquet(s"$dir/codebooks")
-    val (m, d) = {
-      val r = cb.agg(max(col("j")), max(size(col("centroid")))).head()
-      (r.getInt(0) + 1, r.getInt(1))
+  def appendToPqIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    Pq.append(s, dir) { case Seq(cb) =>
+      val (m, d) = storedPqShape(batch, cb, "PQ")
+      pqEncode(batch, cb, m, d)
     }
-    requireBatchDim(batch, m * d, "PQ")
-    val subs = batch.select(col("vec_id"), col("label"),
-        explode(expr(s"transform(sequence(0, ${m - 1}), jj -> " +
-          s"named_struct('j', jj, 'sub', slice(embedding, jj * $d + 1, $d)))")).as("js"))
-      .select(col("vec_id"), col("label"), col("js.j").as("j"), col("js.sub").as("sub"))
-    rankSubCells(subs, cb)
-      .select(col("vec_id"), col("label"), col("j"), expr("ranked[0].cl").as("code"))
-      .groupBy("vec_id", "label")
-      .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
-      .tableWrite.mode("append").parquet(s"$dir/codes")
-  }
 
   /** Incrementally append to a persisted IVFADC index: frozen coarse
     * assignment, residual against the frozen coarse centroid, frozen
     * residual-PQ encode, cell-partition append of the codes. Caller owns
     * vec_id uniqueness (Ledger discipline — see appendToIvfIndex). */
-  def appendToIvfPqIndex(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = graft.sources.WriterLock.withLock(dir) {
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "IVFADC",
-      "VectorOps.writeIvfPqIndex",
-      Seq(s"$dir/coarse", s"$dir/pq_codebooks", s"$dir/codes"))
-    val coarse = s.read.parquet(s"$dir/coarse")
-    val pqcb = s.read.parquet(s"$dir/pq_codebooks")
-    val (m, d) = {
-      val r = pqcb.agg(max(col("j")), max(size(col("centroid")))).head()
-      (r.getInt(0) + 1, r.getInt(1))
+  def appendToIvfPqIndex(s: SparkSession, batch: DataFrame, dir: String): Unit =
+    IvfPq.append(s, dir) { case Seq(coarse, pqcb) =>
+      val (m, d) = storedPqShape(batch, pqcb, "IVFADC")
+      ivfPqEncode(batch, coarse, pqcb, m, d)
     }
-    requireBatchDim(batch, m * d, "IVFADC")
-    val assigned = rankCells(batch, coarse)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        expr("ranked[0].cl").as("cell"))
-      .join(broadcast(coarse.select(col("cell"), col("centroid").as("cc"))), "cell")
-      .withColumn("res", expr("zip_with(embedding, cc, (x, c) -> CAST(x AS DOUBLE) - c)"))
-    val subs = assigned.select(col("vec_id"), col("label"), col("cell"),
-        explode(expr(s"transform(sequence(0, ${m - 1}), jj -> " +
-          s"named_struct('j', jj, 'sub', slice(res, jj * $d + 1, $d)))")).as("js"))
-      .select(col("vec_id"), col("label"), col("cell"),
-        col("js.j").as("j"), col("js.sub").as("sub"))
-    rankSubCells(subs, pqcb)
-      .select(col("vec_id"), col("label"), col("cell"), col("j"),
-        expr("ranked[0].cl").as("code"))
-      .groupBy("vec_id", "label", "cell")
-      .agg(expr("transform(array_sort(collect_list(struct(j, code))), x -> x.code)").as("codes"))
-      .select(col("cell"), col("vec_id"), col("label"), col("codes"))
-      .tableWrite.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-  }
 
   /** Delete vectors from a persisted IVF index: an O(ids) tombstone
     * append — no posting file is touched. `readIvfIndex` applies the
-    * tombstones (broadcast anti-join), so every search over the store
-    * excludes the ids immediately; `compactIvfIndex` later folds them
-    * into the files. Re-adding a deleted id requires compaction first
-    * (see Tombstones). Heals a crashed staged retrain first, under the
-    * same (reentrant) WriterLock: a tombstone appended OVER a complete
-    * stage would be cleared unfolded by the heal's swap — a silent
-    * resurrection; healing first means every tombstone predates any
-    * stage that will fold it. */
+    * tombstones (anti-join, broadcast behind Tombstones.joinSide's
+    * gate), so every search over the store excludes the ids
+    * immediately; `compactIvfIndex` later folds them into the files.
+    * Re-adding a deleted id requires compaction first (see Tombstones).
+    * Heals a crashed staged retrain first, under the same (reentrant)
+    * WriterLock: a tombstone appended OVER a complete stage would be
+    * cleared unfolded by the heal's swap — a silent resurrection;
+    * healing first means every tombstone predates any stage that will
+    * fold it. */
   def deleteFromIvfIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-      healIvfRetrain(s, dir)
-      graft.sources.Tombstones.append(s, ids, dir)
-    }
+    Ivf.delete(s, ids, dir)
 
   /** Delete vectors from a persisted PQ index (tombstone append; see
     * `deleteFromIvfIndex`). */
   def deleteFromPqIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    graft.sources.Tombstones.append(s, ids, dir)
+    Pq.delete(s, ids, dir)
 
   /** Delete vectors from a persisted IVFADC index (tombstone append; see
     * `deleteFromIvfIndex`). */
   def deleteFromIvfPqIndex(s: SparkSession, ids: DataFrame, dir: String): Unit =
-    graft.sources.Tombstones.append(s, ids, dir)
+    IvfPq.delete(s, ids, dir)
 
   /** Fold tombstones into a cell-partitioned index table, rewriting ONLY
     * the cell partitions that actually contain deleted rows: survivors of
@@ -1102,70 +1186,54 @@ object VectorOps {
     * untouched cell's files stay byte-identical (asserted in spec). A
     * cell whose rows all died simply disappears. The affected-cell list
     * crosses the driver (bounded by the cell count — metadata, not row
-    * data). */
-  private def compactCellPartitioned(s: SparkSession, path: String, dir: String): Unit = {
+    * data). Both joins take the gated tombstone side
+    * ([[graft.sources.Tombstones.joinSide]]). Does NOT clear the
+    * tombstones. */
+  private def compactCellPartitioned(s: SparkSession, path: String, dir: String): Unit =
     graft.sources.Tombstones.read(s, dir).foreach { t =>
+      val side = graft.sources.Tombstones.joinSide(s, dir, t)
       val table = readCellPartitioned(s, path)
-      val affected = table.join(broadcast(t), table("vec_id") === t("id"), "left_semi")
+      val affected = table.join(side, table("vec_id") === side("id"), "left_semi")
         .select("cell").distinct().collect().map(_.getString(0)).toSeq
-      val hfs = graft.sources.TableWrite.fs(s, new org.apache.hadoop.fs.Path(path))
       if (affected.nonEmpty) {
         val tmp = s"${path}__compact_tmp"
         table.where(col("cell").isin(affected: _*))
-          .join(broadcast(t), table("vec_id") === t("id"), "left_anti")
+          .join(side, table("vec_id") === side("id"), "left_anti")
           .tableWrite.mode("overwrite").partitionBy("cell").parquet(tmp)
-        graft.sources.FsMoves.swapPartitions(hfs, path, tmp, affected.map(c => s"cell=$c"))
+        graft.sources.FsMoves.swapPartitions(
+          graft.sources.TableWrite.fs(s, new org.apache.hadoop.fs.Path(path)),
+          path, tmp, affected.map(c => s"cell=$c"))
       }
-      graft.sources.Tombstones.clear(s, dir)
     }
-  }
 
   /** Compact a persisted IVF index after deletions (affected cell
     * partitions only). Heals a crashed staged retrain first — the
     * mutator-head convention on this root. */
-  def compactIvfIndex(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-      healIvfRetrain(s, dir)
-      compactCellPartitioned(s, s"$dir/postings", dir)
-    }
+  def compactIvfIndex(s: SparkSession, dir: String): Unit = Ivf.compact(s, dir)
 
   /** Compact a persisted PQ index after deletions (flat codes table —
     * full rewrite). */
-  def compactPqIndex(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-    graft.sources.Tombstones.foldIntoFlat(s, s"$dir/codes", dir, "vec_id")
-    graft.sources.Tombstones.clear(s, dir)
-  }
+  def compactPqIndex(s: SparkSession, dir: String): Unit = Pq.compact(s, dir)
 
   /** Compact a persisted IVFADC index after deletions (affected cell
     * partitions of the codes table only). */
-  def compactIvfPqIndex(s: SparkSession, dir: String): Unit =
-    graft.sources.WriterLock.withLock(dir) {
-      compactCellPartitioned(s, s"$dir/codes", dir)
-    }
+  def compactIvfPqIndex(s: SparkSession, dir: String): Unit = IvfPq.compact(s, dir)
 
   /** Persist a PQ index as two parquet tables under `dir` — the
     * train-once/search-many deployment shape (codes are m ints per
     * vector: the 100 TB scan reads these, never the float embeddings,
     * except for the bounded rerank fetch). */
   def writePqIndex(e: DataFrame, m: Int, ks: Int, dir: String,
-      iters: Int = 2): Unit = graft.sources.WriterLock.withLock(dir) {
-    val (cb, codes) = pqIndex(e, m, ks, iters)
-    val s = e.sparkSession
-    // rebuild fence: codes encode against THESE codebooks (see writeIvfIndex)
-    graft.sources.GenStamp.beginRebuild(s, dir)
-    cb.tableWrite.mode("overwrite").parquet(s"$dir/codebooks")
-    codes.tableWrite.mode("overwrite").parquet(s"$dir/codes")
-    graft.sources.GenStamp.completeRebuild(s, dir,
-      Seq(s"$dir/codebooks", s"$dir/codes"))
-  }
+      iters: Int = 2): Unit =
+    Pq.write(e.sparkSession, dir) {
+      val (cb, codes) = pqIndex(e, m, ks, iters)
+      Seq(cb, codes)
+    }
 
   /** Load a persisted PQ index: (codebooks, codes). */
   def readPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.sources.GenStamp.requireRebuildComplete(s, dir, "PQ",
-      "VectorOps.writePqIndex", Seq(s"$dir/codebooks", s"$dir/codes"))
-    (s.read.parquet(s"$dir/codebooks"),
-      graft.sources.Tombstones.applyTo(s, s.read.parquet(s"$dir/codes"), dir, "vec_id"))
+    val Seq(cb, codes) = Pq.read(s, dir)
+    (cb, codes)
   }
 
   /** Candidate stage of the ANN similarity self-join (`simJoinTopkAnn`),

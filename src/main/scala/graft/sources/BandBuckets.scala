@@ -153,7 +153,7 @@ object BandBuckets {
     * BEFORE that table is itself folded) and passes them as
     * `deletedBandRows`. Affected partitions are a bounded collect (at
     * most [[NumParts]] values); untouched directories' files are never
-    * opened. `tombstones` is the gated join side ([[Tombstones.foldSide]]).
+    * opened. `tombstones` is the gated join side ([[Tombstones.joinSide]]).
     * Does NOT clear the tombstones — the index lifecycle
     * (BandedIndex.compact) clears once every table is folded. */
   private[sources] def fold(s: SparkSession, tablePath: String, idCol: String,

@@ -141,12 +141,12 @@ final class BandedIndex(val name: String, val writer: String,
     * primary and refine tables fold, and the tombstones clear last.
     * Partitions the deletions did not touch are never opened. The
     * tombstone side of every join is broadcast only up to
-    * `maxBroadcastTombstones` ids ([[Tombstones.foldSide]]). */
+    * `maxBroadcastTombstones` ids ([[Tombstones.joinSide]]). */
   def compact(s: SparkSession, dir: String,
       maxBroadcastTombstones: Long = Tombstones.MaxBroadcastTombstones): Unit =
     WriterLock.withLock(dir) {
     Tombstones.read(s, dir).foreach { t =>
-      val side = Tombstones.foldSide(t, maxBroadcastTombstones)
+      val side = Tombstones.joinSide(s, dir, t, maxBroadcastTombstones)
       // one bounded collect serves every id-bucketed table
       lazy val idBuckets = IdBuckets.bucketsOf(t)
       if (BandBuckets.exists(s, derived(dir))) {

@@ -100,18 +100,19 @@ object IdBuckets {
     * affected bucket partitions; untouched partitions' files are not
     * opened, let alone rewritten (IndexMaintenanceSpec pins them
     * byte-identical). The tombstone side is broadcast only up to
-    * `maxBroadcastTombstones` ids ([[Tombstones.foldSide]]). Does NOT
+    * `maxBroadcastTombstones` ids ([[Tombstones.joinSide]]). Does NOT
     * clear the tombstones — the caller clears once every table of the
     * index is folded. */
   def foldIntoBucketed(s: SparkSession, tablePath: String, dir: String,
       idCol: String,
       maxBroadcastTombstones: Long = Tombstones.MaxBroadcastTombstones): Unit =
     Tombstones.read(s, dir).foreach { t =>
-      fold(s, tablePath, idCol, bucketsOf(t), Tombstones.foldSide(t, maxBroadcastTombstones))
+      fold(s, tablePath, idCol, bucketsOf(t),
+        Tombstones.joinSide(s, dir, t, maxBroadcastTombstones))
     }
 
   /** [[foldIntoBucketed]] over the tombstoned ids' `buckets` and their
-    * gated join side ([[Tombstones.foldSide]]). */
+    * gated join side ([[Tombstones.joinSide]]). */
   private[sources] def fold(s: SparkSession, tablePath: String, idCol: String,
       buckets: Seq[Int], tombstones: DataFrame): Unit =
     Partitioned.fold(s, tablePath, Col, bucketOf(col(idCol)), idCol, idCol,
@@ -152,7 +153,7 @@ private[sources] object Partitioned {
 
   /** Rewrite the `affected` partitions of `tablePath` minus the rows whose
     * `idCol` is in `tombstones` (the gated `id` join side,
-    * [[Tombstones.foldSide]]). Only the affected leaf directories are read
+    * [[Tombstones.joinSide]]). Only the affected leaf directories are read
     * ([[TableRead.bucketRead]]; the partition column is recomputed from
     * the row); the survivors are written to a temp root and swapped in
     * partition by partition ([[FsMoves.swapPartitions]]); a partition

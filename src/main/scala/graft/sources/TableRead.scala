@@ -97,6 +97,19 @@ object TableRead {
     StructType(data.toNullable.fields ++ parts)
   }
 
+  /** The row count the parquet footers of the data files directly under
+    * `table` declare, summed on the driver: one footer read per file, no
+    * job. */
+  def footerRows(s: SparkSession, table: String): Long = {
+    val root = new Path(table)
+    val conf = s.sparkContext.hadoopConfiguration
+    fsOf(s, root).listStatus(root).filter(st => st.isFile && visible(st)).map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   /** Full-table read under the footer schema: Spark still lists the
     * files (a full read needs all of them) but infers nothing. */
   def read(s: SparkSession, table: String): DataFrame =

@@ -54,10 +54,11 @@ object Tombstones {
     else None
 
   /** The delete-aware view of an index table: anti-join `idCol` against
-    * the tombstones, a no-op (the identical plan) when none exist. */
+    * the tombstones (the side [[joinSide]] gates), a no-op (the identical
+    * plan) when none exist. */
   def applyTo(s: SparkSession, df: DataFrame, dir: String, idCol: String): DataFrame =
     read(s, dir) match {
-      case Some(t) => df.join(broadcast(t), df(idCol) === t("id"), "left_anti")
+      case Some(t) => df.join(joinSide(s, dir, t), df(idCol) === t("id"), "left_anti")
       case None    => df
     }
 
@@ -69,21 +70,24 @@ object Tombstones {
     ()
   }
 
-  /** Tombstone sets small enough to ride as a broadcast in a fold's
-    * joins — ~16 MB of long ids, far past any takedown batch. */
+  /** Tombstone sets small enough to ride as a broadcast in a join —
+    * ~16 MB of long ids, far past any takedown batch. */
   val MaxBroadcastTombstones: Long = 1L << 20
 
-  /** The one broadcast gate of the folds: the tombstone side of every
-    * fold join (the anti-join that rewrites a table, the semi-join that
-    * finds the deleted band rows) is broadcast up to
+  /** The one broadcast gate of every tombstone join — the read-side
+    * anti-join ([[applyTo]]) and each fold's anti- and semi-joins: `t`,
+    * `dir`'s tombstone set ([[read]]), is broadcast up to
     * `maxBroadcastTombstones` ids and a plain shuffle side past it, so a
     * mass deletion degrades to a shuffle join instead of collecting the
-    * whole set on the driver — a fold that big rewrites most of the
-    * table anyway. One count job decides. Bounded collects that pick the
-    * partitions to rewrite read the ungated frame. */
-  def foldSide(t: DataFrame,
+    * whole set on the driver and shipping it to every task. The count is
+    * the rows the tombstone files' footers declare, summed on the driver
+    * ([[TableRead.footerRows]]): no job, and an upper bound on the
+    * distinct ids (appends may repeat one), so the gate can only err
+    * toward the shuffle join. Bounded collects that pick the partitions
+    * to rewrite read the ungated frame. */
+  def joinSide(s: SparkSession, dir: String, t: DataFrame,
       maxBroadcastTombstones: Long = MaxBroadcastTombstones): DataFrame =
-    if (t.count() <= maxBroadcastTombstones) broadcast(t) else t
+    if (TableRead.footerRows(s, path(dir)) <= maxBroadcastTombstones) broadcast(t) else t
 
   /** Fold `dir`'s tombstones into one flat (non-partitioned) parquet
     * table: rewrite minus the deleted ids, then swap the rewrite in. A
@@ -93,9 +97,9 @@ object Tombstones {
   def foldIntoFlat(s: SparkSession, tablePath: String, dir: String, idCol: String,
       maxBroadcastTombstones: Long = MaxBroadcastTombstones): Unit =
     read(s, dir).foreach(t =>
-      foldFlat(s, tablePath, idCol, foldSide(t, maxBroadcastTombstones)))
+      foldFlat(s, tablePath, idCol, joinSide(s, dir, t, maxBroadcastTombstones)))
 
-  /** [[foldIntoFlat]] over a gated tombstone side ([[foldSide]]). */
+  /** [[foldIntoFlat]] over a gated tombstone side ([[joinSide]]). */
   private[sources] def foldFlat(s: SparkSession, tablePath: String, idCol: String,
       tombstones: DataFrame): Unit = {
     val tmp = s"${tablePath}__compact_tmp"

@@ -244,6 +244,34 @@ class EdgeCaseSpec extends AnyFunSuite {
       VectorOps.appendToEmbedLshIndex(spark, mixed, s"$dir/c")
     }
     assert(exApp.getMessage.contains("dimension"))
+
+    // the IVF, PQ and IVFADC builds validate the whole corpus the same
+    // way, before their rebuild marker goes up: a refused build over a
+    // serving index leaves it serving
+    graft.functions.GraftFunctions.register(spark)
+    val good = Seq(
+      (1L, "x", Array.fill(16)(0.25f)),
+      (2L, "y", Array.tabulate(16)(i => if (i < 8) 0.35f else -0.35f)),
+      (3L, "x", Array.tabulate(16)(i => if (i % 2 == 0) 0.35f else -0.35f)))
+      .toDF("vec_id", "label", "embedding")
+    val builds = Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit, String => Long)](
+      ("IVF", (c, d) => VectorOps.writeIvfIndex(c, cells = 2, dir = d),
+        d => VectorOps.readIvfIndex(spark, d)._2.count()),
+      ("PQ", (c, d) => VectorOps.writePqIndex(c, m = 4, ks = 2, dir = d),
+        d => VectorOps.readPqIndex(spark, d)._2.count()),
+      ("IVFADC", (c, d) => VectorOps.writeIvfPqIndex(c, cells = 2, m = 4, ks = 2, dir = d),
+        d => VectorOps.readIvfPqIndex(spark, d)._3.count()))
+    for ((family, build, stored) <- builds) {
+      val at = s"$dir/$family"
+      build(good, at)
+      val e1 = intercept[IllegalArgumentException](build(empty, at))
+      assert(e1.getMessage.contains(s"$family build") && e1.getMessage.contains("empty"),
+        e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](build(mixed, at))
+      assert(e2.getMessage.contains(s"$family build") && e2.getMessage.contains("mixed"),
+        e2.getMessage)
+      assert(stored(at) === 3L, s"$family: the refused builds left the index unreadable")
+    }
   }
 
   test("ivfSearchBatch edges: empty query table, nprobe past |cells|, k past corpus") {

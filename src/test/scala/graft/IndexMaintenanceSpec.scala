@@ -854,6 +854,104 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(jobs.isEmpty, s"metadata jobs launched by the IVF search:\n${jobs.mkString("\n")}")
   }
 
+  test("PQ and IVFADC reads, appends and the drift monitor: footer schema == inferred schema; no listing or schema-inference job") {
+    import graft.operators.VectorOps
+    import graft.sources.TableRead
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val e = clusteredCorpus()
+    val base = java.nio.file.Files.createTempDirectory("ann_nojobs").toString
+    val (ivf, pq, adc) = (s"$base/ivf", s"$base/pq", s"$base/adc")
+    VectorOps.writeIvfIndex(e, cells = 8, dir = ivf)
+    VectorOps.writePqIndex(e, m = 4, ks = 8, dir = pq)
+    VectorOps.writeIvfPqIndex(e, cells = 8, m = 4, ks = 8, dir = adc)
+    val gone = Set(8L, 16L)
+    VectorOps.deleteFromPqIndex(spark, gone.toSeq.toDF("vec_id"), pq)
+    VectorOps.deleteFromIvfPqIndex(spark, gone.toSeq.toDF("vec_id"), adc)
+    for ((dir, ts) <- Seq(ivf -> Seq("codebook", "postings", "buildstats"),
+        pq -> Seq("codebooks", "codes", "tombstones"),
+        adc -> Seq("coarse", "pq_codebooks", "codes", "tombstones")); t <- ts) {
+      val p = s"$dir/$t"
+      assert(TableRead.schemaOf(spark, p) === spark.read.parquet(p).schema, p)
+    }
+    val sc = spark.sparkContext
+    val (pqHits, pqJobs) = ReadJobs.during(sc) {
+      val (cb, codes) = VectorOps.readPqIndex(spark, pq)
+      VectorOps.pqSearch(cb, codes, e, k = 10, rerank = 100).collect()
+    }
+    assert(pqHits.length === 10 && !pqHits.map(_.getLong(0)).exists(gone))
+    assert(pqJobs.isEmpty, s"metadata jobs launched by the PQ search:\n${pqJobs.mkString("\n")}")
+    val (adcHits, adcJobs) = ReadJobs.during(sc) {
+      val (coarse, pqcb, codes) = VectorOps.readIvfPqIndex(spark, adc)
+      VectorOps.ivfPqSearch(coarse, pqcb, codes, e, nprobe = 2, k = 10, rerank = 100).collect()
+    }
+    assert(adcHits.length === 10 && !adcHits.map(_.getLong(0)).exists(gone))
+    assert(adcJobs.isEmpty,
+      s"metadata jobs launched by the IVFADC search:\n${adcJobs.mkString("\n")}")
+    // the appends and the drift monitor read the stored tables job-free
+    // too; their own queries and writes are SQL executions, not counted
+    val batch = e.where(col("vec_id") < 16).withColumn("vec_id", col("vec_id") + 10000L)
+    for ((name, body) <- Seq[(String, () => Any)](
+        "IVF append" -> (() => VectorOps.appendToIvfIndex(spark, batch, ivf)),
+        "PQ append" -> (() => VectorOps.appendToPqIndex(spark, batch, pq)),
+        "IVFADC append" -> (() => VectorOps.appendToIvfPqIndex(spark, batch, adc)),
+        "ivfDriftStats" -> (() => VectorOps.ivfDriftStats(spark, ivf)))) {
+      val (_, jobs) = ReadJobs.during(sc, outsideQueries = true)(body())
+      assert(jobs.isEmpty, s"metadata jobs launched by the $name:\n${jobs.mkString("\n")}")
+    }
+    assert(VectorOps.readPqIndex(spark, pq)._2.count() === 320L - 2 + 16)
+    assert(VectorOps.readIvfPqIndex(spark, adc)._3.count() === 320L - 2 + 16)
+    assert(VectorOps.readIvfIndex(spark, ivf)._2.count() === 320L + 16)
+  }
+
+  test("IVF tombstone gate: past MaxBroadcastTombstones the read and the compaction join without a broadcast") {
+    import graft.operators.VectorOps
+    import graft.sources.Tombstones
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    graft.functions.GraftFunctions.register(spark)
+    val e = clusteredCorpus()
+    val dir = java.nio.file.Files.createTempDirectory("ivf_mass_tomb").toString
+    VectorOps.writeIvfIndex(e, cells = 8, dir = dir)
+    // one past the gate: the even ids from 2 up, which covers every even
+    // corpus member but 0 and runs far past the corpus
+    val n = Tombstones.MaxBroadcastTombstones + 1
+    VectorOps.deleteFromIvfIndex(spark,
+      spark.range(1, n + 1).select((col("id") * 2).as("vec_id")), dir)
+    assert(Tombstones.read(spark, dir).get.count() === n)
+    val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = autoKeys.map(k => k -> spark.conf.getOption(k))
+    autoKeys.foreach(spark.conf.set(_, "-1"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      val (cb, postings) = VectorOps.readIvfIndex(spark, dir)
+      val readPlan = postings.queryExecution.executedPlan.toString
+      assert(!readPlan.contains("BroadcastHashJoin"),
+        s"the tombstone anti-join broadcast past its gate:\n$readPlan")
+      val hits = VectorOps.ivfSearch(cb, postings, queryId = 1, nprobe = 8, k = 10)
+        .collect().map(_.getLong(0))
+      assert(hits.length === 10)
+      assert(hits.forall(_ % 2 == 1), s"a tombstoned id was returned: ${hits.mkString(",")}")
+      spark.listenerManager.register(listener)
+      try {
+        VectorOps.compactIvfIndex(spark, dir)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(!plans.isEmpty, "the listener saw no compaction query")
+    assert(!scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala
+      .exists(_.contains("BroadcastHashJoin")), "the cell compaction broadcast past its gate")
+    assert(!Tombstones.exists(spark, dir))
+    val left = VectorOps.readIvfIndex(spark, dir)._2.select("vec_id").collect().map(_.getLong(0))
+    assert(left.toSet === (0L until 320L).filter(i => i == 0 || i % 2 == 1).toSet)
+  }
+
   test("prunedById and prunedRead == the partition-filtered full reads they replace") {
     import graft.sources.{BandBuckets, IdBuckets, TextIndex}
     import spark.implicits._
